@@ -14,6 +14,8 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
+  private val log = org.apache.logging.log4j.LogManager.getLogger(getClass)
+
   /** Deterministic 64-bit string hash (FNV-1a) as a Catalyst-free constant
     * across JVMs — used where we must agree with ourselves, not with any
     * external system. */
@@ -615,22 +617,28 @@ object Dedup {
     * is_representative): exact duplicates map to their representative's
     * cluster with is_representative = false, so the removal decision for
     * EVERY doc is auditable (lineage of WHY a doc was dropped); filter on
-    * is_representative for the deduplicated corpus. */
+    * is_representative for the deduplicated corpus.
+    *
+    * EVALUATION COUNT: `docs` is evaluated twice — once for the text hash
+    * (the per-doc (id, rep) map is checkpointed) and once for MinHash
+    * (joined to the representative ids). The returned frame refers only to
+    * checkpoints, so reading it never re-runs the upstream text plan. */
   def dedupCorpus(docs: DataFrame, threshold: Double = 0.8,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     // per-doc exact-representative mapping (same 16-byte key discipline as
     // [[exact]]: only (hash, length) crosses the shuffle, never the text)
     val keyed = docs.select(col(idCol).as("id"),
       xxhash64(col(textCol)).as("h"), length(col(textCol)).as("l"))
-    val docToRep = keyed
+    val docToRep = CheckpointScratch.ckpt(keyed
       .withColumn("rep", min(col("id"))
         .over(org.apache.spark.sql.expressions.Window.partitionBy(col("h"), col("l"))))
-      .select(col("id"), col("rep"))
-    val exactReps = docToRep.filter(col("id") === col("rep"))
+      .select(col("id"), col("rep")))
+    val repIds = docToRep.filter(col("id") === col("rep"))
       .select(col("id").as(idCol))
-      .join(docs, Seq(idCol))
-    val pairs = minhashLsh(exactReps, threshold, idCol = idCol, textCol = textCol)
-    val repClusters = dedupClusters(exactReps, pairs, idCol)
+    val pairs = minhashLsh(repIds.join(docs, Seq(idCol)), threshold,
+      idCol = idCol, textCol = textCol)
+    // dedupClusters reads only the distinct ids of its first argument
+    val repClusters = dedupClusters(repIds, pairs, idCol)
       .select(col(idCol).as("rep"), col("cluster_id"))
     docToRep.join(repClusters, Seq("rep"))
       .select(col("id").as(idCol), col("cluster_id"),
@@ -692,7 +700,7 @@ object Dedup {
     val maxBlock = if (statsRow.isNullAt(0)) 0L else statsRow.getLong(0)
     val sumSqPairs = if (statsRow.isNullAt(1)) 0L else statsRow.getLong(1)
     val naive = maxBlock <= maxNaiveBlock && sumSqPairs <= maxNaivePairs
-    System.err.println(s"[jaccardAdaptivePairs] maxBlock=$maxBlock " +
+    log.info(s"jaccardAdaptivePairs: maxBlock=$maxBlock " +
       s"sumSqPairs=$sumSqPairs -> ${if (naive) "naive-blocked" else "prefix-filter"}")
     if (naive)
       jaccardBlockedPairs(docs, blockCol, threshold, idCol, textCol)
@@ -739,7 +747,7 @@ object Dedup {
       "spark.sql.optimizer.runtime.bloomFilter.maxNumBits").map(_.toLong)
       .getOrElse(67108864L)
     if (nBits > maxBits)
-      System.err.println(s"[incrementalNew] requested $nBits bloom bits > " +
+      log.warn(s"incrementalNew: requested $nBits bloom bits > " +
         s"conf cap $maxBits — filter will saturate (fpp→1) and prune " +
         "nothing; shard the seen set by content-hash range instead")
     // BloomFilterAggregate ALSO silently clamps estimatedNumItems to
@@ -749,7 +757,7 @@ object Dedup {
       "spark.sql.optimizer.runtime.bloomFilter.maxNumItems").map(_.toLong)
       .getOrElse(4000000L)
     if (n > maxItems)
-      System.err.println(s"[incrementalNew] seen count $n > bloom item cap " +
+      log.warn(s"incrementalNew: seen count $n > bloom item cap " +
         s"$maxItems — estimatedNumItems is silently clamped and fpp " +
         "degrades; shard the seen set by content-hash range instead")
     val bloomRow = seen

@@ -6,6 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Committed, resumable training-shard export (VERDICT r6 #2): the last
   * sink in the loader tier gets the same manifest discipline
@@ -113,6 +114,13 @@ object ShardStore {
     * tmp dir, retried next run); every later call reads the parquet back,
     * so the global sort + zipWithIndex never re-run on resume.
     *
+    * EVALUATION COUNT: the first commit evaluates `docs` ONCE — only its
+    * id column is checkpointed (8 B per doc), and the fingerprint, the
+    * range sampler and the range shuffle all read that checkpoint. A
+    * resume in a fresh JVM evaluates `docs` once more for the fingerprint
+    * check; within one JVM a verified store evaluates nothing. The read-
+    * back uses the assignment's known schema, so it runs no job.
+    *
     * `params.tsv` INSIDE the assignment dir pins (salt, maxPerShard,
     * idCol, input row count, input id-hash): a resume with different docs
     * or parameters FAILS FAST instead of silently reusing the stale
@@ -126,22 +134,19 @@ object ShardStore {
     if (!Files.isDirectory(aDir)) {
       val tmp = Paths.get(root, "assignment.tmp")
       deleteRecursively(tmp) // stale tmp from a crashed first attempt
-      val (n, idHash) = inputFingerprint(docs, idCol)
-      Splits.trainingShards(docs, maxPerShard, salt, idCol)
+      val ids = CheckpointScratch.ckpt(docs.select(col(idCol)))
+      val (n, idHash) = inputFingerprint(ids, idCol)
+      Splits.trainingShards(ids, maxPerShard, salt, idCol)
         .write.mode("overwrite").parquet(tmp.toString)
+      CheckpointScratch.drop(ids)
       Files.write(tmp.resolve("_params.tsv"),
         s"salt\t$salt\nmaxPerShard\t$maxPerShard\nidCol\t$idCol\nn\t$n\nidHash\t$idHash\n"
           .getBytes(StandardCharsets.UTF_8))
       Files.move(tmp, aDir, StandardCopyOption.ATOMIC_MOVE)
       verifiedRoots.add(vKey)
     } else if (!verifiedRoots.contains(vKey)) {
-      val pf = aDir.resolve("_params.tsv")
-      if (Files.isRegularFile(pf)) { // pre-fingerprint stores stay readable
-        val kv = Files.readAllLines(pf, StandardCharsets.UTF_8).asScala
-          .flatMap(_.split('\t') match {
-            case Array(k, v) => Some(k -> v)
-            case _ => None
-          }).toMap
+      val kv = storedParams(aDir)
+      if (kv.nonEmpty) { // pre-fingerprint stores stay readable
         val (n, idHash) = inputFingerprint(docs, idCol)
         val want = Map("salt" -> salt, "maxPerShard" -> maxPerShard.toString,
           "idCol" -> idCol, "n" -> n.toString, "idHash" -> idHash.toString)
@@ -155,7 +160,20 @@ object ShardStore {
       }
       verifiedRoots.add(vKey) // only AFTER a pass — a failed verify must re-run
     }
-    spark.read.parquet(aDir.toString)
+    // every column is BIGINT: epochOrder casts the id to long
+    val schema = StructType(Seq(idCol, "epoch_pos", "shard_id").map(StructField(_, LongType)))
+    spark.read.schema(schema).parquet(aDir.toString)
+  }
+
+  /** The `_params.tsv` pairs of a committed assignment (empty when absent). */
+  private def storedParams(aDir: Path): Map[String, String] = {
+    val pf = aDir.resolve("_params.tsv")
+    if (!Files.isRegularFile(pf)) Map.empty
+    else Files.readAllLines(pf, StandardCharsets.UTF_8).asScala
+      .flatMap(_.split('\t') match {
+        case Array(k, v) => Some(k -> v)
+        case _ => None
+      }).toMap
   }
 
   /** One resumable export step: take up to `maxShards` pending shards
@@ -165,34 +183,41 @@ object ShardStore {
     * previous one. Commits run in shard order, so the pending set is
     * always a contiguous suffix and one `between` filter selects a unit.
     *
-    * COST NOTE (VERDICT r7): each commit unit joins the FULL `docs` frame
-    * against its assignment slice — `exportAll` with a small
-    * `maxShardsPerCommit` therefore re-scans the corpus once per unit.
-    * Units exist for RESUME granularity, not throughput; the default
-    * (one unit = everything pending) scans once. For a deliberately
-    * small unit size over an expensive upstream plan, localCheckpoint
-    * `docs` first so each unit reads materialized partitions. */
+    * COST NOTE: a fresh export evaluates `docs` twice — once for the id
+    * checkpoint inside [[ensureAssignment]], once for the unit write. The
+    * shard table is arithmetic (no job), so every further unit costs one
+    * more evaluation of `docs` and nothing else: `exportAll` with a small
+    * `maxShardsPerCommit` re-scans the corpus once per unit. Units exist
+    * for RESUME granularity, not throughput; the default (one unit =
+    * everything pending) scans once. For a deliberately small unit size
+    * over an expensive upstream plan, localCheckpoint `docs` first so each
+    * unit reads materialized partitions. */
   def export(docs: DataFrame, root: String, maxPerShard: Long,
       salt: String = "epoch0", idCol: String = "doc_id",
-      maxShards: Int = Int.MaxValue): Manifest = {
+      maxShards: Int = Int.MaxValue): Manifest =
+    exportStep(docs, root, maxPerShard, salt, idCol, maxShards)._1
+
+  /** [[export]] plus whether the returned manifest holds every shard. */
+  private def exportStep(docs: DataFrame, root: String, maxPerShard: Long,
+      salt: String, idCol: String, maxShards: Int): (Manifest, Boolean) = {
     require(maxShards >= 1, s"maxShards must be >= 1, got $maxShards")
     val spark = docs.sparkSession
     Files.createDirectories(Paths.get(root))
     val assignment = ensureAssignment(docs, root, maxPerShard, salt, idCol)
+    // a store written before _params.tsv existed pays one count job
+    val n = storedParams(Paths.get(root, "assignment")).get("n").map(_.toLong)
+      .getOrElse(assignment.count())
     val prev = lastManifest(root).getOrElse(Manifest(0L, Vector.empty))
     val done = prev.shards.map(_.shardId).toSet
 
-    // shard stats straight from the assignment — no data-file rescan;
-    // driver-side but manifest-scale (one row per shard)
-    val stats = assignment.groupBy(col("shard_id"))
-      .agg(count(lit(1)).as("n"), min(col("epoch_pos")).as("lo"),
-        max(col("epoch_pos")).as("hi"))
-      .orderBy(col("shard_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-    val pending = stats.filter(s => !done(s._1)).take(maxShards)
-    if (pending.isEmpty) return prev
+    // epoch positions are exactly 0..n-1 (zipWithIndex), so shard k holds
+    // positions [k*m, min(n, (k+1)*m) - 1] — Splits.shardManifest's rows
+    // by arithmetic, with no job
+    val open = (0L until (n + maxPerShard - 1) / maxPerShard).filterNot(done)
+    val pending = open.take(maxShards)
+    if (pending.isEmpty) return (prev, true)
 
-    val (lo, hi) = (pending.head._1, pending.last._1)
+    val (lo, hi) = (pending.head, pending.last)
     require(!done.exists(s => s >= lo && s <= hi),
       s"non-contiguous committed shards inside unit [$lo,$hi] — foreign manifest?")
     val unitDir = s"$root/data/unit-$lo-$hi"
@@ -203,24 +228,26 @@ object ShardStore {
       .sortWithinPartitions(col("shard_id"), col("epoch_pos"))
       .write.mode("overwrite").partitionBy("shard_id").json(unitDir)
 
-    val entries = pending.map { case (sid, n, pMin, pMax) =>
-      ShardEntry(sid, n, pMin, pMax, s"$unitDir/shard_id=$sid")
+    val entries = pending.map { sid =>
+      val pMin = sid * maxPerShard
+      val pMax = math.min(n, pMin + maxPerShard) - 1
+      ShardEntry(sid, pMax - pMin + 1, pMin, pMax, s"$unitDir/shard_id=$sid")
     }
     val next = Manifest(prev.id + 1, prev.shards ++ entries)
     commitManifest(root, next)
-    next
+    (next, pending.length == open.length)
   }
 
-  /** Drive `export` until every shard is committed. */
+  /** Drive `export` until every shard is committed; stops on the step
+    * that commits the last shard. */
   def exportAll(docs: DataFrame, root: String, maxPerShard: Long,
       salt: String = "epoch0", idCol: String = "doc_id",
       maxShardsPerCommit: Int = Int.MaxValue): Manifest = {
-    var m = export(docs, root, maxPerShard, salt, idCol, maxShardsPerCommit)
-    var made = true
-    while (made) {
-      val next = export(docs, root, maxPerShard, salt, idCol, maxShardsPerCommit)
-      made = next.id != m.id
+    var (m, complete) = exportStep(docs, root, maxPerShard, salt, idCol, maxShardsPerCommit)
+    while (!complete) {
+      val (next, c) = exportStep(docs, root, maxPerShard, salt, idCol, maxShardsPerCommit)
       m = next
+      complete = c
     }
     m
   }

@@ -517,6 +517,72 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .select($"doc_id", $"shard_id").as[(Long, Long)].collect().toMap
     val backAssign = back.select($"doc_id", $"shard_id").as[(Long, Long)].collect().toMap
     assert(backAssign == assign)
+
+    // the manifest is arithmetic over n; Splits.shardManifest over the
+    // pure assignment stays its reference at every size
+    def reference(docs: org.apache.spark.sql.DataFrame, m: Long) =
+      graft.ops.Splits.shardManifest(graft.ops.Splits.trainingShards(docs, m))
+        .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+    def exported(docs: org.apache.spark.sql.DataFrame, dir: String, m: Long) =
+      graft.ops.Splits.writeTrainingShards(docs, dir, maxPerShard = m)
+        .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+    def corpus(n: Long) =
+      (0L until n).map(i => (i, s"text $i")).toDF("doc_id", "text")
+    assert(manifest.toSeq == reference(d, 64L))
+    // n = 0: nothing to commit, and exportAll still returns
+    val emptyDir = java.nio.file.Files.createTempDirectory("graft-shards-empty").toString
+    assert(exported(corpus(0L), emptyDir, 64L).isEmpty)
+    assert(graft.ops.ShardStore.lastManifest(emptyDir).isEmpty)
+    assert(graft.ops.ShardStore.readCommitted(spark, emptyDir).isEmpty)
+    // n = 128, maxPerShard 64: two full shards; n < maxPerShard: one shard
+    for ((n, want) <- Seq(128L -> Seq(64L, 64L), 10L -> Seq(10L))) {
+      val sDir = java.nio.file.Files.createTempDirectory(s"graft-shards-$n").toString
+      val got = exported(corpus(n), sDir, 64L)
+      assert(got.map(_._2) == want, got)
+      assert(got == reference(corpus(n), 64L))
+      assert(graft.ops.ShardStore.readCommitted(spark, sDir).get.count() == n)
+    }
+    // a store committed before _params.tsv existed: n comes from the
+    // assignment itself, and the re-export commits the same manifest
+    val oldDir = java.nio.file.Files.createTempDirectory("graft-shards-old").toString
+    exported(corpus(128L), oldDir, 64L)
+    import scala.jdk.CollectionConverters._
+    java.nio.file.Files.list(java.nio.file.Paths.get(oldDir)).iterator().asScala
+      .filter(_.getFileName.toString.startsWith("manifest-"))
+      .foreach(java.nio.file.Files.delete(_))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(oldDir, "assignment", "_params.tsv"))
+    assert(exported(corpus(128L), oldDir, 64L) == reference(corpus(128L), 64L))
+  }
+
+  test("curation operators evaluate their input once: exportAll twice per row, dedupCorpus output never") {
+    import spark.implicits._
+    // exportAll: once for the id checkpoint, once for the unit write
+    val idEvals = spark.sparkContext.longAccumulator("exportAll input rows")
+    val bumpId = udf { (i: Long) => idEvals.add(1L); i }
+    val n = 200L
+    val d = spark.range(n).select(bumpId($"id").as("doc_id"),
+      concat(lit("text "), $"id".cast("string")).as("text"))
+    val dir = java.nio.file.Files.createTempDirectory("graft-shards-evals").toString
+    val m = graft.ops.ShardStore.exportAll(d, dir, maxPerShard = 64L)
+    assert(m.shards.map(_.nDocs).sum == n)
+    assert(idEvals.value == 2L * n, s"exportAll evaluated its input ${idEvals.value} times for $n rows")
+    // dedupCorpus: the returned frame refers only to checkpoints, so
+    // reading it does not re-run the text-side plan
+    val textEvals = spark.sparkContext.longAccumulator("dedupCorpus text rows")
+    val textOf = udf { (i: Long) =>
+      textEvals.add(1L)
+      (1 to 40).map(j => s"t${i % 5}_$j").mkString(" ")
+    }
+    val docs = spark.range(40).select($"id".as("doc_id"), textOf($"id").as("text"))
+    val out = Dedup.dedupCorpus(docs, threshold = 0.5)
+    val afterCall = textEvals.value
+    val first = out.as[(Long, Long, Boolean)].collect().sortBy(_._1).toSeq
+    val second = out.as[(Long, Long, Boolean)].collect().sortBy(_._1).toSeq
+    assert(textEvals.value == afterCall,
+      s"reading dedupCorpus's output re-ran the text plan (${textEvals.value - afterCall} rows)")
+    assert(first == second)
+    assert(first.map(_._1) == (0L until 40L))
+    assert(first.filter(_._3).map(_._1) == (0L until 5L)) // one representative per text
   }
 
   test("shard export: kill mid-export resumes exactly-once; epoch order never recomputed") {
