@@ -89,10 +89,18 @@ object BenchExtra {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
     // A/B probes: SPARK_GRAFT_EXTRA_CONF="k=v;k2=v2" overlays session conf
-    // (measurement-only — the frozen Bench session is untouched)
+    // (measurement-only — the frozen Bench session is untouched). Every
+    // applied pair and every skipped fragment goes to stderr, so a
+    // mistyped probe never passes for a baseline run.
     sys.env.get("SPARK_GRAFT_EXTRA_CONF").foreach { kvs =>
-      kvs.split(";").map(_.trim).filter(_.contains("=")).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2); b.config(k.trim, v.trim)
+      kvs.split(";").map(_.trim).filter(_.nonEmpty).foreach { kv =>
+        kv.split("=", 2) match {
+          case Array(k, v) =>
+            b.config(k.trim, v.trim)
+            System.err.println(s"[extra] conf ${k.trim}=${v.trim}")
+          case _ =>
+            System.err.println(s"[extra] SPARK_GRAFT_EXTRA_CONF: skipped '$kv' (no '=')")
+        }
       }
     }
     val s = b.getOrCreate()

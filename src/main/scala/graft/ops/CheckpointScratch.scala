@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Registry for per-invocation EAGER localCheckpoints created inside
@@ -72,7 +74,7 @@ object CheckpointScratch {
           if (want < n) cp.coalesce(want) else cp
         }
       case _ => cp
-    } catch { case _: Throwable => cp }
+    } catch { case NonFatal(_) => cp }
 
   private def targetPartitions(spark: org.apache.spark.sql.SparkSession,
       rdd: org.apache.spark.rdd.RDD[_], n: Int): Int = {
@@ -106,7 +108,7 @@ object CheckpointScratch {
         case _ => ()
       }
       found
-    } catch { case _: Throwable => -1L }
+    } catch { case NonFatal(_) => -1L }
 
   /** Run `body` under a STATIC plan scope for a fixed-shape iteration
     * loop: AQE off, shuffle partitions derived from bytesHint with the
@@ -177,7 +179,7 @@ object CheckpointScratch {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         lr.rdd.unpersist(blocking = false)
       case _ => ()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
 
   /** Drop every still-reachable registered checkpoint's blocks now. */
   def unpersistAll(): Unit = {

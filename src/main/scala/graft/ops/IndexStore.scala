@@ -1,9 +1,5 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -15,7 +11,7 @@ import org.apache.spark.sql.functions._
   * applied to the retrieval tier; Lucene's segment model, kept
   * relational).
   *
-  * Commit discipline = [[NearDupStore]] verbatim: each increment's
+  * Commit discipline = [[ManifestLog.Increments]]: each increment's
   * parquet dirs land under a tmp name and flip via atomic rename, then
   * `manifest-<K>.tsv` flips to record the committed increment list — a
   * reader never sees a half-written increment; a crashed append retries
@@ -50,68 +46,7 @@ object IndexStore {
     * empty tokens dropped, 1-based split positions ([[Index.termStream]]). */
   val Tokenizer = "ws-v1"
 
-  private def paramsPath(root: String): Path = Paths.get(root, "params.tsv")
-
-  private def readTokenizer(root: String): Option[String] = {
-    val p = paramsPath(root)
-    if (!Files.isRegularFile(p)) return None
-    Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-      .flatMap(_.split('\t') match {
-        case Array("tokenizer", v) => Some(v)
-        case _ => None
-      }).headOption
-  }
-
-  private def ensureParams(root: String): Unit =
-    readTokenizer(root) match {
-      case None =>
-        Files.createDirectories(Paths.get(root))
-        val tmp = Paths.get(root, "params.tsv.tmp")
-        Files.write(tmp, s"tokenizer\t$Tokenizer\n".getBytes(StandardCharsets.UTF_8))
-        Files.move(tmp, paramsPath(root), StandardCopyOption.ATOMIC_MOVE)
-      case Some(existing) =>
-        require(existing == Tokenizer,
-          s"IndexStore at $root was built with tokenizer $existing; refusing " +
-            s"$Tokenizer — mixed tokenizations make df/tf/positions incomparable")
-    }
-
-  /** Manifest state: counter id, committed data increments, committed
-    * tombstone (delete) increments. Pre-delete manifests have no `del`
-    * lines and parse with an empty tombstone list. */
-  private def lastManifest(root: String): Option[(Long, Vector[Long], Vector[Long])] = {
-    val dir = Paths.get(root)
-    if (!Files.isDirectory(dir)) return None
-    val ms = Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.matches("manifest-\\d+\\.tsv")).toVector
-    if (ms.isEmpty) return None
-    val latest = ms.maxBy(_.getFileName.toString
-      .stripPrefix("manifest-").stripSuffix(".tsv").toLong)
-    val id = latest.getFileName.toString
-      .stripPrefix("manifest-").stripSuffix(".tsv").toLong
-    val lines = Files.readAllLines(latest, StandardCharsets.UTF_8).asScala
-    val incs = lines
-      .collect { case l if l.startsWith("inc\t") => l.stripPrefix("inc\t").toLong }
-      .toVector
-    val dels = lines
-      .collect { case l if l.startsWith("del\t") => l.stripPrefix("del\t").toLong }
-      .toVector
-    Some((id, incs, dels))
-  }
-
-  private def commitManifest(root: String, id: Long, incs: Vector[Long],
-      dels: Vector[Long] = Vector.empty): Unit = {
-    val dir = Paths.get(root)
-    val tmp = dir.resolve(s"manifest-$id.tsv.tmp")
-    Files.write(tmp, (incs.sorted.map(k => s"inc\t$k")
-        ++ dels.sorted.map(k => s"del\t$k")).mkString("", "\n", "\n")
-      .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(s"manifest-$id.tsv"), StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).iterator().asScala.toVector.reverseIterator
-        .foreach(Files.deleteIfExists(_))
+  private def log(root: String) = ManifestLog.Increments(root, "IndexStore", "doc_id")
 
   /** Commit one crawl increment's postings + doc lengths. Idempotent on
     * retry ([[NearDupStore.append]] semantics): a crash after the data
@@ -120,26 +55,19 @@ object IndexStore {
     * increment id. */
   def append(root: String, docs: DataFrame,
       idCol: String = "doc_id", textCol: String = "text"): Long = {
-    ensureParams(root)
-    val (prevId, incs, dels) =
-      lastManifest(root).getOrElse((0L, Vector.empty[Long], Vector.empty[Long]))
-    val inc = prevId + 1
-    val incDir = Paths.get(root, s"inc-$inc")
-    deleteRecursively(incDir) // uncommitted leftovers from a crashed attempt
-    val tmpDir = Paths.get(root, s"inc-$inc.tmp")
-    deleteRecursively(tmpDir)
-    Index.postings(docs, idCol, textCol)
-      .write.parquet(tmpDir.resolve("postings").toString)
-    // dl for ALL docs (0 for empty) — corpus N and avgdl come from here
-    val dls = Index.termStream(docs, idCol, textCol)
-      .groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
-    docs.select(col(idCol).cast("long").as("doc_id"))
-      .join(dls, Seq("doc_id"), "left")
-      .select(col("doc_id"), coalesce(col("dl"), lit(0L)).as("dl"))
-      .write.parquet(tmpDir.resolve("doclen").toString)
-    Files.move(tmpDir, incDir, StandardCopyOption.ATOMIC_MOVE)
-    commitManifest(root, inc, incs :+ inc, dels)
-    inc
+    ManifestLog(root).pinParams("IndexStore", Seq("tokenizer" -> Tokenizer),
+      "mixed tokenizations make df/tf/positions incomparable")
+    log(root).append { dir =>
+      Index.postings(docs, idCol, textCol)
+        .write.parquet(dir.resolve("postings").toString)
+      // dl for ALL docs (0 for empty) — corpus N and avgdl come from here
+      val dls = Index.termStream(docs, idCol, textCol)
+        .groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
+      docs.select(col(idCol).cast("long").as("doc_id"))
+        .join(dls, Seq("doc_id"), "left")
+        .select(col("doc_id"), coalesce(col("dl"), lit(0L)).as("dl"))
+        .write.parquet(dir.resolve("doclen").toString)
+    }
   }
 
   /** Commit a TOMBSTONE increment: the given doc ids disappear from every
@@ -150,50 +78,14 @@ object IndexStore {
     * by contract, so a re-crawl of the same page commits under a fresh
     * id and is unaffected. Idempotent on retry like [[append]]. Returns
     * the tombstone increment id. */
-  def delete(root: String, ids: DataFrame, idCol: String = "doc_id"): Long = {
-    val (prevId, incs, dels) =
-      lastManifest(root).getOrElse((0L, Vector.empty[Long], Vector.empty[Long]))
-    require(incs.nonEmpty, s"IndexStore at $root has no committed increments")
-    val del = prevId + 1
-    val delDir = Paths.get(root, s"del-$del")
-    deleteRecursively(delDir) // uncommitted leftovers from a crashed attempt
-    val tmpDir = Paths.get(root, s"del-$del.tmp")
-    deleteRecursively(tmpDir)
-    ids.select(col(idCol).cast("long").as("doc_id")).distinct()
-      .write.parquet(tmpDir.resolve("ids").toString)
-    Files.move(tmpDir, delDir, StandardCopyOption.ATOMIC_MOVE)
-    commitManifest(root, del, incs, dels :+ del)
-    del
-  }
-
-  /** The committed tombstone ids (doc_id) — empty option when no delete
-    * has ever been committed, so the no-delete read path keeps its exact
-    * pre-delete plan shape. */
-  private def tombstones(spark: SparkSession, root: String): Option[DataFrame] = {
-    val dels = lastManifest(root).map(_._3).getOrElse(Vector.empty)
-    if (dels.isEmpty) None
-    else Some(dels.map(k => spark.read.parquet(s"$root/del-$k/ids"))
-      .reduce(_.unionByName(_)))
-  }
-
-  private def minusTombstones(spark: SparkSession, root: String,
-      df: DataFrame): DataFrame =
-    tombstones(spark, root) match {
-      case None => df
-      case Some(ts) => df.join(ts, Seq("doc_id"), "left_anti")
-    }
-
-  private def readUnion(spark: SparkSession, root: String, sub: String): DataFrame = {
-    val incs = lastManifest(root).map(_._2).getOrElse(Vector.empty)
-    require(incs.nonEmpty, s"IndexStore at $root has no committed increments")
-    incs.map(k => spark.read.parquet(s"$root/inc-$k/$sub")).reduce(_.unionByName(_))
-  }
+  def delete(root: String, ids: DataFrame, idCol: String = "doc_id"): Long =
+    log(root).delete(ids, idCol)
 
   /** The committed postings union (term, doc_id, tf, first_pos, last_pos),
     * tombstoned docs excluded (an 8-byte-key anti-join, broadcast-sized
     * in practice — the tombstone table is takedown-scale, not corpus-scale). */
   def storedPostings(spark: SparkSession, root: String): DataFrame =
-    minusTombstones(spark, root, readUnion(spark, root, "postings"))
+    log(root).read(spark, "postings")
 
   /** COMPACT the committed increments into one (the small-files problem:
     * a year of daily crawls = hundreds of increment dirs, each a
@@ -204,31 +96,20 @@ object IndexStore {
     * leaves the old manifest intact. Old increment dirs are deleted
     * AFTER the flip (best-effort — an unlisted dir is dead weight, not
     * corruption). Returns the new increment id. */
-  def compact(spark: SparkSession, root: String): Long = {
-    val (prevId, incs, dels) =
-      lastManifest(root).getOrElse((0L, Vector.empty[Long], Vector.empty[Long]))
-    require(incs.nonEmpty, s"IndexStore at $root has nothing to compact")
-    val inc = prevId + 1
-    val tmpDir = Paths.get(root, s"inc-$inc.tmp")
-    deleteRecursively(tmpDir)
-    deleteRecursively(Paths.get(root, s"inc-$inc"))
-    // storedPostings/storedDocLens already exclude tombstoned docs, so
-    // compaction is also the PHYSICAL removal point for deletes (the
-    // takedown contract: tombstone now, scrub bytes at the next compact)
-    storedPostings(spark, root).write.parquet(tmpDir.resolve("postings").toString)
-    storedDocLens(spark, root).write.parquet(tmpDir.resolve("doclen").toString)
-    Files.move(tmpDir, Paths.get(root, s"inc-$inc"), StandardCopyOption.ATOMIC_MOVE)
-    commitManifest(root, inc, Vector(inc))
-    incs.foreach(k => deleteRecursively(Paths.get(root, s"inc-$k")))
-    dels.foreach(k => deleteRecursively(Paths.get(root, s"del-$k")))
-    inc
-  }
+  def compact(spark: SparkSession, root: String): Long =
+    log(root).compact { dir =>
+      // storedPostings/storedDocLens already exclude tombstoned docs, so
+      // compaction is also the PHYSICAL removal point for deletes (the
+      // takedown contract: tombstone now, scrub bytes at the next compact)
+      storedPostings(spark, root).write.parquet(dir.resolve("postings").toString)
+      storedDocLens(spark, root).write.parquet(dir.resolve("doclen").toString)
+    }
 
   /** The committed per-doc lengths union (doc_id, dl) — every indexed
     * doc, dl = 0 for token-free ones; tombstoned docs excluded (they no
     * longer count toward corpus N / avgdl). */
   def storedDocLens(spark: SparkSession, root: String): DataFrame =
-    minusTombstones(spark, root, readUnion(spark, root, "doclen"))
+    log(root).read(spark, "doclen")
 
   /** The dictionary over the stored corpus: (term, df, cf) — valid
     * because ids never repeat across increments. */

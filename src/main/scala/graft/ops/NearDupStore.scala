@@ -1,11 +1,6 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Persisted LSH band-key store for CROSS-CRAWL near-dup dedup
   * (VERDICT r7 #2): the seen corpus's signature frames — `(id, shs)`
@@ -15,16 +10,15 @@ import org.apache.spark.sql.functions._
   * (the cost [[Dedup.incrementalNearDup]]'s scaladoc documented and its
   * 2M probe measured).
   *
-  * Commit discipline = the [[ShardStore]] / `spark.SnapshotStore`
-  * manifest pattern: each increment's parquet dirs land under tmp names
-  * and flip via atomic rename, then `manifest-<K>.tsv` (atomic rename)
-  * records the committed increment list — a reader never sees a
-  * half-written increment, and a crashed append retries idempotently
-  * (the increment id is derived from the previous manifest, and its data
-  * dirs overwrite any uncommitted leftovers). `params.tsv` pins
-  * (numHashes, bands, shingleK) at store creation; a mismatched append
-  * or query FAILS FAST instead of silently mixing incompatible
-  * signatures (the [[ShardStore]] parameter-fingerprint discipline).
+  * Commit discipline = [[ManifestLog.Increments]]: each increment's
+  * parquet dirs land under a tmp name and flip via atomic rename, then
+  * `manifest-<K>.tsv` (atomic rename) records the committed increment
+  * list — a reader never sees a half-written increment, and a crashed
+  * append retries idempotently (the increment id is derived from the
+  * previous manifest, and its data dirs overwrite any uncommitted
+  * leftovers). `params.tsv` pins (numHashes, bands, shingleK) at store
+  * creation; a mismatched append or query FAILS FAST instead of silently
+  * mixing incompatible signatures.
   *
   * Layout under `root/`:
   *   params.tsv                   numHashes / bands / shingleK
@@ -41,75 +35,7 @@ import org.apache.spark.sql.functions._
   * apply unchanged. */
 object NearDupStore {
 
-  final case class Params(numHashes: Int, bands: Int, shingleK: Int)
-
-  private def paramsPath(root: String): Path = Paths.get(root, "params.tsv")
-
-  private def readParams(root: String): Option[Params] = {
-    val p = paramsPath(root)
-    if (!Files.isRegularFile(p)) return None
-    val kv = Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-      .flatMap(_.split('\t') match {
-        case Array(k, v) => Some(k -> v.toInt)
-        case _ => None
-      }).toMap
-    Some(Params(kv("numHashes"), kv("bands"), kv("shingleK")))
-  }
-
-  private def writeParams(root: String, p: Params): Unit = {
-    Files.createDirectories(Paths.get(root))
-    val tmp = Paths.get(root, "params.tsv.tmp")
-    Files.write(tmp,
-      s"numHashes\t${p.numHashes}\nbands\t${p.bands}\nshingleK\t${p.shingleK}\n"
-        .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, paramsPath(root), StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private def ensureParams(root: String, p: Params): Unit =
-    readParams(root) match {
-      case None => writeParams(root, p)
-      case Some(existing) =>
-        require(existing == p,
-          s"NearDupStore at $root was built with $existing; refusing $p — " +
-            "mixed signature parameters would silently break recall")
-    }
-
-  /** Manifest state: counter id, committed data increments, committed
-    * tombstone (delete) increments — see [[IndexStore.lastManifest]]. */
-  private def lastManifest(root: String): Option[(Long, Vector[Long], Vector[Long])] = {
-    val dir = Paths.get(root)
-    if (!Files.isDirectory(dir)) return None
-    val ms = Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.matches("manifest-\\d+\\.tsv")).toVector
-    if (ms.isEmpty) return None
-    val latest = ms.maxBy(_.getFileName.toString
-      .stripPrefix("manifest-").stripSuffix(".tsv").toLong)
-    val id = latest.getFileName.toString
-      .stripPrefix("manifest-").stripSuffix(".tsv").toLong
-    val lines = Files.readAllLines(latest, StandardCharsets.UTF_8).asScala
-    val incs = lines
-      .collect { case l if l.startsWith("inc\t") => l.stripPrefix("inc\t").toLong }
-      .toVector
-    val dels = lines
-      .collect { case l if l.startsWith("del\t") => l.stripPrefix("del\t").toLong }
-      .toVector
-    Some((id, incs, dels))
-  }
-
-  private def commitManifest(root: String, id: Long, incs: Vector[Long],
-      dels: Vector[Long] = Vector.empty): Unit = {
-    val dir = Paths.get(root)
-    val tmp = dir.resolve(s"manifest-$id.tsv.tmp")
-    Files.write(tmp, (incs.sorted.map(k => s"inc\t$k")
-        ++ dels.sorted.map(k => s"del\t$k")).mkString("", "\n", "\n")
-      .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(s"manifest-$id.tsv"), StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).iterator().asScala.toVector.reverseIterator
-        .foreach(Files.deleteIfExists(_))
+  private def log(root: String) = ManifestLog.Increments(root, "NearDupStore", "id")
 
   /** Commit one crawl increment's signature frames. Idempotent on retry:
     * a crash after data rename but before the manifest flip leaves the
@@ -120,24 +46,18 @@ object NearDupStore {
   def append(root: String, docs: DataFrame,
       numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
       idCol: String = "doc_id", textCol: String = "text"): Long = {
-    ensureParams(root, Params(numHashes, bands, shingleK))
-    val (prevId, incs, dels) =
-      lastManifest(root).getOrElse((0L, Vector.empty[Long], Vector.empty[Long]))
-    val inc = prevId + 1
-    val incDir = Paths.get(root, s"inc-$inc")
-    deleteRecursively(incDir) // uncommitted leftovers from a crashed attempt
-    val tmpDir = Paths.get(root, s"inc-$inc.tmp")
-    deleteRecursively(tmpDir)
-    // ONE shingling pass feeds both frames (the incrementalNearDup
-    // discipline): write sigs from the checkpointed base, keys off it
-    val base = CheckpointScratch.ckpt(
-      Dedup.shingleFrame(docs, shingleK, idCol, textCol))
-    base.write.parquet(tmpDir.resolve("sigs").toString)
-    Dedup.bandKeyFrame(base, numHashes, bands)
-      .write.parquet(tmpDir.resolve("keys").toString)
-    Files.move(tmpDir, incDir, StandardCopyOption.ATOMIC_MOVE)
-    commitManifest(root, inc, incs :+ inc, dels)
-    inc
+    ManifestLog(root).pinParams("NearDupStore",
+      Seq("numHashes" -> numHashes, "bands" -> bands, "shingleK" -> shingleK),
+      "mixed signature parameters would silently break recall")
+    log(root).append { dir =>
+      // ONE shingling pass feeds both frames (the incrementalNearDup
+      // discipline): write sigs from the checkpointed base, keys off it
+      val base = CheckpointScratch.ckpt(
+        Dedup.shingleFrame(docs, shingleK, idCol, textCol))
+      base.write.parquet(dir.resolve("sigs").toString)
+      Dedup.bandKeyFrame(base, numHashes, bands)
+        .write.parquet(dir.resolve("keys").toString)
+    }
   }
 
   /** Commit a TOMBSTONE increment: the given doc ids stop suppressing
@@ -145,39 +65,8 @@ object NearDupStore {
     * new crawls that resemble it). Physical removal defers to
     * [[compact]]; reads anti-join the tombstone set until then.
     * Idempotent on retry like [[append]]. Returns the tombstone id. */
-  def delete(root: String, ids: DataFrame, idCol: String = "doc_id"): Long = {
-    val (prevId, incs, dels) =
-      lastManifest(root).getOrElse((0L, Vector.empty[Long], Vector.empty[Long]))
-    require(incs.nonEmpty, s"NearDupStore at $root has no committed increments")
-    val del = prevId + 1
-    val delDir = Paths.get(root, s"del-$del")
-    deleteRecursively(delDir) // uncommitted leftovers from a crashed attempt
-    val tmpDir = Paths.get(root, s"del-$del.tmp")
-    deleteRecursively(tmpDir)
-    ids.select(col(idCol).cast("long").as("id")).distinct()
-      .write.parquet(tmpDir.resolve("ids").toString)
-    Files.move(tmpDir, delDir, StandardCopyOption.ATOMIC_MOVE)
-    commitManifest(root, del, incs, dels :+ del)
-    del
-  }
-
-  private def committedIncs(root: String): Vector[Long] =
-    lastManifest(root).map(_._2).getOrElse(Vector.empty)
-
-  private def minusTombstones(spark: SparkSession, root: String,
-      df: DataFrame): DataFrame = {
-    val dels = lastManifest(root).map(_._3).getOrElse(Vector.empty)
-    if (dels.isEmpty) df
-    else df.join(dels.map(k => spark.read.parquet(s"$root/del-$k/ids"))
-      .reduce(_.unionByName(_)), Seq("id"), "left_anti")
-  }
-
-  private def readUnion(spark: SparkSession, root: String, sub: String): DataFrame = {
-    val incs = committedIncs(root)
-    require(incs.nonEmpty, s"NearDupStore at $root has no committed increments")
-    minusTombstones(spark, root,
-      incs.map(k => spark.read.parquet(s"$root/inc-$k/$sub")).reduce(_.unionByName(_)))
-  }
+  def delete(root: String, ids: DataFrame, idCol: String = "doc_id"): Long =
+    log(root).delete(ids, idCol)
 
   /** COMPACT the committed increments into one (the small-files problem
     * — see [[IndexStore.compact]]): the keys/sigs unions rewrite as a
@@ -185,32 +74,21 @@ object NearDupStore {
     * view, never a mix), old dirs are deleted after the flip. Dedup
     * results are unchanged: the store's query surface is exactly the
     * union the new increment now holds. */
-  def compact(spark: SparkSession, root: String): Long = {
-    val (prevId, incs, dels) =
-      lastManifest(root).getOrElse((0L, Vector.empty[Long], Vector.empty[Long]))
-    require(incs.nonEmpty, s"NearDupStore at $root has nothing to compact")
-    val inc = prevId + 1
-    val tmpDir = Paths.get(root, s"inc-$inc.tmp")
-    deleteRecursively(tmpDir)
-    deleteRecursively(Paths.get(root, s"inc-$inc"))
-    // seenSigs/seenKeys already exclude tombstoned ids — compaction is
-    // the physical removal point for deletes
-    seenSigs(spark, root).write.parquet(tmpDir.resolve("sigs").toString)
-    seenKeys(spark, root).write.parquet(tmpDir.resolve("keys").toString)
-    Files.move(tmpDir, Paths.get(root, s"inc-$inc"), StandardCopyOption.ATOMIC_MOVE)
-    commitManifest(root, inc, Vector(inc))
-    incs.foreach(k => deleteRecursively(Paths.get(root, s"inc-$k")))
-    dels.foreach(k => deleteRecursively(Paths.get(root, s"del-$k")))
-    inc
-  }
+  def compact(spark: SparkSession, root: String): Long =
+    log(root).compact { dir =>
+      // seenSigs/seenKeys already exclude tombstoned ids — compaction is
+      // the physical removal point for deletes
+      seenSigs(spark, root).write.parquet(dir.resolve("sigs").toString)
+      seenKeys(spark, root).write.parquet(dir.resolve("keys").toString)
+    }
 
   /** The committed seen-side band keys (id, band_key). */
   def seenKeys(spark: SparkSession, root: String): DataFrame =
-    readUnion(spark, root, "keys")
+    log(root).read(spark, "keys")
 
   /** The committed seen-side shingle-hash frames (id, shs). */
   def seenSigs(spark: SparkSession, root: String): DataFrame =
-    readUnion(spark, root, "sigs")
+    log(root).read(spark, "sigs")
 
   /** Cross-crawl near-dup dedup of `batch` against the STORED corpus
     * signatures — identical output to [[Dedup.incrementalNearDup]] over
@@ -219,11 +97,11 @@ object NearDupStore {
     * re-shingle per batch. Parameters are read from the store. */
   def incrementalNearDup(root: String, batch: DataFrame, threshold: Double,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val p = readParams(root).getOrElse(
+    val p = ManifestLog(root).params.getOrElse(
       throw new IllegalStateException(s"NearDupStore at $root has no params.tsv"))
     val spark = batch.sparkSession
     Dedup.incrementalNearDupAgainst(
       seenSigs(spark, root), seenKeys(spark, root), batch, threshold,
-      p.numHashes, p.bands, p.shingleK, idCol, textCol)
+      p("numHashes").toInt, p("bands").toInt, p("shingleK").toInt, idCol, textCol)
   }
 }

@@ -1,8 +1,6 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -48,20 +46,13 @@ object ShardStore {
       posMax: Long, path: String)
   final case class Manifest(id: Long, shards: Vector[ShardEntry])
 
-  def lastManifest(root: String): Option[Manifest] = {
-    val dir = Paths.get(root)
-    if (!Files.isDirectory(dir)) return None
-    val manifests = Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.matches("manifest-\\d+\\.tsv")).toVector
-    if (manifests.isEmpty) return None
-    Some(readManifest(manifests.maxBy(p =>
-      p.getFileName.toString.stripPrefix("manifest-").stripSuffix(".tsv").toLong)))
-  }
+  def lastManifest(root: String): Option[Manifest] =
+    ManifestLog(root).latest.map { case (_, lines) => parse(lines) }
 
-  private def readManifest(p: Path): Manifest = {
+  private def parse(lines: Seq[String]): Manifest = {
     var id = 0L
     val shards = Vector.newBuilder[ShardEntry]
-    Files.readAllLines(p, StandardCharsets.UTF_8).asScala.foreach { line =>
+    lines.foreach { line =>
       line.split('\t') match {
         case Array("manifest", v) => id = v.toLong
         case Array("shard", sid, n, lo, hi, path) =>
@@ -72,23 +63,11 @@ object ShardStore {
     Manifest(id, shards.result())
   }
 
-  /** Atomic commit: tmp file in the same directory, then rename. */
-  def commitManifest(root: String, m: Manifest): Unit = {
-    val dir = Paths.get(root)
-    Files.createDirectories(dir)
-    val body = new StringBuilder(s"manifest\t${m.id}\n")
-    m.shards.sortBy(_.shardId).foreach { s =>
-      body ++= s"shard\t${s.shardId}\t${s.nDocs}\t${s.posMin}\t${s.posMax}\t${s.path}\n"
-    }
-    val tmp = dir.resolve(s"manifest-${m.id}.tsv.tmp")
-    Files.write(tmp, body.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(s"manifest-${m.id}.tsv"), StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).iterator().asScala.toVector.reverseIterator
-        .foreach(Files.deleteIfExists(_))
+  /** Atomic commit of `m` as `manifest-<m.id>.tsv`. */
+  def commitManifest(root: String, m: Manifest): Unit =
+    ManifestLog(root).commit(m.id, s"manifest\t${m.id}" +:
+      m.shards.sortBy(_.shardId).map(s =>
+        s"shard\t${s.shardId}\t${s.nDocs}\t${s.posMin}\t${s.posMax}\t${s.path}"))
 
   /** Input fingerprint: row count + order-independent id-hash XOR fold
     * (bit_xor — a SUM of 64-bit hashes overflows under ANSI mode) — one
@@ -132,21 +111,19 @@ object ShardStore {
     val aDir = Paths.get(root, "assignment")
     val vKey = s"$root\u0000$salt\u0000$maxPerShard\u0000$idCol"
     if (!Files.isDirectory(aDir)) {
-      val tmp = Paths.get(root, "assignment.tmp")
-      deleteRecursively(tmp) // stale tmp from a crashed first attempt
-      val ids = CheckpointScratch.ckpt(docs.select(col(idCol)))
-      val (n, idHash) = inputFingerprint(ids, idCol)
-      Splits.trainingShards(ids, maxPerShard, salt, idCol)
-        .write.mode("overwrite").parquet(tmp.toString)
-      CheckpointScratch.drop(ids)
-      Files.write(tmp.resolve("_params.tsv"),
-        s"salt\t$salt\nmaxPerShard\t$maxPerShard\nidCol\t$idCol\nn\t$n\nidHash\t$idHash\n"
-          .getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, aDir, StandardCopyOption.ATOMIC_MOVE)
+      ManifestLog(root).publish("assignment") { tmp =>
+        val ids = CheckpointScratch.ckpt(docs.select(col(idCol)))
+        val (n, idHash) = inputFingerprint(ids, idCol)
+        Splits.trainingShards(ids, maxPerShard, salt, idCol)
+          .write.mode("overwrite").parquet(tmp.toString)
+        CheckpointScratch.drop(ids)
+        ManifestLog.writeParams(tmp.resolve("_params.tsv"), Seq("salt" -> salt,
+          "maxPerShard" -> maxPerShard, "idCol" -> idCol, "n" -> n, "idHash" -> idHash))
+      }
       verifiedRoots.add(vKey)
     } else if (!verifiedRoots.contains(vKey)) {
-      val kv = storedParams(aDir)
-      if (kv.nonEmpty) { // pre-fingerprint stores stay readable
+      // pre-fingerprint stores (no _params.tsv) stay readable
+      ManifestLog.readParams(aDir.resolve("_params.tsv")).foreach { kv =>
         val (n, idHash) = inputFingerprint(docs, idCol)
         val want = Map("salt" -> salt, "maxPerShard" -> maxPerShard.toString,
           "idCol" -> idCol, "n" -> n.toString, "idHash" -> idHash.toString)
@@ -163,17 +140,6 @@ object ShardStore {
     // every column is BIGINT: epochOrder casts the id to long
     val schema = StructType(Seq(idCol, "epoch_pos", "shard_id").map(StructField(_, LongType)))
     spark.read.schema(schema).parquet(aDir.toString)
-  }
-
-  /** The `_params.tsv` pairs of a committed assignment (empty when absent). */
-  private def storedParams(aDir: Path): Map[String, String] = {
-    val pf = aDir.resolve("_params.tsv")
-    if (!Files.isRegularFile(pf)) Map.empty
-    else Files.readAllLines(pf, StandardCharsets.UTF_8).asScala
-      .flatMap(_.split('\t') match {
-        case Array(k, v) => Some(k -> v)
-        case _ => None
-      }).toMap
   }
 
   /** One resumable export step: take up to `maxShards` pending shards
@@ -205,7 +171,8 @@ object ShardStore {
     Files.createDirectories(Paths.get(root))
     val assignment = ensureAssignment(docs, root, maxPerShard, salt, idCol)
     // a store written before _params.tsv existed pays one count job
-    val n = storedParams(Paths.get(root, "assignment")).get("n").map(_.toLong)
+    val n = ManifestLog.readParams(Paths.get(root, "assignment", "_params.tsv"))
+      .flatMap(_.get("n")).map(_.toLong)
       .getOrElse(assignment.count())
     val prev = lastManifest(root).getOrElse(Manifest(0L, Vector.empty))
     val done = prev.shards.map(_.shardId).toSet

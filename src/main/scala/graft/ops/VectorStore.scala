@@ -1,11 +1,10 @@
 package graft.ops
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
 
 /** Persisted IVF VECTOR index — the embedding analogue of [[IndexStore]]
   * (postings) and [[NearDupStore]] (LSH keys), completing the store tier:
@@ -15,10 +14,11 @@ import org.apache.spark.sql.functions._
   * of stored (vec_id, cell, embedding) rows — the FAISS IVF discipline
   * (train the coarse quantizer once, add in batches), kept relational.
   *
-  * Commit discipline = [[NearDupStore]] verbatim: tmp-dir + atomic
-  * rename + manifest flip, idempotent retry, `params.tsv` pins
-  * (dim, nCells, sampleSize) with fail-fast on mismatch (vectors
-  * assigned under different centroids are not co-queryable).
+  * Commit discipline = [[ManifestLog.Increments]]: tmp-dir + atomic
+  * rename + manifest flip, idempotent retry. `params.tsv` records
+  * (dim, nCells, sampleSize) and `centroids/` is published by atomic
+  * rename; the published centroids are the commit point of [[create]],
+  * so a create that failed before them retries from scratch.
   *
   * Layout under `root/`:
   *   params.tsv                 dim / nCells / sampleSize
@@ -35,66 +35,9 @@ import org.apache.spark.sql.functions._
   * [[Similarity.ivfTopKWith]] join the recompute path runs. */
 object VectorStore {
 
-  final case class Params(dim: Int, nCells: Int, sampleSize: Int)
+  private def log(root: String) = ManifestLog.Increments(root, "VectorStore", "vec_id")
 
-  private def paramsPath(root: String): Path = Paths.get(root, "params.tsv")
-
-  private def readParams(root: String): Option[Params] = {
-    val p = paramsPath(root)
-    if (!Files.isRegularFile(p)) return None
-    val kv = Files.readAllLines(p, StandardCharsets.UTF_8).asScala
-      .flatMap(_.split('\t') match {
-        case Array(k, v) => Some(k -> v.toInt)
-        case _ => None
-      }).toMap
-    Some(Params(kv("dim"), kv("nCells"), kv("sampleSize")))
-  }
-
-  private def writeParams(root: String, p: Params): Unit = {
-    Files.createDirectories(Paths.get(root))
-    val tmp = Paths.get(root, "params.tsv.tmp")
-    Files.write(tmp,
-      s"dim\t${p.dim}\nnCells\t${p.nCells}\nsampleSize\t${p.sampleSize}\n"
-        .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, paramsPath(root), StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  /** Manifest state: counter id, committed data increments, committed
-    * tombstone (delete) increments — see [[IndexStore.lastManifest]]. */
-  private def lastManifest(root: String): Option[(Long, Vector[Long], Vector[Long])] = {
-    val dir = Paths.get(root)
-    if (!Files.isDirectory(dir)) return None
-    val ms = Files.list(dir).iterator().asScala
-      .filter(_.getFileName.toString.matches("manifest-\\d+\\.tsv")).toVector
-    if (ms.isEmpty) return None
-    val latest = ms.maxBy(_.getFileName.toString
-      .stripPrefix("manifest-").stripSuffix(".tsv").toLong)
-    val id = latest.getFileName.toString
-      .stripPrefix("manifest-").stripSuffix(".tsv").toLong
-    val lines = Files.readAllLines(latest, StandardCharsets.UTF_8).asScala
-    val incs = lines
-      .collect { case l if l.startsWith("inc\t") => l.stripPrefix("inc\t").toLong }
-      .toVector
-    val dels = lines
-      .collect { case l if l.startsWith("del\t") => l.stripPrefix("del\t").toLong }
-      .toVector
-    Some((id, incs, dels))
-  }
-
-  private def commitManifest(root: String, id: Long, incs: Vector[Long],
-      dels: Vector[Long] = Vector.empty): Unit = {
-    val dir = Paths.get(root)
-    val tmp = dir.resolve(s"manifest-$id.tsv.tmp")
-    Files.write(tmp, (incs.sorted.map(k => s"inc\t$k")
-        ++ dels.sorted.map(k => s"del\t$k")).mkString("", "\n", "\n")
-      .getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(s"manifest-$id.tsv"), StandardCopyOption.ATOMIC_MOVE)
-  }
-
-  private def deleteRecursively(p: Path): Unit =
-    if (Files.exists(p))
-      Files.walk(p).iterator().asScala.toVector.reverseIterator
-        .foreach(Files.deleteIfExists(_))
+  private def hasCentroids(root: String) = Files.exists(Paths.get(root, "centroids"))
 
   /** Train centroids on `firstIncrement` (the [[Similarity.trainCentroids]]
     * deterministic quantizer: first-nCells seeds by vec_id, one Lloyd
@@ -103,24 +46,21 @@ object VectorStore {
     * centroids — the quantizer trains ONCE. */
   def create(root: String, firstIncrement: DataFrame, dim: Int,
       nCells: Int = 16, sampleSize: Int = 512): Long = {
-    require(readParams(root).isEmpty && !Files.exists(Paths.get(root, "centroids")),
+    require(!hasCentroids(root),
       s"VectorStore at $root already exists — centroids train once; use append")
-    writeParams(root, Params(dim, nCells, sampleSize))
+    // no centroids = nothing committed: (re)write the params of this create
+    ManifestLog.writeParams(Paths.get(root, "params.tsv"),
+      Seq("dim" -> dim, "nCells" -> nCells, "sampleSize" -> sampleSize))
     val centroids = Similarity.trainCentroids(firstIncrement, dim, nCells, sampleSize)
     val spark = firstIncrement.sparkSession
     val rows = centroids.zipWithIndex.map { case (c, i) => Row(i, c.toSeq) }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("cell",
-        org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("centroid",
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.DoubleType, containsNull = false),
-        nullable = false)))
-    val tmp = Paths.get(root, "centroids.tmp")
-    deleteRecursively(tmp)
-    spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
-      .write.parquet(tmp.toString)
-    Files.move(tmp, Paths.get(root, "centroids"), StandardCopyOption.ATOMIC_MOVE)
+    val schema = StructType(Seq(
+      StructField("cell", IntegerType, nullable = false),
+      StructField("centroid", ArrayType(DoubleType, containsNull = false), nullable = false)))
+    ManifestLog(root).publish("centroids") { dir =>
+      spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
+        .write.parquet(dir.toString)
+    }
     append(root, firstIncrement)
   }
 
@@ -134,78 +74,38 @@ object VectorStore {
   /** Commit one increment's vectors assigned under the PINNED centroids.
     * Idempotent on retry ([[NearDupStore.append]] semantics). */
   def append(root: String, embeddings: DataFrame): Long = {
-    require(readParams(root).isDefined && Files.exists(Paths.get(root, "centroids")),
+    require(ManifestLog(root).params.isDefined && hasCentroids(root),
       s"VectorStore at $root has no centroids — call create first")
     val cents = centroids(embeddings.sparkSession, root)
-    val (prevId, incs, dels) =
-      lastManifest(root).getOrElse((0L, Vector.empty[Long], Vector.empty[Long]))
-    val inc = prevId + 1
-    val incDir = Paths.get(root, s"inc-$inc")
-    deleteRecursively(incDir) // uncommitted leftovers from a crashed attempt
-    val tmpDir = Paths.get(root, s"inc-$inc.tmp")
-    deleteRecursively(tmpDir)
-    Similarity.ivfAssign(embeddings, cents)
-      .write.parquet(tmpDir.resolve("vectors").toString)
-    Files.move(tmpDir, incDir, StandardCopyOption.ATOMIC_MOVE)
-    commitManifest(root, inc, incs :+ inc, dels)
-    inc
+    log(root).append { dir =>
+      Similarity.ivfAssign(embeddings, cents)
+        .write.parquet(dir.resolve("vectors").toString)
+    }
   }
 
   /** Commit a TOMBSTONE increment: the given vec ids stop appearing as
     * neighbors (takedown semantics). Physical removal defers to
     * [[compact]]; reads anti-join the tombstone set until then.
     * Idempotent on retry like [[append]]. Returns the tombstone id. */
-  def delete(root: String, ids: DataFrame, idCol: String = "vec_id"): Long = {
-    val (prevId, incs, dels) =
-      lastManifest(root).getOrElse((0L, Vector.empty[Long], Vector.empty[Long]))
-    require(incs.nonEmpty, s"VectorStore at $root has no committed increments")
-    val del = prevId + 1
-    val delDir = Paths.get(root, s"del-$del")
-    deleteRecursively(delDir) // uncommitted leftovers from a crashed attempt
-    val tmpDir = Paths.get(root, s"del-$del.tmp")
-    deleteRecursively(tmpDir)
-    ids.select(col(idCol).cast("long").as("vec_id")).distinct()
-      .write.parquet(tmpDir.resolve("ids").toString)
-    Files.move(tmpDir, delDir, StandardCopyOption.ATOMIC_MOVE)
-    commitManifest(root, del, incs, dels :+ del)
-    del
-  }
+  def delete(root: String, ids: DataFrame, idCol: String = "vec_id"): Long =
+    log(root).delete(ids, idCol)
 
   /** The committed assigned-vector union (vec_id, embedding, cell),
     * tombstoned vectors excluded. */
-  def storedVectors(spark: SparkSession, root: String): DataFrame = {
-    val (_, incs, dels) =
-      lastManifest(root).getOrElse((0L, Vector.empty[Long], Vector.empty[Long]))
-    require(incs.nonEmpty, s"VectorStore at $root has no committed increments")
-    val union = incs.map(k => spark.read.parquet(s"$root/inc-$k/vectors"))
-      .reduce(_.unionByName(_))
-    if (dels.isEmpty) union
-    else union.join(dels.map(k => spark.read.parquet(s"$root/del-$k/ids"))
-      .reduce(_.unionByName(_)), Seq("vec_id"), "left_anti")
-  }
+  def storedVectors(spark: SparkSession, root: String): DataFrame =
+    log(root).read(spark, "vectors")
 
   /** COMPACT the committed increments into one (the small-files problem
     * — see [[IndexStore.compact]]): the assigned-vector union rewrites
     * as a NEW increment, the manifest flips to list only it, old dirs
     * are deleted after the flip. Centroids are untouched (pinned), so
     * probe results are unchanged by construction. */
-  def compact(spark: SparkSession, root: String): Long = {
-    val (prevId, incs, dels) =
-      lastManifest(root).getOrElse((0L, Vector.empty[Long], Vector.empty[Long]))
-    require(incs.nonEmpty, s"VectorStore at $root has nothing to compact")
-    val inc = prevId + 1
-    val tmpDir = Paths.get(root, s"inc-$inc.tmp")
-    deleteRecursively(tmpDir)
-    deleteRecursively(Paths.get(root, s"inc-$inc"))
-    // storedVectors already excludes tombstoned ids — compaction is the
-    // physical removal point for deletes
-    storedVectors(spark, root).write.parquet(tmpDir.resolve("vectors").toString)
-    Files.move(tmpDir, Paths.get(root, s"inc-$inc"), StandardCopyOption.ATOMIC_MOVE)
-    commitManifest(root, inc, Vector(inc))
-    incs.foreach(k => deleteRecursively(Paths.get(root, s"inc-$k")))
-    dels.foreach(k => deleteRecursively(Paths.get(root, s"del-$k")))
-    inc
-  }
+  def compact(spark: SparkSession, root: String): Long =
+    log(root).compact { dir =>
+      // storedVectors already excludes tombstoned ids — compaction is the
+      // physical removal point for deletes
+      storedVectors(spark, root).write.parquet(dir.resolve("vectors").toString)
+    }
 
   /** ANN top-k over the STORED corpus — identical neighbors and rounded
     * cosines to [[Similarity.ivfTopKWith]] under the store's pinned

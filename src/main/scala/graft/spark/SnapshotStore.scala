@@ -1,18 +1,21 @@
 package graft.spark
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import scala.jdk.CollectionConverters._
+import java.nio.file.Paths
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.ops.ManifestLog
 
 /** Iceberg-style snapshot layout + exactly-once resume (SURVEY §4.4).
   *
   * No Iceberg runtime jar exists offline, so the *semantics* are
   * implemented directly: Parquet data files + a manifest per snapshot,
   * committed via atomic rename — readers only ever see a fully-committed
-  * manifest. The reference analogue is DVC's content-hash stage memoization
+  * manifest ([[ManifestLog]] with prefix `snapshot` owns the file
+  * mechanics; this store owns the manifest lines). The reference
+  * analogue is DVC's content-hash stage memoization
   * (/root/reference/dvc.lock) — re-running skips completed work.
   *
   * Layout under `root/`:
@@ -36,17 +39,10 @@ object SnapshotStore {
   final case class Snapshot(id: Long, buckets: Set[Int], dataDirs: Vector[String],
       files: Vector[FileStats] = Vector.empty)
 
-  def lastSnapshot(root: String): Option[Snapshot] = {
-    val dir = Paths.get(root)
-    if (!Files.isDirectory(dir)) return None
-    val manifests = Files.list(dir).iterator().asScala
-      .filter(p => p.getFileName.toString.matches("snapshot-\\d+\\.tsv"))
-      .toVector
-    if (manifests.isEmpty) return None
-    val latest = manifests.maxBy(p =>
-      p.getFileName.toString.stripPrefix("snapshot-").stripSuffix(".tsv").toLong)
-    Some(readManifest(latest))
-  }
+  private def log(root: String) = ManifestLog(root, "snapshot")
+
+  def lastSnapshot(root: String): Option[Snapshot] =
+    log(root).latest.map { case (_, lines) => parse(lines) }
 
   /** Time travel (Iceberg's `VERSION AS OF`): the manifest committed as
     * snapshot `id`, when it still exists ([[expireSnapshots]] may have
@@ -54,17 +50,15 @@ object SnapshotStore {
     * until NO retained manifest references them, so a historical
     * manifest reconstructs that snapshot's exact table state — including
     * its file stats, so ranged reads prune against the state AS OF then. */
-  def snapshotAt(root: String, id: Long): Option[Snapshot] = {
-    val p = Paths.get(root).resolve(s"snapshot-$id.tsv")
-    if (Files.isRegularFile(p)) Some(readManifest(p)) else None
-  }
+  def snapshotAt(root: String, id: Long): Option[Snapshot] =
+    log(root).read(id).map(parse)
 
-  private def readManifest(p: Path): Snapshot = {
+  private def parse(lines: Seq[String]): Snapshot = {
     var id = 0L
     val buckets = Set.newBuilder[Int]
     val dirs = Vector.newBuilder[String]
     val files = Vector.newBuilder[FileStats]
-    Files.readAllLines(p, StandardCharsets.UTF_8).asScala.foreach { line =>
+    lines.foreach { line =>
       line.split('\t') match {
         case Array("snapshot", v) => id = v.toLong
         case Array("bucket", v)   => buckets += v.toInt
@@ -81,21 +75,12 @@ object SnapshotStore {
     * File stats are deduped by path — a repeated backfill of the same dir
     * (e.g. a formerly-unnormalizable relative root) must not accumulate
     * duplicate entries that pruneFiles would feed to the reader twice. */
-  def commitManifest(root: String, s: Snapshot): Unit = {
-    val dir = Paths.get(root)
-    Files.createDirectories(dir)
-    val body = new StringBuilder()
-    body ++= s"snapshot\t${s.id}\n"
-    s.buckets.toVector.sorted.foreach(b => body ++= s"bucket\t$b\n")
-    s.dataDirs.foreach(d => body ++= s"dir\t$d\n")
-    s.files.distinctBy(_.path).foreach { f =>
-      body ++= s"file\t${f.path}\t${f.tsMin}\t${f.tsMax}\t${f.hostMin}\t${f.hostMax}\n"
-    }
-    val tmp = dir.resolve(s"snapshot-${s.id}.tsv.tmp")
-    Files.write(tmp, body.toString.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, dir.resolve(s"snapshot-${s.id}.tsv"),
-      StandardCopyOption.ATOMIC_MOVE)
-  }
+  def commitManifest(root: String, s: Snapshot): Unit =
+    log(root).commit(s.id, Vector(s"snapshot\t${s.id}") ++
+      s.buckets.toVector.sorted.map(b => s"bucket\t$b") ++
+      s.dataDirs.map(d => s"dir\t$d") ++
+      s.files.distinctBy(_.path).map(f =>
+        s"file\t${f.path}\t${f.tsMin}\t${f.tsMax}\t${f.hostMin}\t${f.hostMax}"))
 
   /** Compute per-file min/max stats for a freshly-written data dir: ONE
     * column-pruned scan of (warcTs, url) grouped by the physical file.
@@ -294,25 +279,16 @@ object SnapshotStore {
   }
 
   /** Snapshot expiry: drop all but the newest `keepLast` manifests and
-    * delete data dirs no surviving manifest references. */
+    * delete data dirs no surviving manifest references. The current
+    * snapshot never expires (Iceberg's rule), so `keepLast` must be >= 1. */
   def expireSnapshots(root: String, keepLast: Int = 1): Unit = {
-    val dir = Paths.get(root)
-    if (!Files.isDirectory(dir)) return
-    val manifests = Files.list(dir).iterator().asScala
-      .filter(p => p.getFileName.toString.matches("snapshot-\\d+\\.tsv"))
-      .toVector
-      .sortBy(p => p.getFileName.toString.stripPrefix("snapshot-").stripSuffix(".tsv").toLong)
-    if (manifests.length <= keepLast) return
-    val (expire, keep) = manifests.splitAt(manifests.length - keepLast)
-    val live = keep.map(readManifest).flatMap(_.dataDirs).toSet
-    val dead = expire.map(readManifest).flatMap(_.dataDirs).toSet -- live
-    expire.foreach(Files.delete)
-    dead.foreach { d =>
-      val p = Paths.get(d)
-      if (Files.isDirectory(p)) {
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder[Path]())
-          .iterator().asScala.foreach(Files.delete)
-      }
-    }
+    require(keepLast >= 1,
+      s"keepLast must be >= 1 (the current snapshot never expires), got $keepLast")
+    val ids = log(root).ids
+    val (expire, keep) = ids.splitAt(ids.length - keepLast)
+    def dirs(ids: Vector[Long]) = ids.flatMap(snapshotAt(root, _)).flatMap(_.dataDirs).toSet
+    val dead = dirs(expire) -- dirs(keep)
+    expire.foreach(log(root).remove)
+    dead.foreach(d => ManifestLog.deleteRecursively(Paths.get(d)))
   }
 }

@@ -115,4 +115,23 @@ class VectorStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     val e3 = intercept[IllegalArgumentException] { VectorStore.append(root2, e) }
     assert(e3.getMessage.contains("no centroids"), e3.getMessage)
   }
+
+  test("a create that failed before its centroids were published can be retried") {
+    val e = vectors(0 until 64)
+    val root = Files.createTempDirectory("graft-vs-retry").toString
+    VectorStore.create(root, e, Dim, nCells = 4, sampleSize = 32)
+    // roll back to what a crash between params.tsv and centroids/ leaves
+    import scala.jdk.CollectionConverters._
+    Files.list(Paths.get(root)).iterator().asScala.toVector.filter { p =>
+      val n = p.getFileName.toString
+      n == "centroids" || n.startsWith("inc-") || n.startsWith("manifest-")
+    }.foreach(p => Files.walk(p).iterator().asScala.toVector.reverse.foreach(Files.delete))
+    assert(Files.exists(Paths.get(root, "params.tsv")))
+    assert(VectorStore.create(root, e, Dim, nCells = 4, sampleSize = 32) == 1L)
+    val queries = e.filter(col("vec_id") < 6)
+    val viaStore = rows(VectorStore.topK(spark, root, queries, k = 3))
+    val recompute = rows(Similarity.ivfTopK(e, queries, k = 3, Dim,
+      nCells = 4, nProbe = 2, sampleSize = 32))
+    assert(viaStore == recompute && viaStore.nonEmpty)
+  }
 }
