@@ -1288,13 +1288,12 @@ object SparkEntry {
     graft.ops.Dedup.incrementalNew(seen, batch).orderBy(col("doc_id"))
   }
 
-  /** Incremental NEAR-dup crawl dedup: documents is the seen corpus; the
-    * planted batch = suffix-injected near-copies (re-crawls with
-    * boilerplate drift — each ≥ 0.5 Jaccard to its source) + genuinely
-    * fresh docs. [[graft.ops.Dedup.incrementalNearDup]] keeps only the
-    * fresh ones. */
-  private def qIncrementalNearDup(s: SparkSession, dir: String): DataFrame = {
-    val docs = t(s, dir, "documents")
+  /** The planted near-dup batch over the seen corpus `docs`:
+    * suffix-injected near-copies (re-crawls with boilerplate drift — each
+    * ≥ 0.5 Jaccard to its source) + genuinely fresh docs. ONE plant for
+    * q_incremental_neardup and q_store_neardup, which keeps the two paths
+    * row-identical by construction (they share one oracle). */
+  private def nearDupBatch(docs: DataFrame): DataFrame = {
     val nearCopies = docs.filter(col("doc_id") % 10 === 0)
       .select((col("doc_id") + 2000000L).as("doc_id"),
         concat(col("text"), lit(" near dup copy")).as("text"))
@@ -1302,26 +1301,27 @@ object SparkEntry {
       .select((col("doc_id") + 3000000L).as("doc_id"),
         concat(lit("entirely fresh synthetic content block "),
           col("doc_id") + 3000000L, lit(" qq ww ee rr tt")).as("text"))
-    graft.ops.Dedup.incrementalNearDup(docs, nearCopies.union(fresh), 0.5)
+    nearCopies.union(fresh)
+  }
+
+  /** Incremental NEAR-dup crawl dedup: documents is the seen corpus, the
+    * batch is [[nearDupBatch]]; [[graft.ops.Dedup.incrementalNearDup]]
+    * keeps only the fresh docs. */
+  private def qIncrementalNearDup(s: SparkSession, dir: String): DataFrame = {
+    val docs = t(s, dir, "documents")
+    graft.ops.Dedup.incrementalNearDup(docs, nearDupBatch(docs), 0.5)
   }
 
   /** Cross-crawl near-dup dedup against a PERSISTED band-key store
-    * (VERDICT r7 #2): the q_incremental_neardup plant, but the seen
+    * (VERDICT r7 #2): the same [[nearDupBatch]] plant, but the seen
     * corpus's signatures are committed once to a NearDupStore and the
     * batch joins the STORED keys — same oracle SQL as the recompute path
     * (the two paths must be row-identical by construction). */
   private def qStoreNearDup(s: SparkSession, dir: String): DataFrame = {
     val docs = t(s, dir, "documents")
-    val nearCopies = docs.filter(col("doc_id") % 10 === 0)
-      .select((col("doc_id") + 2000000L).as("doc_id"),
-        concat(col("text"), lit(" near dup copy")).as("text"))
-    val fresh = docs.filter(col("doc_id") % 10 === 5)
-      .select((col("doc_id") + 3000000L).as("doc_id"),
-        concat(lit("entirely fresh synthetic content block "),
-          col("doc_id") + 3000000L, lit(" qq ww ee rr tt")).as("text"))
     val root = java.nio.file.Files.createTempDirectory("graft-ndstore").toString
     graft.ops.NearDupStore.append(root, docs)
-    graft.ops.NearDupStore.incrementalNearDup(root, nearCopies.union(fresh), 0.5)
+    graft.ops.NearDupStore.incrementalNearDup(root, nearDupBatch(docs), 0.5)
   }
 
   /** Text normalization over a deterministically-messied corpus (the

@@ -55,8 +55,6 @@ object HtmlExtractor {
     * plain flow — very short link-bearing fragments are chrome. */
   val MinWordsLinked = 5
 
-  private[core] val MultiSpace = java.util.regex.Pattern.compile("\\s{2,}")
-
   final case class Result(blocks: Vector[Block], tables: Vector[TableCand], images: Vector[ImageRef])
 
   def extract(bytes: Array[Byte]): Result = {

@@ -276,10 +276,6 @@ object PdfLayout {
     }
   }
 
-  /** Flat reading order (leaves concatenated). */
-  def xyCut(runs: Vector[TextRun], refSize: Double): Vector[TextRun] =
-    xyCutLeaves(runs, refSize).flatten
-
   /** Largest interior gap of merged intervals: (gapStart, gapEnd, width). */
   private def largestGap(iv: Vector[(Double, Double)]): Option[(Double, Double, Double)] = {
     val sorted = iv.sortBy(_._1)

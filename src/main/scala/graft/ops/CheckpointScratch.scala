@@ -145,7 +145,13 @@ object CheckpointScratch {
     * Results are unaffected by construction: every float reduction in
     * the loop operators is a keyed two-level ordered fold, partition-
     * and strategy-independent (the repo's bit-exactness contract), and
-    * AQE never changes query semantics. */
+    * AQE never changes query semantics.
+    *
+    * Caveat: AQE off also means no skew-join handling inside the scope.
+    * A giant component whose label joins against most of the edge set
+    * runs that join key in one task per round; a caller expecting such
+    * a hot label gains more from AQE's skew split than from the static
+    * layout and should not enter this scope. */
   def withStaticLoopPlan[T](spark: org.apache.spark.sql.SparkSession,
       bytesHint: Long)(body: => T): T = {
     if (bytesHint <= 0L) return body

@@ -312,47 +312,28 @@ object Dedup {
     *
     * Shuffles: one on band keys (16 bytes + id per row × bands), one
     * self-join per bucket (bounded by bucket size), one distinct. The
-    * verify joins the per-doc SHINGLE-HASH ARRAYS (computed once, eagerly
-    * checkpointed — the jaccardBlockedPairs discipline) and intersects
-    * 8-byte longs via `array_intersect` arithmetic: the old form re-joined
-    * both RAW texts and a UDF re-shingled each side of every candidate
-    * pair, so a doc in P pairs crossed the verify shuffle P times as full
-    * text and was tokenized P times (VERDICT r4 #2). Distinct hash arrays
-    * make |a∩b|/(|a|+|b|−|a∩b|) the exact set Jaccard. */
+    * verify ([[verifyPairs]]) joins the per-doc SHINGLE-HASH ARRAYS
+    * (computed once, eagerly checkpointed) and intersects 8-byte longs,
+    * never raw text: a doc in P candidate pairs crosses the verify
+    * shuffle P times as its hash array and is tokenized once. */
   def minhashLsh(docs: DataFrame, threshold: Double, numHashes: Int = 64,
       bands: Int = 16, shingleK: Int = 3,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val shUdf = udf((text: String) =>
-      shingleHashes(if (text == null) "" else text, shingleK))
     // shingle ONCE per doc; everything downstream (band keys + both verify
     // sides) consumes this checkpointed frame — without it each consumer
     // re-runs the shingling over the full corpus
-    val base = docs.select(col(idCol).as("id"), shUdf(col(textCol)).as("shs"))
-      .transform(CheckpointScratch.ckpt)
-    val bandUdf = udf((shs: Seq[Long]) =>
-      lshBandKeys(minhashFromHashes(shs.toArray, numHashes), bands))
-    // the band-key explode carries ONLY (id, key): carrying text/shingles
-    // here would amplify them ×bands through the shuffle — the classic LSH
-    // scale trap.
-    val keyed = base.select(col("id"), explode(bandUdf(col("shs"))).as("band_key"))
+    val base = CheckpointScratch.ckpt(shingleFrame(docs, shingleK, idCol, textCol))
+    val keyed = bandKeyFrame(base, numHashes, bands)
     val cands = keyed.select(col("band_key"), col("id").as("id_a"))
       .join(keyed.select(col("band_key"), col("id").as("id_b")), Seq("band_key"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
-    // shingle-hash arrays rejoin once per side, only for surviving candidates
-    val inter = size(array_intersect(col("sa"), col("sb"))).cast("double")
-    cands
-      .join(base.select(col("id").as("id_a"), col("shs").as("sa")), Seq("id_a"))
-      .join(base.select(col("id").as("id_b"), col("shs").as("sb")), Seq("id_b"))
-      .withColumn("jaccard",
-        when(size(col("sa")) === 0 && size(col("sb")) === 0, lit(1.0))
-          .otherwise(inter / (size(col("sa")) + size(col("sb")) - inter)))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
+    verifyPairs(cands, base, base, "shs", threshold)
   }
 
-  /** Exact shingle-set Jaccard (the verify stage). */
+  /** Exact shingle-set Jaccard of two texts — the scalar reference for
+    * the distributed verify ([[scorePairs]]). */
   def jaccard(a: String, b: String, k: Int): Double = {
     val sa = shingleHashes(if (a == null) "" else a, k).toSet
     val sb = shingleHashes(if (b == null) "" else b, k).toSet
@@ -469,8 +450,8 @@ object Dedup {
     * Verify uses the minhashLsh discipline (VERDICT r5 #6 — this was the
     * last text-carrying pair verify): shingle-hash each doc ONCE into a
     * checkpointed distinct `Array[Long]`, self-join (blk, id) only, and
-    * rejoin the hash arrays per candidate side for `array_intersect`
-    * arithmetic. The win over the old form is WHAT crosses the shuffle
+    * rejoin the hash arrays per candidate side in [[verifyPairs]]. The
+    * win over the old form is WHAT crosses the shuffle
     * and the removal of the per-pair UDF re-shingling — NOT the fan-out:
     * a doc in P candidate pairs still ships its shingle-hash array P
     * times (~8 B/shingle, roughly text-sized at k = 3), where it used to
@@ -480,24 +461,15 @@ object Dedup {
     * sets). */
   def ngramJaccardPairs(docs: DataFrame, blockCol: String, threshold: Double, k: Int = 3,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val shUdf = udf((text: String) => shingleHashes(if (text == null) "" else text, k))
     val base = docs.select(col(blockCol).as("blk"), col(idCol).as("id"),
-        shUdf(col(textCol)).as("shs"))
+        shingleSet(col(textCol), k).as("shs"))
       .transform(CheckpointScratch.ckpt)
     val slim = base.select(col("blk"), col("id"))
     val cands = slim.select(col("blk"), col("id").as("id_a"))
       .join(slim.select(col("blk"), col("id").as("id_b")), Seq("blk"))
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
-    val inter = size(array_intersect(col("sa"), col("sb"))).cast("double")
-    cands
-      .join(base.select(col("id").as("id_a"), col("shs").as("sa")), Seq("id_a"))
-      .join(base.select(col("id").as("id_b"), col("shs").as("sb")), Seq("id_b"))
-      .withColumn("jaccard",
-        when(size(col("sa")) === 0 && size(col("sb")) === 0, lit(1.0))
-          .otherwise(inter / (size(col("sa")) + size(col("sb")) - inter)))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jaccard"), 4).as("jaccard"))
+    verifyPairs(cands, base, base, "shs", threshold)
   }
 
   /** Resolve near-duplicate PAIRS into clusters — the step between pair
@@ -814,14 +786,16 @@ object Dedup {
       batch, threshold, numHashes, bands, shingleK, idCol, textCol)
   }
 
+  /** The per-doc hashed-shingle SET column ([[shingleHashes]] of the
+    * null-safe text) — the one shingling every near-dup path runs. */
+  private def shingleSet(text: Column, k: Int): Column =
+    udf((t: String) => shingleHashes(if (t == null) "" else t, k)).apply(text)
+
   /** The per-doc hashed-shingle frame (id, shs) — the ONE signature prep
-    * both near-dup paths and the persisted key store share. */
+    * the near-dup paths and the persisted key store share. */
   private[ops] def shingleFrame(docs: DataFrame, shingleK: Int,
-      idCol: String, textCol: String): DataFrame = {
-    val shUdf = udf((text: String) =>
-      shingleHashes(if (text == null) "" else text, shingleK))
-    docs.select(col(idCol).as("id"), shUdf(col(textCol)).as("shs"))
-  }
+      idCol: String, textCol: String): DataFrame =
+    docs.select(col(idCol).as("id"), shingleSet(col(textCol), shingleK).as("shs"))
 
   /** LSH band keys (id, band_key) off a shingle frame — 16 bytes + id per
     * row × bands; the exploded frame never carries text or shingles. */
@@ -841,24 +815,16 @@ object Dedup {
       batch: DataFrame, threshold: Double,
       numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    require(threshold > 0.0 && threshold <= 1.0,
-      s"threshold must be in (0,1], got $threshold")
     val bBase = CheckpointScratch.ckpt(
       shingleFrame(batch, shingleK, idCol, textCol))
+    // id_a = batch doc, id_b = seen doc
     val cands = bandKeyFrame(bBase, numHashes, bands)
-      .select(col("id").as("id_b"), col("band_key"))
-      .join(seenKeyed.select(col("id").as("id_s"), col("band_key")), Seq("band_key"))
-      .select(col("id_b"), col("id_s"))
-      .dropDuplicates("id_b", "id_s")
-    val inter = size(array_intersect(col("sa"), col("sb"))).cast("double")
-    val dupIds = cands
-      .join(bBase.select(col("id").as("id_b"), col("shs").as("sb")), Seq("id_b"))
-      .join(seenBase.select(col("id").as("id_s"), col("shs").as("sa")), Seq("id_s"))
-      .withColumn("j",
-        when(size(col("sa")) === 0 && size(col("sb")) === 0, lit(1.0))
-          .otherwise(inter / (size(col("sa")) + size(col("sb")) - inter)))
-      .filter(col("j") >= threshold)
-      .select(col("id_b").as(idCol)).distinct()
+      .select(col("id").as("id_a"), col("band_key"))
+      .join(seenKeyed.select(col("id").as("id_b"), col("band_key")), Seq("band_key"))
+      .select(col("id_a"), col("id_b"))
+      .dropDuplicates("id_a", "id_b")
+    val dupIds = verifyPairs(cands, bBase, seenBase, "shs", threshold)
+      .select(col("id_a").as(idCol)).distinct()
     batch.select(col(idCol), col(textCol))
       .join(dupIds, Seq(idCol), "left_anti")
   }
@@ -868,35 +834,64 @@ object Dedup {
     * that prunes most pairs BEFORE the per-pair set intersection. The 1e-9
     * slack keeps the bound conservative under float rounding (a boundary
     * pair like |A|=40,|B|=50,t=0.8 is exactly reachable and must survive
-    * to the exact verify; extra survivors are harmless). ONE definition —
-    * both jaccard paths must stay recall-identical. */
+    * to the exact verify; extra survivors are harmless). Applied in ONE
+    * place, [[scorePairs]], so every near-dup pair operator prunes alike
+    * and none can lose recall to it. */
   private def sizeBound(threshold: Double) =
     least(size(col("wa")), size(col("wb"))).cast("double") >=
       lit(threshold) * greatest(size(col("wa")), size(col("wb"))).cast("double") - lit(1e-9)
 
-  /** Naive blocked self-join — optimal for small blocks. Jaccard uses
-    * |a∩b| / (|a|+|b|−|a∩b|): one hash-set pass per pair instead of
-    * computing both intersect and union (arrays are distinct, so the
-    * identity is exact and the result matches the |union| formulation). */
-  def jaccardBlockedPairs(docs: DataFrame, blockCol: String, threshold: Double,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    // tokenize ONCE per doc and materialize: `words` is a lazy projection,
-    // and without the checkpoint the self-join re-tokenizes every doc once
-    // per candidate pair (~block-size times — the r2 2.2× regression).
-    // Tokens are pre-hashed to 64-bit so the per-pair intersect compares
-    // 8-byte longs instead of strings (xxhash64 collisions are ~2⁻⁶⁴ —
-    // far below the 4-decimal jaccard rounding).
-    val base = docs.select(col(blockCol).as("blk"), col(idCol).as("id"),
-      array_distinct(transform(split(col(textCol), " "), t => xxhash64(t))).as("words"))
-      .transform(CheckpointScratch.ckpt)
-    val a = base.select(col("blk"), col("id").as("id_a"), col("words").as("wa"))
-    val b = base.select(col("blk"), col("id").as("id_b"), col("words").as("wb"))
+  /** The exact set-Jaccard rule every near-dup pair operator keeps or
+    * drops a pair by, over (id_a, id_b, wa, wb) rows of hashed sets.
+    * Arrays are distinct, so |a∩b| / (|a|+|b|−|a∩b|) is the exact set
+    * Jaccard from one hash-set pass per pair (no union is built); two
+    * empty sets score 1.0. [[sizeBound]] prunes first. Keeps pairs with
+    * jaccard ≥ threshold (compared before rounding) as
+    * (id_a, id_b, jaccard rounded to 4 places). */
+  private def scorePairs(pairs: DataFrame, threshold: Double): DataFrame = {
+    require(threshold > 0.0 && threshold <= 1.0,
+      s"threshold must be in (0,1], got $threshold")
+    val (na, nb) = (size(col("wa")), size(col("wb")))
     val inter = size(array_intersect(col("wa"), col("wb"))).cast("double")
-    a.join(b, Seq("blk")).filter(col("id_a") < col("id_b") && sizeBound(threshold))
+    pairs.filter(sizeBound(threshold))
       .withColumn("jac",
-        inter / (size(col("wa")) + size(col("wb")) - inter))
+        when(na === 0 && nb === 0, lit(1.0)).otherwise(inter / (na + nb - inter)))
       .filter(col("jac") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("jac"), 4).as("jaccard"))
+  }
+
+  /** [[scorePairs]] for candidate (id_a, id_b) pairs: re-attaches each
+    * side's hashed set (column `set` of the (id, set) frames `a` and `b`)
+    * once per side, only for surviving candidates — the sets never ride
+    * the candidate-generation shuffles. */
+  private def verifyPairs(cands: DataFrame, a: DataFrame, b: DataFrame,
+      set: String, threshold: Double): DataFrame =
+    scorePairs(cands
+      .join(a.select(col("id").as("id_a"), col(set).as("wa")), Seq("id_a"))
+      .join(b.select(col("id").as("id_b"), col(set).as("wb")), Seq("id_b")),
+      threshold)
+
+  /** The per-doc hashed WORD-set frame (blk, id, words), checkpointed —
+    * q_jaccard_pairs' `array_distinct(split(text, ' '))` words, each
+    * pre-hashed to 64 bits so the per-pair intersect compares 8-byte
+    * longs instead of strings (xxhash64 collisions are ~2⁻⁶⁴ — far below
+    * the 4-decimal jaccard rounding). Materialized because `words` is a
+    * lazy projection: without the checkpoint every consumer re-tokenizes
+    * (the blocked self-join once per candidate pair, ~block-size times —
+    * the r2 2.2× regression). */
+  private def wordSetFrame(docs: DataFrame, blockCol: String,
+      idCol: String, textCol: String): DataFrame =
+    CheckpointScratch.ckpt(docs.select(col(blockCol).as("blk"), col(idCol).as("id"),
+      array_distinct(transform(split(col(textCol), " "), t => xxhash64(t))).as("words")))
+
+  /** Naive blocked self-join — optimal for small blocks. The self-join
+    * already carries both word sets, so it scores directly. */
+  def jaccardBlockedPairs(docs: DataFrame, blockCol: String, threshold: Double,
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val base = wordSetFrame(docs, blockCol, idCol, textCol)
+    val a = base.select(col("blk"), col("id").as("id_a"), col("words").as("wa"))
+    val b = base.select(col("blk"), col("id").as("id_b"), col("words").as("wb"))
+    scorePairs(a.join(b, Seq("blk")).filter(col("id_a") < col("id_b")), threshold)
   }
 
   /** Word-set Jaccard pairs via PREFIX FILTERING (AllPairs/PPJoin family,
@@ -916,14 +911,10 @@ object Dedup {
   def jaccardPrefixPairs(docs: DataFrame, blockCol: String, threshold: Double,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // same once-per-doc hashed tokenization as the blocked path: `base` is
-    // consumed three times (token explode + both verify sides) and would
-    // otherwise re-run the tokenizer per consumer. Prefix filtering is
-    // order-agnostic: any consistent global token order (here: frequency,
-    // ties by hash) preserves exact recall.
-    val base = docs.select(col(blockCol).as("blk"), col(idCol).as("id"),
-      array_distinct(transform(split(col(textCol), " "), t => xxhash64(t))).as("words"))
-      .transform(CheckpointScratch.ckpt)
+    // `base` is consumed three times (token explode + both verify sides).
+    // Prefix filtering is order-agnostic: any consistent global token
+    // order (here: frequency, ties by hash) preserves exact recall.
+    val base = wordSetFrame(docs, blockCol, idCol, textCol)
     val n = size(col("words"))
     val toks = base.select(col("blk"), col("id"),
       (n - ceil(lit(threshold) * n) + 1).cast("int").as("pl"),
@@ -940,16 +931,7 @@ object Dedup {
       .filter(col("id_a") < col("id_b"))
       .select(col("id_a"), col("id_b"))
       .dropDuplicates("id_a", "id_b")
-    val sides = base.select(col("id"), col("words"))
-    val inter = size(array_intersect(col("wa"), col("wb"))).cast("double")
-    cands
-      .join(sides.select(col("id").as("id_a"), col("words").as("wa")), Seq("id_a"))
-      .join(sides.select(col("id").as("id_b"), col("words").as("wb")), Seq("id_b"))
-      .filter(sizeBound(threshold))
-      .withColumn("jac",
-        inter / (size(col("wa")) + size(col("wb")) - inter))
-      .filter(col("jac") >= threshold)
-      .select(col("id_a"), col("id_b"), round(col("jac"), 4).as("jaccard"))
+    verifyPairs(cands, base, base, "words", threshold)
   }
 
   /** Split-LEAKAGE scrub — benchmark decontamination applied to an

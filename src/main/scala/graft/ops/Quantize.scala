@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 
 /** Int8 scalar quantization for embedding columns — the FAISS SQ8 scale
   * path (Jégou et al., "Product Quantization for Nearest Neighbor
@@ -120,12 +119,7 @@ object Quantize {
     val q = queries.select(col("vec_id").as("query_id"), col("embedding").as("qv"))
     val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .withColumn("cos", round(Similarity.cosine(col("rv"), col("qv")), 4))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"),
-        col("rank").cast("long").as("rank"))
+    Similarity.rankTopK(scored, "cos", k)
   }
 
   /** Lloyd-trained PQ codebooks — per-subspace k-means on the L2 metric
@@ -201,11 +195,6 @@ object Quantize {
       .withColumn("qcos", round(
         qdot(col("cq"), col("qq")).cast("double")
           / (sqrt(col("cn").cast("double")) * sqrt(col("qn").cast("double"))), 4))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("qcos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("qcos"),
-        col("rank").cast("long").as("rank"))
+    Similarity.rankTopK(scored, "qcos", k)
   }
 }

@@ -30,44 +30,42 @@ import org.apache.spark.sql.functions._
   */
 object Robots {
 
-  /** (isAllow, prefix) rules for user-agent `*` from one robots.txt
-    * body. Never throws. */
-  def parseBody(body: String): Seq[(Boolean, String)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(Boolean, String)]
+  /** The ONE robots.txt line scanner both parsers read: every
+    * `key: value` directive line of the body, in order, as (lower-case
+    * key, value, inStarGroup). Comments (#…) are stripped and CRLF/CR/LF
+    * all split lines. inStarGroup is the stanza rule: stacked User-agent
+    * lines form one group, and a User-agent line after a group-scoped
+    * directive (Allow, Disallow, Crawl-delay) starts a NEW group; other
+    * keys (Sitemap, unknown) leave the stanza intact. Never throws. */
+  private def directives(body: String): Seq[(String, String, Boolean)] = {
     var agentsSawStar = false
-    var inRules = false // a rule line closed the current user-agent stanza
-    body.split("\r\n|\n|\r", -1).foreach { raw =>
-      val noComment = {
-        val i = raw.indexOf('#')
-        if (i >= 0) raw.substring(0, i) else raw
-      }
-      val line = noComment.trim
-      if (line.nonEmpty) {
-        val ci = line.indexOf(':')
-        if (ci > 0) {
-          val key = line.substring(0, ci).trim.toLowerCase(java.util.Locale.ROOT)
-          val value = line.substring(ci + 1).trim
-          key match {
-            case "user-agent" =>
-              if (inRules) { agentsSawStar = false; inRules = false }
-              if (value == "*") agentsSawStar = true
-            case "disallow" | "allow" =>
-              inRules = true
-              if (agentsSawStar && value.nonEmpty)
-                out += ((key == "allow", value))
-            case "crawl-delay" =>
-              // group-scoped like the path rules: it must CLOSE the
-              // stanza or a following User-agent line would stack onto
-              // this group (parseBodyMeta shares the boundary rule —
-              // one body, one grouping)
-              inRules = true
-            case _ => () // sitemap, unknown — ignored, stanza intact
-          }
+    var inRules = false // a group-scoped line closed the user-agent stanza
+    body.split("\r\n|\n|\r", -1).toSeq.flatMap { raw =>
+      val i = raw.indexOf('#')
+      val line = (if (i >= 0) raw.substring(0, i) else raw).trim
+      val ci = line.indexOf(':')
+      if (ci <= 0) None
+      else {
+        val key = line.substring(0, ci).trim.toLowerCase(java.util.Locale.ROOT)
+        val value = line.substring(ci + 1).trim
+        key match {
+          case "user-agent" =>
+            if (inRules) { agentsSawStar = false; inRules = false }
+            if (value == "*") agentsSawStar = true
+          case "disallow" | "allow" | "crawl-delay" => inRules = true
+          case _ => ()
         }
+        Some((key, value, agentsSawStar))
       }
     }
-    out.toSeq
   }
+
+  /** (isAllow, prefix) rules for user-agent `*` from one robots.txt
+    * body. Never throws. */
+  def parseBody(body: String): Seq[(Boolean, String)] =
+    directives(body).collect {
+      case (k @ ("allow" | "disallow"), v, true) if v.nonEmpty => (k == "allow", v)
+    }
 
   /** Per-host politeness metadata from one robots body: the `*`-group
     * Crawl-delay (de-facto extension — seconds; the SMALLEST valid
@@ -77,42 +75,10 @@ object Robots {
     * the file, first-occurrence order, duplicates dropped). Never
     * throws. */
   def parseBodyMeta(body: String): (Option[Long], Seq[String]) = {
-    var delay: Option[Long] = None
-    val sitemaps = scala.collection.mutable.LinkedHashSet.empty[String]
-    var agentsSawStar = false
-    var inRules = false
-    body.split("\r\n|\n|\r", -1).foreach { raw =>
-      val noComment = {
-        val i = raw.indexOf('#')
-        if (i >= 0) raw.substring(0, i) else raw
-      }
-      val line = noComment.trim
-      if (line.nonEmpty) {
-        val ci = line.indexOf(':')
-        if (ci > 0) {
-          val key = line.substring(0, ci).trim.toLowerCase(java.util.Locale.ROOT)
-          val value = line.substring(ci + 1).trim
-          key match {
-            case "user-agent" =>
-              if (inRules) { agentsSawStar = false; inRules = false }
-              if (value == "*") agentsSawStar = true
-            case "disallow" | "allow" => inRules = true
-            case "crawl-delay" =>
-              inRules = true // group-scoped like the path rules
-              if (agentsSawStar)
-                value.toLongOption.filter(_ >= 0L).foreach { d =>
-                  delay = Some(delay.fold(d)(math.min(_, d)))
-                }
-            case "sitemap" =>
-              // global: group state untouched (RFC 9309 treats unknown
-              // lines as transparent; sitemaps.org defines file scope)
-              if (value.nonEmpty) sitemaps += value
-            case _ => ()
-          }
-        }
-      }
-    }
-    (delay, sitemaps.toSeq)
+    val ds = directives(body)
+    (ds.collect { case ("crawl-delay", v, true) => v.toLongOption.filter(_ >= 0L) }
+      .flatten.minOption,
+      ds.collect { case ("sitemap", v, _) if v.nonEmpty => v }.distinct)
   }
 
   /** Per-host politeness metadata table: (hostCol, crawl_delay,

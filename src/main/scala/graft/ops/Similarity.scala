@@ -41,6 +41,19 @@ object Similarity {
     graft.functions.functions.graft_cosine(a, b)
   }
 
+  /** The top-k rank every vector top-k operator returns: over scored
+    * (query_id, neighbor_id, scoreCol) rows, the first k neighbors per
+    * query by (score desc, neighbor id asc) — deterministic on ties.
+    * Output: (query_id, neighbor_id, scoreCol, rank BIGINT from 1). */
+  private[ops] def rankTopK(scored: DataFrame, scoreCol: String, k: Int): DataFrame = {
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col(scoreCol).desc, col("neighbor_id"))
+    scored.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("neighbor_id"), col(scoreCol),
+        col("rank").cast("long").as("rank"))
+  }
+
   /** Brute-force top-k cosine neighbors for each query vector.
     * `corpus(vec_id, embedding)`, `queries(vec_id, embedding)`.
     * Rank is deterministic: (rounded cosine desc, neighbor id asc). */
@@ -50,12 +63,7 @@ object Similarity {
     val c = corpus.select(col("vec_id").as("neighbor_id"), col("embedding").as("cv"))
     val scored = c.join(broadcast(q), col("query_id") =!= col("neighbor_id"))
       .withColumn("cos", round(cosine(col("qv"), col("cv")), 4))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"),
-        col("rank").cast("long").as("rank"))
+    rankTopK(scored, "cos", k)
   }
 
   /** Deterministic random hyperplanes: plane(p)(d) from splitmix64. */
@@ -90,12 +98,7 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .dropDuplicates("query_id", "neighbor_id")
       .withColumn("cos", round(cosine(col("qv"), col("cv")), 4))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"),
-        col("rank").cast("long").as("rank"))
+    rankTopK(scored, "cos", k)
   }
 
   /** IVF-flat approximate top-k (the other classic ANN scale path next to
@@ -150,12 +153,7 @@ object Similarity {
       .filter(col("query_id") =!= col("neighbor_id"))
       .dropDuplicates("query_id", "neighbor_id")
       .withColumn("cos", round(cosine(col("qv"), col("cv")), 4))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos").desc, col("neighbor_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("cos"),
-        col("rank").cast("long").as("rank"))
+    rankTopK(scored, "cos", k)
   }
 
   /** Deterministic coarse quantizer: seeds = first nCells vectors by id,

@@ -72,16 +72,4 @@ object MetricsJob {
       .withColumn("pass_all",
         col("pass_wer") && col("pass_cer") && col("pass_precision") && col("pass_recall"))
   }
-
-  /** Per-doc unweighted means (A5) — NaN (not null) for empty page sets,
-    * matching np.mean-of-empty (error_rate_detection.py:159-170). */
-  def docMeans(perPage: DataFrame, keys: Seq[String], metrics: Seq[String]): DataFrame = {
-    val aggs = metrics.map(m => avg(col(m)).as(s"avg_$m"))
-    var out = perPage.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    metrics.foreach { m =>
-      out = out.withColumn(s"avg_$m",
-        coalesce(col(s"avg_$m"), lit(Double.NaN)))
-    }
-    out
-  }
 }

@@ -123,6 +123,39 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(out.count(_._3) == 2)       // exactly two clusters remain
   }
 
+  test("near-dup pair operators refuse a threshold outside (0, 1]") {
+    // 80 for 0.8 used to return no pairs, so dedup silently did nothing
+    val d = docsDF(Seq((1L, "a b c d"), (2L, "a b c e")))
+      .withColumn("source", lit("s"))
+    def refused(op: => Any): Unit = {
+      val e = intercept[IllegalArgumentException](op)
+      assert(e.getMessage.contains("threshold"), e.getMessage)
+    }
+    refused(Dedup.minhashLsh(d, 1.5))
+    refused(Dedup.jaccardAdaptivePairs(d, "source", 0.0))
+    refused(Dedup.dedupCorpus(d, 80.0))
+    refused(Dedup.ngramJaccardPairs(d, "source", -0.1))
+    refused(Dedup.jaccardBlockedPairs(d, "source", 2.0))
+    refused(Dedup.jaccardPrefixPairs(d, "source", 0.0))
+    refused(Dedup.incrementalNearDup(d, d, 0.0))
+  }
+
+  test("shingle-set verify keeps the exact size-bound boundary pair and scores empty sets 1.0") {
+    import spark.implicits._
+    // 42 vs 52 distinct words → 40 vs 50 shingles (k = 3), A ⊂ B: J is
+    // exactly 0.8 = t and |A| = t·|B|, the tightest pair the size
+    // prefilter must let through; two empty texts are identical sets
+    val a = (1 to 42).map(i => s"w$i").mkString(" ")
+    val b = (1 to 52).map(i => s"w$i").mkString(" ")
+    val d = docsDF(Seq((1L, a), (2L, b), (3L, ""), (4L, null)))
+      .withColumn("source", lit("s"))
+    val want = Set((1L, 2L, 0.8), (3L, 4L, 1.0))
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select($"id_a", $"id_b", $"jaccard").as[(Long, Long, Double)].collect().toSet
+    assert(pairs(Dedup.ngramJaccardPairs(d, "source", 0.8)) == want)
+    assert(pairs(Dedup.minhashLsh(d, 0.8)) == want)
+  }
+
   test("simhash: identical → distance 0; near → small; far → large") {
     val a = (1 to 80).map(i => s"w$i").mkString(" ")
     val b = (1 to 80).map(i => if (i % 40 == 0) s"B$i" else s"w$i").mkString(" ")
