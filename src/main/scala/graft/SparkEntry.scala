@@ -502,7 +502,7 @@ object SparkEntry {
     * container-level facts (type, payload size) — the stats a crawl
     * triage pass reads before committing to full extraction. */
   private def xWarc(s: SparkSession, dir: String): DataFrame =
-    graft.sources.Warc.readRecords(s, warcFixture(s, dir) + "/*.warc.gz")
+    s.read.format("warc").load(warcFixture(s, dir) + "/*.warc.gz")
       .select(col("rec_idx"), col("warc_type"), col("url"), col("n_bytes"))
 
   /** E1: pages → salted repartition → parse/classify → text surface. */

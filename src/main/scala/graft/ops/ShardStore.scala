@@ -78,16 +78,6 @@ object ShardStore {
     (r.getLong(0), r.getLong(1))
   }
 
-  /** (root, salt, maxPerShard, idCol) combinations whose committed
-    * assignment this JVM already fingerprint-verified — exportAll calls
-    * export (→ ensureAssignment) once per commit unit, and re-hashing the
-    * input ids per unit would rescan the corpus exactly the way the unit
-    * loop already must not. A CHANGED parameter re-keys and re-verifies;
-    * changed docs under identical params within one JVM ride the cache
-    * (the stale-dir-from-a-prior-run case always verifies — fresh JVM). */
-  private val verifiedRoots =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** The committed epoch-order assignment: computed + committed exactly
     * once (atomic directory rename — a crash mid-write leaves only the
     * tmp dir, retried next run); every later call reads the parquet back,
@@ -95,10 +85,10 @@ object ShardStore {
     *
     * EVALUATION COUNT: the first commit evaluates `docs` ONCE — only its
     * id column is checkpointed (8 B per doc), and the fingerprint, the
-    * range sampler and the range shuffle all read that checkpoint. A
-    * resume in a fresh JVM evaluates `docs` once more for the fingerprint
-    * check; within one JVM a verified store evaluates nothing. The read-
-    * back uses the assignment's known schema, so it runs no job.
+    * range sampler and the range shuffle all read that checkpoint. Every
+    * call on an already-committed store evaluates `docs` once for the
+    * fingerprint check ([[exportAll]] calls this once, not per unit). The
+    * read-back uses the assignment's known schema, so it runs no job.
     *
     * `params.tsv` INSIDE the assignment dir pins (salt, maxPerShard,
     * idCol, input row count, input id-hash): a resume with different docs
@@ -108,8 +98,8 @@ object ShardStore {
   def ensureAssignment(docs: DataFrame, root: String, maxPerShard: Long,
       salt: String = "epoch0", idCol: String = "doc_id"): DataFrame = {
     val spark = docs.sparkSession
+    Files.createDirectories(Paths.get(root))
     val aDir = Paths.get(root, "assignment")
-    val vKey = s"$root\u0000$salt\u0000$maxPerShard\u0000$idCol"
     if (!Files.isDirectory(aDir)) {
       ManifestLog(root).publish("assignment") { tmp =>
         val ids = CheckpointScratch.ckpt(docs.select(col(idCol)))
@@ -120,8 +110,7 @@ object ShardStore {
         ManifestLog.writeParams(tmp.resolve("_params.tsv"), Seq("salt" -> salt,
           "maxPerShard" -> maxPerShard, "idCol" -> idCol, "n" -> n, "idHash" -> idHash))
       }
-      verifiedRoots.add(vKey)
-    } else if (!verifiedRoots.contains(vKey)) {
+    } else {
       // pre-fingerprint stores (no _params.tsv) stay readable
       ManifestLog.readParams(aDir.resolve("_params.tsv")).foreach { kv =>
         val (n, idHash) = inputFingerprint(docs, idCol)
@@ -135,7 +124,6 @@ object ShardStore {
             s"(${diffs.mkString("; ")}) — delete the store or use a new root; " +
             "silently reusing it would drop new ids / ignore changed params")
       }
-      verifiedRoots.add(vKey) // only AFTER a pass — a failed verify must re-run
     }
     // every column is BIGINT: epochOrder casts the id to long
     val schema = StructType(Seq(idCol, "epoch_pos", "shard_id").map(StructField(_, LongType)))
@@ -150,26 +138,28 @@ object ShardStore {
     * always a contiguous suffix and one `between` filter selects a unit.
     *
     * COST NOTE: a fresh export evaluates `docs` twice — once for the id
-    * checkpoint inside [[ensureAssignment]], once for the unit write. The
-    * shard table is arithmetic (no job), so every further unit costs one
-    * more evaluation of `docs` and nothing else: `exportAll` with a small
-    * `maxShardsPerCommit` re-scans the corpus once per unit. Units exist
-    * for RESUME granularity, not throughput; the default (one unit =
-    * everything pending) scans once. For a deliberately small unit size
-    * over an expensive upstream plan, localCheckpoint `docs` first so each
-    * unit reads materialized partitions. */
+    * checkpoint inside [[ensureAssignment]], once for the unit write; an
+    * export on a committed store likewise twice (fingerprint check, unit
+    * write). The shard table is arithmetic (no job), so every further
+    * unit costs one more evaluation of `docs` and nothing else:
+    * `exportAll` with a small `maxShardsPerCommit` re-scans the corpus
+    * once per unit. Units exist for RESUME granularity, not throughput;
+    * the default (one unit = everything pending) scans once. For a
+    * deliberately small unit size over an expensive upstream plan,
+    * localCheckpoint `docs` first so each unit reads materialized
+    * partitions. */
   def export(docs: DataFrame, root: String, maxPerShard: Long,
       salt: String = "epoch0", idCol: String = "doc_id",
       maxShards: Int = Int.MaxValue): Manifest =
-    exportStep(docs, root, maxPerShard, salt, idCol, maxShards)._1
+    exportStep(docs, ensureAssignment(docs, root, maxPerShard, salt, idCol),
+      root, maxPerShard, idCol, maxShards)._1
 
-  /** [[export]] plus whether the returned manifest holds every shard. */
-  private def exportStep(docs: DataFrame, root: String, maxPerShard: Long,
-      salt: String, idCol: String, maxShards: Int): (Manifest, Boolean) = {
+  /** [[export]] over an already-ensured assignment, plus whether the
+    * returned manifest holds every shard. */
+  private def exportStep(docs: DataFrame, assignment: DataFrame, root: String,
+      maxPerShard: Long, idCol: String, maxShards: Int): (Manifest, Boolean) = {
     require(maxShards >= 1, s"maxShards must be >= 1, got $maxShards")
     val spark = docs.sparkSession
-    Files.createDirectories(Paths.get(root))
-    val assignment = ensureAssignment(docs, root, maxPerShard, salt, idCol)
     // a store written before _params.tsv existed pays one count job
     val n = ManifestLog.readParams(Paths.get(root, "assignment", "_params.tsv"))
       .flatMap(_.get("n")).map(_.toLong)
@@ -206,13 +196,16 @@ object ShardStore {
   }
 
   /** Drive `export` until every shard is committed; stops on the step
-    * that commits the last shard. */
+    * that commits the last shard. The assignment is ensured (committed or
+    * fingerprint-verified) once for the whole loop. */
   def exportAll(docs: DataFrame, root: String, maxPerShard: Long,
       salt: String = "epoch0", idCol: String = "doc_id",
       maxShardsPerCommit: Int = Int.MaxValue): Manifest = {
-    var (m, complete) = exportStep(docs, root, maxPerShard, salt, idCol, maxShardsPerCommit)
+    val assignment = ensureAssignment(docs, root, maxPerShard, salt, idCol)
+    def step() = exportStep(docs, assignment, root, maxPerShard, idCol, maxShardsPerCommit)
+    var (m, complete) = step()
     while (!complete) {
-      val (next, c) = exportStep(docs, root, maxPerShard, salt, idCol, maxShardsPerCommit)
+      val (next, c) = step()
       m = next
       complete = c
     }

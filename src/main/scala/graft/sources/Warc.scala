@@ -442,17 +442,18 @@ object Warc {
   // Distributed readers
   // ---------------------------------------------------------------------
 
-  /** File paths under `path` matching the WARC suffixes, as a Dataset of
-    * path strings — content is NEVER read driver- or shuffle-side; each
-    * task opens its own FS stream (binaryFile is used for LISTING only,
-    * with the `content` column pruned away). */
-  private def listPaths(spark: SparkSession, path: String): DataFrame =
-    spark.read.format("binaryFile").load(path).select("path")
+  /** The file rule every WARC reader applies to every listed file
+    * ([[readPages]], `format("warc")` and its stream): only these
+    * suffixes are read, so sidecars (`_SUCCESS`, `.crc`, a `.bak` copy)
+    * never become input and never ingest a url twice. */
+  private val Suffixes = Seq(".warc", ".warc.gz", ".wet.gz")
 
-  /** Open one file as a streamed record iterator on an executor. The
-    * stream closes at task completion even when the iterator is not
-    * drained (limit/failure). */
-  private def openRecords(pathStr: String,
+  def isWarcFile(path: String): Boolean = Suffixes.exists(path.endsWith)
+
+  /** Open one file as a streamed record iterator on an executor — the one
+    * opener of every distributed reader. The stream closes at task
+    * completion even when the iterator is not drained (limit/failure). */
+  private[sources] def openRecords(pathStr: String,
       conf: org.apache.hadoop.conf.Configuration): Iterator[Record] = {
     val p = new org.apache.hadoop.fs.Path(pathStr)
     val it =
@@ -466,34 +467,21 @@ object Warc {
     }
   }
 
-  /** Low-level record table: one row per well-formed record across every
-    * `.warc`/`.warc.gz`/`.wet.gz` under `path`. Narrow (no shuffle);
-    * per-task memory is bounded by ONE record, not one file. */
-  def readRecords(spark: SparkSession, path: String): DataFrame = {
-    import spark.implicits._
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    listPaths(spark, path).as[String]
-      .flatMap { file =>
-        openRecords(file, conf.value).zipWithIndex.map { case (r, i) =>
-          (file, i.toLong, r.warcType, r.targetUri, r.date,
-            r.payload.length.toLong, r.payload)
-        }
-      }
-      .toDF("file", "rec_idx", "warc_type", "url", "warc_date", "n_bytes", "payload")
-  }
-
   /** `pages`-schema view (the `input_hint` shape): `response` records
     * yield html bytes (HTTP headers stripped) with `text = null`;
     * `conversion` (WET) records yield decoded text with `html = null`;
     * `lang` comes from `WARC-Identified-Content-Language` when a WET
     * writer recorded one. Other record types (warcinfo, request,
-    * metadata) are skipped — they carry no page. */
+    * metadata) are skipped — they carry no page. Files are listed through
+    * `binaryFile` with its `content` column pruned (listing and partition
+    * packing only; each task opens its own FS stream) and kept by
+    * [[isWarcFile]]. The record table is `format("warc")`. */
   def readPages(spark: SparkSession, path: String): DataFrame = {
     import spark.implicits._
     val conf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
-    listPaths(spark, path).as[String]
+    spark.read.format("binaryFile").load(path).select("path").as[String]
+      .filter(isWarcFile _)
       .flatMap { file =>
         openRecords(file, conf.value).collect {
           case r if r.warcType == "response" && r.targetUri != null =>

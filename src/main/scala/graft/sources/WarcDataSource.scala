@@ -18,9 +18,10 @@ import org.apache.spark.util.SerializableConfiguration
 
 /** DataSource V2 WARC reader — `spark.read.format("warc").load(path)`.
   *
-  * The idiomatic-Spark packaging of [[Warc.readRecords]]: the same
-  * never-throw streaming [[Warc.RecordIterator]] does the parsing, but
-  * the engine sees a real `Table` with
+  * The WARC record table: files are listed by [[Warc.isWarcFile]] and
+  * opened by [[Warc.openRecords]] (the same never-throw streaming
+  * [[Warc.RecordIterator]] as [[Warc.readPages]]), and the engine sees a
+  * real `Table` with
   *
   *  - one `InputPartition` per FILE (Common-Crawl's unit of work — a
   *    gzip member stream has no random access, so a file is the natural
@@ -35,8 +36,8 @@ import org.apache.spark.util.SerializableConfiguration
   *    `explain`, AQE sees its statistics interface, and `format("warc")`
   *    resolves via `DataSourceRegister` (META-INF/services).
   *
-  * Schema (= [[Warc.readRecords]]): file, rec_idx, warc_type, url,
-  * warc_date, n_bytes, payload. `n_bytes` stays available when
+  * Schema: file, rec_idx, warc_type, url, warc_date, n_bytes,
+  * payload. `n_bytes` stays available when
   * `payload` is pruned — the iterator knows the length without keeping
   * the bytes. Unreadable files contribute zero rows (first-mile
   * never-throw contract, as everywhere in [[Warc]]). */
@@ -64,30 +65,24 @@ object WarcDataSource {
     StructField("n_bytes", LongType, nullable = false),
     StructField("payload", BinaryType, nullable = true)))
 
-  /** Recursive file listing under `path` (a file, a directory, or a
-    * comma-less glob) — driver-side metadata only, content untouched. */
+  /** Recursive listing of the non-empty WARC files ([[Warc.isWarcFile]])
+    * under `path` (a file, a directory, or a comma-less glob), sorted —
+    * driver-side metadata only, content untouched. The batch scan and
+    * the stream's offsets both read it, so a sidecar is never a
+    * partition. */
   private[sources] def listFiles(path: String): Seq[String] = {
-    val spark = SparkSession.active
     val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
     val roots: Seq[FileStatus] =
       Option(fs.globStatus(p)).map(_.toSeq).getOrElse(Nil) match {
         case Nil => if (fs.exists(p)) Seq(fs.getFileStatus(p)) else Nil
         case gs  => gs
       }
-    // directory walks keep only WARC-suffixed files — sidecars (_SUCCESS,
-    // .crc, fixture markers) otherwise became zero-row input partitions
-    // and fed the streaming offsets (ADVICE r8); an explicitly named
-    // single file is honored as-is (the caller's intent is unambiguous)
-    def isWarc(n: String): Boolean =
-      n.endsWith(".warc") || n.endsWith(".warc.gz") || n.endsWith(".wet.gz")
-    val out = Seq.newBuilder[String]
-    def walk(st: FileStatus, explicit: Boolean): Unit =
-      if (st.isDirectory) fs.listStatus(st.getPath).foreach(walk(_, explicit = false))
-      else if (st.getLen > 0 && (explicit || isWarc(st.getPath.getName)))
-        out += st.getPath.toString
-    roots.foreach(st => walk(st, explicit = st.isFile))
-    out.result().sorted
+    def walk(st: FileStatus): Seq[String] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
+      else if (st.getLen > 0 && Warc.isWarcFile(st.getPath.getName)) Seq(st.getPath.toString)
+      else Nil
+    roots.flatMap(walk).sorted
   }
 }
 
@@ -173,33 +168,19 @@ private[sources] class WarcReaderFactory(conf: SerializableConfiguration,
 }
 
 /** Streams one file's records; memory is bounded by one record (the
-  * [[Warc.RecordIterator]] contract). Closing mid-scan (limit, task
-  * kill) closes the underlying FS stream. */
+  * [[Warc.RecordIterator]] contract). The task ending mid-scan (limit,
+  * task kill) closes the underlying FS stream. */
 private[sources] class WarcPartitionReader(file: String,
     conf: SerializableConfiguration, fieldNames: Array[String])
     extends PartitionReader[InternalRow] {
 
   private val fileUtf8 = UTF8String.fromString(file)
-  private var it: Warc.RecordIterator = _
-  private var failedOpen = false
+  private val it = Warc.openRecords(file, conf.value)
   private var idx = -1L
   private var current: Warc.Record = _
 
-  private def iter(): Warc.RecordIterator = {
-    if (it == null && !failedOpen) {
-      try {
-        val p = new Path(file)
-        it = new Warc.RecordIterator(p.getFileSystem(conf.value).open(p))
-      } catch { case scala.util.control.NonFatal(_) => failedOpen = true }
-    }
-    it
-  }
-
-  override def next(): Boolean = {
-    val i = iter()
-    if (i == null || !i.hasNext) false
-    else { current = i.next(); idx += 1; true }
-  }
+  override def next(): Boolean =
+    it.hasNext && { current = it.next(); idx += 1; true }
 
   override def get(): InternalRow = {
     val r = current
@@ -214,5 +195,6 @@ private[sources] class WarcPartitionReader(file: String,
     })
   }
 
-  override def close(): Unit = if (it != null) it.close()
+  // the stream is closed by the task-completion listener openRecords registers
+  override def close(): Unit = ()
 }

@@ -14,44 +14,18 @@ import org.apache.spark.util.SerializableConfiguration
   * driver state Spark's own FileStreamSource keeps in its metadata
   * log. The serialization MUST be one line: Spark's OffsetSeqLog is a
   * line-based file (version line, metadata line, then one line per
-  * source offset) — the earlier newline-joined form corrupted the
-  * checkpoint for any offset holding ≥ 2 files, so a restart either
-  * failed on offset-count mismatch or resumed from a truncated file
-  * set (ADVICE r8, high). */
+  * source offset), so a raw newline — between files, or inside a path —
+  * would split the offset. Jackson escapes every control character. */
 private[graft] case class WarcFilesOffset(files: Set[String]) extends Offset {
-  override def json(): String =
-    files.toSeq.sorted
-      .map(f => "\"" + f.replace("\\", "\\\\").replace("\"", "\\\"") + "\"")
-      .mkString("[", ",", "]")
+  override def json(): String = WarcFilesOffset.Json.writeValueAsString(files.toArray.sorted)
 }
 
 private[graft] object WarcFilesOffset {
-  def fromJson(j: String): WarcFilesOffset = {
-    if (j == null || j.isEmpty || j == "[]") return WarcFilesOffset(Set.empty)
-    if (j.startsWith("[")) {
-      // minimal JSON string-array parser (no external deps): walks the
-      // quoted elements honoring backslash escapes
-      val out = Set.newBuilder[String]
-      var i = 0
-      val sb = new StringBuilder
-      var inStr = false
-      while (i < j.length) {
-        val c = j.charAt(i)
-        if (!inStr) {
-          if (c == '"') { inStr = true; sb.clear() }
-          i += 1
-        } else if (c == '\\' && i + 1 < j.length) {
-          sb.append(j.charAt(i + 1)); i += 2
-        } else if (c == '"') {
-          out += sb.toString; inStr = false; i += 1
-        } else { sb.append(c); i += 1 }
-      }
-      WarcFilesOffset(out.result())
-    } else {
-      // legacy newline-joined form (pre-r9 checkpoints): still readable
-      WarcFilesOffset(j.split("\n").toSet)
-    }
-  }
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  def fromJson(j: String): WarcFilesOffset =
+    if (j.isEmpty) WarcFilesOffset(Set.empty)
+    else WarcFilesOffset(Json.readValue(j, classOf[Array[String]]).toSet)
 }
 
 /** Micro-batch stream over a growing directory of WARC files — the

@@ -2,7 +2,7 @@ package graft.spark
 
 import graft.core._
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -69,11 +69,6 @@ object ExtractJob {
       math.max(4 * math.ceil(maxHost / ideal).toInt, 2 * partitions))
   }
 
-  private def pageEnc(spark: SparkSession): Encoder[PageRow] = {
-    import spark.implicits._
-    implicitly[Encoder[PageRow]]
-  }
-
   /** Salted repartition keyed on (host, salt): spreads a mega-host over
     * `saltBuckets` tasks while keeping co-host locality for everything
     * else. `parse_url` is Catalyst-native — stays in codegen.
@@ -91,27 +86,35 @@ object ExtractJob {
       parse_url(col("url"), lit("HOST")),
       pmod(xxhash64(col("url")), lit(saltBuckets)))
 
-  /** `salted = true` input shaping: the caller asked for a repartition
-    * (their input is badly laid out), so one ALWAYS happens — what the
-    * probe decides is only whether the keys need a salt component and how
-    * wide. Balanced hosts → plain round-robin repartition to `parts`
-    * (parallelism guaranteed, no skew keys); skewed → (host, salt) keys
-    * with the probed fan-out. Note the probe is an EAGER aggregate — the
-    * salted path trades one cheap url-column scan at construction for the
-    * right shuffle shape. */
-  private def shapeInput(pages: DataFrame, parts: Int): DataFrame = {
-    val s = probeSaltBuckets(pages, parts)
-    if (s == 0) pages.repartition(parts) else saltRepartition(pages, parts, s)
+  /** The typed page input of [[extractTexts]] and [[extractDocs]].
+    * `salted = false` passes the input layout through untouched. With
+    * `salted = true` the caller asked for a repartition (their input is
+    * badly laid out), so one ALWAYS happens to `defaultParallelism`
+    * partitions — what the probe decides is only whether the keys need a
+    * salt component and how wide. Balanced hosts → plain round-robin
+    * repartition (parallelism guaranteed, no skew keys); skewed →
+    * (host, salt) keys with the probed fan-out. Note the probe is an
+    * EAGER aggregate — the salted path trades one cheap url-column scan
+    * at construction for the right shuffle shape. */
+  private def shapeInput(spark: SparkSession, pages: DataFrame,
+      salted: Boolean): Dataset[PageRow] = {
+    import spark.implicits._
+    val in =
+      if (!salted) pages
+      else {
+        val parts = spark.sparkContext.defaultParallelism
+        val s = probeSaltBuckets(pages, parts)
+        if (s == 0) pages.repartition(parts) else saltRepartition(pages, parts, s)
+      }
+    in.as[PageRow]
   }
 
   /** Full extraction to the lean schema, one narrow pass (zero shuffle
     * unless `salted`). */
-  def extractTexts(spark: SparkSession, pages: DataFrame, partitions: Int = 0,
+  def extractTexts(spark: SparkSession, pages: DataFrame,
       salted: Boolean = false): Dataset[ExtractedText] = {
     import spark.implicits._
-    val parts = if (partitions > 0) partitions else spark.sparkContext.defaultParallelism
-    val in = if (salted) shapeInput(pages, parts) else pages
-    in.as[PageRow](pageEnc(spark))
+    shapeInput(spark, pages, salted)
       .mapPartitions { it =>
         val pid = TaskContext.getPartitionId()
         val t0 = System.nanoTime()
@@ -172,13 +175,10 @@ object ExtractJob {
   /** Full extraction with the complete block/table/image trees (for
     * provenance, metrics, and table sinks). Narrow by default, like
     * [[extractTexts]]. */
-  def extractDocs(spark: SparkSession, pages: DataFrame, partitions: Int = 0,
+  def extractDocs(spark: SparkSession, pages: DataFrame,
       salted: Boolean = false): Dataset[ExtractedDoc] = {
     import spark.implicits._
-    val parts = if (partitions > 0) partitions else spark.sparkContext.defaultParallelism
-    val in = if (salted) shapeInput(pages, parts) else pages
-    in.as[PageRow](pageEnc(spark))
-      .mapPartitions(_.map(Extractor.extract))
+    shapeInput(spark, pages, salted).mapPartitions(_.map(Extractor.extract))
   }
 
   /** Provenance records with the W1 running-section label

@@ -186,12 +186,13 @@ object SnapshotStore {
       // nothing to extract — but a FULLY-committed store can still carry a
       // partially-covered manifest (legacy/intermediate builds); repair it
       // here or ranged reads keep pruning the uncovered dirs' rows forever
-      // (the backfill below this guard would never be reached again)
-      val missing = uncoveredDirs(prev)
-      if (missing.isEmpty) return prev
+      // (the backfill below this guard would never be reached again). A
+      // dir whose run wrote no rows stays uncovered and adds no stats, so
+      // only a backfill that finds stats commits a new snapshot.
+      val backfill = uncoveredDirs(prev).flatMap(d => collectFileStats(spark, d))
+      if (backfill.isEmpty) return prev
       val repaired = Snapshot(prev.id + 1, prev.buckets, prev.dataDirs,
-        (prev.files ++ missing.flatMap(d => collectFileStats(spark, d)))
-          .distinctBy(_.path))
+        (prev.files ++ backfill).distinctBy(_.path))
       commitManifest(root, repaired)
       return repaired
     }

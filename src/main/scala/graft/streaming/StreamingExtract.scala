@@ -26,7 +26,8 @@ object StreamingExtract {
   def extractStream(spark: SparkSession, pages: Dataset[PageRow]): Dataset[StreamedDoc] = {
     import spark.implicits._
     pages.mapPartitions(_.map { row =>
-      val d = Extractor.extract(row)
+      // text-only: StreamedDoc carries no image payloads, so none are inflated
+      val d = Extractor.extract(row, decodeImages = false)
       StreamedDoc(d.url, d.text, d.nPages, d.extractor, d.usedFallback, row.warc_ts)
     })
   }

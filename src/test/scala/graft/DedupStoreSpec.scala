@@ -148,5 +148,11 @@ class DedupStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
         dir, maxPerShard = 11)
     }
     assert(e2.getMessage.contains("does not match"), e2.getMessage)
+    // new ids under the params of the commit, in the JVM that made it
+    val moved = (100 until 150).map(i => (i.toLong, s"doc $i")).toDF("doc_id", "text")
+    val e3 = intercept[IllegalArgumentException] {
+      graft.ops.ShardStore.exportAll(moved, dir, maxPerShard = 10)
+    }
+    assert(e3.getMessage.contains("does not match"), e3.getMessage)
   }
 }

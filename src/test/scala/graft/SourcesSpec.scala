@@ -201,7 +201,7 @@ class SourcesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(rows.find(_.getString(0) == "https://w.example/t1").get
       .getAs[java.sql.Timestamp]("warc_ts") == null)
     // record-level surface
-    val recRows = Warc.readRecords(spark, dir.toString + "/*.warc.gz").collect()
+    val recRows = spark.read.format("warc").load(dir.toString + "/*.warc.gz").collect()
     assert(recRows.length == 11 && recRows.count(_.getString(2) == "response") == 7)
   }
 

@@ -355,6 +355,18 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(SnapshotStore.readCommitted(spark, root).get.select($"url").distinct().count() == 150)
   }
 
+  test("snapshot over empty input: no-op runs commit no further snapshot") {
+    val root = java.nio.file.Files.createTempDirectory("graft-snap-empty").toString
+    val empty = PagesTable.pagesDF(spark, 20).limit(0)
+    val s1 = SnapshotStore.run(spark, empty, root, runId = "r1", nBuckets = 4)
+    assert(s1.id == 1 && s1.buckets.size == 4 && s1.files.isEmpty)
+    assert(SnapshotStore.readCommitted(spark, root).get.count() == 0L)
+    // the run wrote no rows, so its dir has no stats to backfill
+    assert(SnapshotStore.run(spark, empty, root, runId = "r2", nBuckets = 4).id == s1.id)
+    assert(SnapshotStore.run(spark, empty, root, runId = "r3", nBuckets = 4).id == s1.id)
+    assert(SnapshotStore.lastSnapshot(root).map(_.id) == Some(s1.id))
+  }
+
   test("snapshot time travel: AS OF reads a prior snapshot byte-identically, even after compaction") {
     import spark.implicits._
     val root = java.nio.file.Files.createTempDirectory("graft-snap-tt").toString

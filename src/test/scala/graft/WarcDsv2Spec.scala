@@ -10,8 +10,8 @@ import org.scalatest.BeforeAndAfterAll
 import graft.sources.Warc
 
 /** The DataSource V2 packaging of the WARC scanner: format("warc") must
-  * return exactly what Warc.readRecords returns, prune columns into the
-  * reader, and keep the never-throw first-mile contract. */
+  * return exactly what the in-memory Warc.scanRecords returns, prune
+  * columns into the reader, and keep the never-throw first-mile contract. */
 class WarcDsv2Spec extends AnyFunSuite with BeforeAndAfterAll {
 
   @transient lazy val spark: SparkSession = SparkSession.builder()
@@ -37,15 +37,40 @@ class WarcDsv2Spec extends AnyFunSuite with BeforeAndAfterAll {
     d
   }
 
-  test("format(\"warc\") rows = Warc.readRecords rows, byte-for-byte") {
+  test("format(\"warc\") rows = Warc.scanRecords rows, byte-for-byte") {
+    import spark.implicits._
     val key = (df: org.apache.spark.sql.DataFrame) => df
       .select(regexp_extract(col("file"), "([ab])\\.warc\\.gz", 1).as("f"),
         col("rec_idx"), col("warc_type"), col("url"), col("warc_date"),
         col("n_bytes"), xxhash64(col("payload")).as("ph"))
       .collect().map(_.toSeq).toSet
     val v2 = key(spark.read.format("warc").load(dir.toString))
-    val fn = key(Warc.readRecords(spark, dir.toString))
-    assert(v2.nonEmpty && v2 === fn)
+    val inMemory = Seq("a", "b", "junk").flatMap { f =>
+      Warc.scanRecords(Files.readAllBytes(dir.resolve(s"$f.warc.gz"))).zipWithIndex
+        .map { case (r, i) => (s"$f.warc.gz", i.toLong, r.warcType, r.targetUri, r.date,
+          r.payload.length.toLong, r.payload) }
+    }.toDF("file", "rec_idx", "warc_type", "url", "warc_date", "n_bytes", "payload")
+    assert(v2.size == 12 && v2 === key(inMemory))
+  }
+
+  test("sidecars are never input: readPages, format and readStream read a.warc.gz once") {
+    import org.apache.spark.sql.streaming.Trigger
+    // every sidecar holds a full copy of the WARC bytes, so reading any of
+    // them would return each url twice
+    val d = Files.createTempDirectory("graft-warc-sidecars")
+    val bytes = Warc.writeWarcGz((0 until 5).map(rec))
+    Seq("a.warc.gz", "a.warc.gz.bak", "_SUCCESS", ".a.warc.gz.crc")
+      .foreach(n => Files.write(d.resolve(n), bytes))
+    val want = (0 until 5).map(i => s"https://h${i % 3}.example.com/p$i").sorted
+    def urls(df: org.apache.spark.sql.DataFrame) =
+      df.select("url").collect().map(_.getString(0)).toSeq.sorted
+    assert(urls(Warc.readPages(spark, d.toString)) === want, "readPages")
+    assert(urls(spark.read.format("warc").load(d.toString)) === want, "format(\"warc\")")
+    val q = spark.readStream.format("warc").load(d.toString).select("url")
+      .writeStream.format("memory").queryName("warc_sidecars")
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    assert(urls(spark.table("warc_sidecars")) === want, "readStream.format(\"warc\")")
   }
 
   test("column pruning reaches the reader: scan output drops payload") {
@@ -126,15 +151,14 @@ class WarcDsv2Spec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("WarcFilesOffset json is single-line and round-trips multi-file sets") {
-    val off = graft.sources.WarcFilesOffset(
-      Set("/x/a.warc.gz", "/x/b\"quoted\".warc.gz", "/y/c.wet.gz"))
+    // paths may hold a quote, a backslash or a newline: each stays escaped
+    val off = graft.sources.WarcFilesOffset(Set("/x/a.warc.gz", "/x/b\"quoted\".warc.gz",
+      "/y/c.wet.gz", "/x/back\\slash.warc.gz", "/x/new\nline.warc.gz", "/x/all\"\\\n.wet.gz"))
     val j = off.json()
     assert(!j.contains("\n"), s"offset json must be one line: $j")
     assert(graft.sources.WarcFilesOffset.fromJson(j) === off)
-    // legacy (pre-r9) newline-joined checkpoints still deserialize
-    assert(graft.sources.WarcFilesOffset.fromJson("/x/a\n/x/b") ===
-      graft.sources.WarcFilesOffset(Set("/x/a", "/x/b")))
-    assert(graft.sources.WarcFilesOffset.fromJson("") ===
-      graft.sources.WarcFilesOffset(Set.empty))
+    val none = graft.sources.WarcFilesOffset(Set.empty)
+    assert(graft.sources.WarcFilesOffset.fromJson(none.json()) === none)
+    assert(graft.sources.WarcFilesOffset.fromJson("") === none)
   }
 }

@@ -85,7 +85,7 @@ class WarcStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(new String(got.head.payload, UTF_8) == "tiny")
   }
 
-  test("stream path (readRecords over FS) is record-identical to the in-memory byte path") {
+  test("stream path (format(\"warc\") over FS) = in-memory byte path, per record") {
     val recs = (0 until 9).map(i => Warc.responseRecord(s"https://p.example/$i",
       "2024-02-02T00:00:00Z", s"<p>page $i</p>".getBytes(UTF_8))) :+
       Warc.conversionRecord("https://p.example/wet", "2024-02-02T00:00:00Z", "wet text")
@@ -94,7 +94,7 @@ class WarcStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     Files.write(dir.resolve("a.warc.gz"), bytes)
     Files.write(dir.resolve("b.warc"),
       recs.iterator.flatMap(r => Warc.recordBytes(r).iterator).toArray)
-    val viaStream = Warc.readRecords(spark, dir.toString + "/*")
+    val viaStream = spark.read.format("warc").load(dir.toString + "/*")
       .select("url", "n_bytes").collect()
       .map(r => (r.getString(0), r.getLong(1))).sorted
     val viaBytes = (Warc.scanRecords(bytes) ++ Warc.scanRecords(
