@@ -68,11 +68,14 @@ object Features {
     * validates against.
     *
     * Output: (query_id, neighbor_id, rank, cos) — `k` rows per query,
-    * ties broken by neighbor id ascending on the EXACT cosine. */
+    * ranked by [[Similarity.rankTopK]] on the EXACT cosine (ties broken by
+    * neighbor id ascending), then rounded. A zero-norm vector has no
+    * defined cosine: it gets no neighbors and is no one's neighbor. */
   def cosineTopK(feat: DataFrame, queryIds: DataFrame, k: Int = 5): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val n2 = feat.groupBy(col("doc_id"))
       .agg(sum(col("weight") * col("weight")).as("n2"))
+      .filter(col("n2") > 0L)
     val q = feat.join(queryIds.select(col("doc_id")), Seq("doc_id"))
       .select(col("doc_id").as("qid"), col("dim"), col("weight").as("qw"))
     val dots = q.join(
@@ -84,14 +87,10 @@ object Features {
     val scored = dots
       .join(n2.select(col("doc_id").as("qid"), col("n2").as("n2q")), Seq("qid"))
       .join(n2.select(col("doc_id").as("cid"), col("n2").as("n2c")), Seq("cid"))
-      .select(col("qid"), col("cid"),
+      .select(col("qid").as("query_id"), col("cid").as("neighbor_id"),
         (col("dot").cast("double") /
           sqrt(col("n2q").cast("double") * col("n2c").cast("double"))).as("cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("cos").desc, col("cid"))
-    scored.withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid").as("query_id"), col("cid").as("neighbor_id"),
-        col("rank"), round(col("cos"), 4).as("cos"))
+    Similarity.rankTopK(scored, "cos", k)
+      .select(col("query_id"), col("neighbor_id"), col("rank"), round(col("cos"), 4).as("cos"))
   }
 }

@@ -450,6 +450,17 @@ object Warc {
 
   def isWarcFile(path: String): Boolean = Suffixes.exists(path.endsWith)
 
+  /** Spark's hidden-path rule for listed files and directories, which the
+    * `binaryFile` listing of [[readPages]] applies at every level: names
+    * starting with `_` (unless a `key=value` partition dir) or `.`, and
+    * in-flight `._COPYING_` files, are skipped — `_metadata` and
+    * `_common_metadata` excepted. Explicit root paths are not filtered. */
+  def isVisibleName(name: String): Boolean = {
+    val hidden = (name.startsWith("_") && !name.contains("=")) ||
+      name.startsWith(".") || name.endsWith("._COPYING_")
+    !hidden || name.startsWith("_common_metadata") || name.startsWith("_metadata")
+  }
+
   /** Open one file as a streamed record iterator on an executor — the one
     * opener of every distributed reader. The stream closes at task
     * completion even when the iterator is not drained (limit/failure). */

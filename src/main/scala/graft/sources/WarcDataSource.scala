@@ -67,7 +67,9 @@ object WarcDataSource {
 
   /** Recursive listing of the non-empty WARC files ([[Warc.isWarcFile]])
     * under `path` (a file, a directory, or a comma-less glob), sorted —
-    * driver-side metadata only, content untouched. The batch scan and
+    * driver-side metadata only, content untouched. Below the roots, hidden
+    * names are skipped at every level ([[Warc.isVisibleName]]), as the
+    * `binaryFile` listing of `readPages` skips them. The batch scan and
     * the stream's offsets both read it, so a sidecar is never a
     * partition. */
   private[sources] def listFiles(path: String): Seq[String] = {
@@ -79,7 +81,8 @@ object WarcDataSource {
         case gs  => gs
       }
     def walk(st: FileStatus): Seq[String] =
-      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(walk)
+      if (st.isDirectory)
+        fs.listStatus(st.getPath).toSeq.filter(c => Warc.isVisibleName(c.getPath.getName)).flatMap(walk)
       else if (st.getLen > 0 && Warc.isWarcFile(st.getPath.getName)) Seq(st.getPath.toString)
       else Nil
     roots.flatMap(walk).sorted

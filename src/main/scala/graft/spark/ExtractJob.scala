@@ -2,7 +2,7 @@ package graft.spark
 
 import graft.core._
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
@@ -11,8 +11,9 @@ import org.apache.spark.sql.expressions.Window
   * Shape: `pages` scan → salted repartition on url-host (skew defense,
   * SURVEY §4.3) → one narrow typed `mapPartitions` running the whole
   * parse/classify stack on executors (zero further shuffle) → window for
-  * section carry-forward → argmax for best table per page → lineage
-  * counters folded from the same pass.
+  * section carry-forward → argmax for best table per page. Lineage
+  * counters fold inside the same extraction tasks ([[foldLineage]], which
+  * `SnapshotStore.run` uses), never from a second pass.
   *
   * The CPU-heavy work is entirely inside the map; the only shuffles are
   * (a) the explicit salt repartition and (b) the provenance window on
@@ -133,7 +134,9 @@ object ExtractJob {
   }
 
   /** Per-partition lineage rows (SURVEY §4.4) folded from an extraction
-    * pass — `elapsedMs` is monotone per partition so max = total time. */
+    * pass — `elapsedMs` is monotone per partition so max = total time.
+    * A job over `extracted`; the store folds the same rows inside its
+    * extraction tasks instead ([[foldLineage]]). */
   def lineage(extracted: Dataset[ExtractedText], runId: String, snapshotId: Long): DataFrame =
     extracted.groupBy(col("partitionId").as("partition_id"))
       .agg(
@@ -148,6 +151,53 @@ object ExtractJob {
         max(col("warcTs")).as("warc_ts_max"))
       .withColumn("run_id", lit(runId))
       .withColumn("snapshot_id", lit(snapshotId))
+
+  /** The running [[lineage]] row of one extraction partition, column for
+    * column (the aggregates of [[lineage]] folded row by row). */
+  final class LineageFold extends Serializable {
+    private var docs, html, pdf, fallback, tables, bytesIn = 0L
+    private var extractMs, tsMax = Long.MinValue
+    private var tsMin = Long.MaxValue
+
+    def add(e: ExtractedText): Unit = {
+      docs += 1
+      if (e.extractor == "html") html += 1
+      if (e.extractor != null && e.extractor.startsWith("pdf")) pdf += 1
+      if (e.usedFallback) fallback += 1
+      tables += e.nTables
+      bytesIn += e.bytesIn
+      extractMs = math.max(extractMs, e.elapsedMs)
+      tsMin = math.min(tsMin, e.warcTs)
+      tsMax = math.max(tsMax, e.warcTs)
+    }
+
+    def row(partitionId: Int, runId: String, snapshotId: Long): Row =
+      Row(partitionId, docs, html, pdf, fallback, tables, bytesIn, extractMs, tsMin, tsMax,
+        runId, snapshotId)
+  }
+
+  /** Pass-through over `extracted` that folds each task's [[lineage]] rows
+    * into `reports`, keyed by partition id, as the rows stream by. Typed
+    * on typed, so the optimizer drops the encode/decode between this map
+    * and the extraction map: the fold runs inside the extraction tasks. */
+  def foldLineage(extracted: Dataset[ExtractedText],
+      reports: PartitionReports[LineageFold]): Dataset[ExtractedText] = {
+    import extracted.sparkSession.implicits._
+    extracted.mapPartitions(_.map { e =>
+      reports.fold(e.partitionId, new LineageFold).add(e)
+      e
+    })
+  }
+
+  /** The [[lineage]] rows of folded `reports`, with [[lineage]]'s schema. */
+  def lineageRows(spark: SparkSession, reports: Map[Int, LineageFold], runId: String,
+      snapshotId: Long): DataFrame = {
+    import scala.jdk.CollectionConverters._
+    import spark.implicits._
+    val schema = lineage(spark.emptyDataset[ExtractedText], runId, snapshotId).schema
+    val rows = reports.toSeq.sortBy(_._1).map { case (pid, f) => f.row(pid, runId, snapshotId) }
+    spark.createDataFrame(rows.asJava, schema)
+  }
 
   /** One-pass run metrics via `Dataset.observe` (the Observation API):
     * the extraction WRITE and the run-level counter fold share a SINGLE

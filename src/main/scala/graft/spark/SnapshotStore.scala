@@ -1,9 +1,12 @@
 package graft.spark
 
-import java.nio.charset.StandardCharsets
+import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.Paths
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable.ArrayBuffer
+
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.ops.ManifestLog
@@ -26,6 +29,19 @@ import graft.ops.ManifestLog
   * Resume unit = url bucket: `pmod(xxhash64(url), nBuckets)`. A bucket's
   * rows are written by exactly one committed run, so the union of all
   * committed data dirs is exactly-once per url.
+  *
+  * One [[run]] parses each selected page exactly once and never reads back
+  * what it wrote:
+  *   - the write is range-clustered on `(url host, warcTs)`, with bounds
+  *     sampled from a key-only projection of the input pages (a WARC scan,
+  *     no parse) — both keys are known before extraction;
+  *   - lineage rows are folded inside the extraction tasks
+  *     ([[ExtractJob.foldLineage]]);
+  *   - per-file stats are folded inside the write tasks ([[writeWithStats]],
+  *     shared with [[compact]]).
+  * Both folds publish manifest-scale rows through [[PartitionReports]].
+  * [[collectFileStats]] (a scan of written data) remains only for the
+  * backfill of legacy dirs that carry no stats ([[uncoveredDirs]]).
   */
 object SnapshotStore {
 
@@ -82,17 +98,20 @@ object SnapshotStore {
       s.files.distinctBy(_.path).map(f =>
         s"file\t${f.path}\t${f.tsMin}\t${f.tsMax}\t${f.hostMin}\t${f.hostMax}"))
 
-  /** Compute per-file min/max stats for a freshly-written data dir: ONE
+  /** The url host the write layout and the host stats key on. */
+  private def hostOf(url: Column): Column = coalesce(parse_url(url, lit("HOST")), lit(""))
+
+  /** Per-file min/max stats of a committed data dir by scanning it: ONE
     * column-pruned scan of (warcTs, url) grouped by the physical file.
     * The collect is manifest-scale (one row per parquet file), the
     * bounded-collect pattern. Tab/newline are stripped from host bounds so
-    * the TSV manifest stays line-parseable. */
+    * the TSV manifest stays line-parseable. Used only to backfill dirs
+    * with no stats ([[uncoveredDirs]]); fresh writes fold their stats in
+    * the write tasks ([[writeWithStats]]). */
   def collectFileStats(spark: SparkSession, dataDir: String): Vector[FileStats] = {
-    val clean = (c: org.apache.spark.sql.Column) =>
-      regexp_replace(c, "[\\t\\n\\r]", " ")
+    val clean = (c: Column) => regexp_replace(c, "[\\t\\n\\r]", " ")
     spark.read.parquet(dataDir)
-      .select(input_file_name().as("f"), col("warcTs"),
-        clean(coalesce(parse_url(col("url"), lit("HOST")), lit(""))).as("h"))
+      .select(input_file_name().as("f"), col("warcTs"), clean(hostOf(col("url"))).as("h"))
       .groupBy(col("f"))
       .agg(min(col("warcTs")).as("tsMin"), max(col("warcTs")).as("tsMax"),
         min(col("h")).as("hMin"), max(col("h")).as("hMax"))
@@ -107,10 +126,117 @@ object SnapshotStore {
     * Java String `<=` is UTF-16 code-unit order and disagrees for
     * supplementary-plane characters (surrogates sort low), which could
     * wrongly prune a file whose bounds straddle the plane boundary. */
-  private def utf8Lte(a: String, b: String): Boolean = {
-    val ab = a.getBytes(StandardCharsets.UTF_8)
-    val bb = b.getBytes(StandardCharsets.UTF_8)
-    java.util.Arrays.compareUnsigned(ab, bb) <= 0
+  private def utf8Lte(a: String, b: String): Boolean =
+    java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8)) <= 0
+
+  /** A range key `(url host as UTF-8, warcTs)` in Spark's sort order:
+    * strings by unsigned bytes, then the timestamp. */
+  private type Key = (Array[Byte], Long)
+  private val KeyOrder: Ordering[Key] = (a, b) => {
+    val c = java.util.Arrays.compareUnsigned(a._1, b._1)
+    if (c != 0) c else java.lang.Long.compare(a._2, b._2)
+  }
+
+  /** Range bounds on `(host, warcTs)` for at most `n` partitions, taken
+    * from a key-only projection of the input `pages` — a WARC scan, no
+    * parse: extraction keeps one row per page with `warcTs` = `warc_ts` in
+    * epoch millis (null → 0). One job: each input partition keeps a
+    * bounded reservoir sample of its keys (Spark's `RangePartitioner`
+    * sample size: 20 keys per output partition, 3× oversampled), and the
+    * driver picks bounds weighted by each partition's row count, skipping
+    * duplicates — so fewer distinct keys give fewer bounds, never an
+    * empty range. */
+  private def rangeBounds(spark: SparkSession, pages: DataFrame, n: Int): Array[Key] = {
+    import spark.implicits._
+    val keys = pages.select(hostOf(col("url")), coalesce(unix_millis(col("warc_ts")), lit(0L)))
+      .as[(String, Long)]
+    val perPart = math.ceil(3.0 * math.min(20.0 * n, 1e6) /
+      math.max(keys.rdd.getNumPartitions, 1)).toInt
+    val samples = keys.mapPartitions { it =>
+      val rnd = new java.util.Random(TaskContext.getPartitionId())
+      val kept = new Array[(String, Long)](perPart)
+      var seen = 0L
+      it.foreach { k =>
+        if (seen < perPart) kept(seen.toInt) = k
+        else {
+          val j = (rnd.nextDouble() * (seen + 1)).toLong
+          if (j < perPart) kept(j.toInt) = k
+        }
+        seen += 1
+      }
+      Iterator((seen, kept.take(math.min(seen, perPart.toLong).toInt).toSeq))
+    }.collect()
+    val weighted = samples.filter(_._1 > 0).flatMap { case (seen, kept) =>
+      kept.map { case (h, ts) => ((h.getBytes(UTF_8), ts), seen.toDouble / kept.length) }
+    }.sortBy(_._1)(KeyOrder)
+    val step = weighted.map(_._2).sum / n
+    val bounds = ArrayBuffer.empty[Key]
+    var cum = 0.0
+    var target = step
+    weighted.foreach { case (k, w) =>
+      cum += w
+      if (bounds.length < n - 1 && cum >= target &&
+          (bounds.isEmpty || KeyOrder.gt(k, bounds.last))) {
+        bounds += k
+        target += step
+      }
+    }
+    bounds.toArray
+  }
+
+  /** The range partition of each row: the first bound >= its key
+    * (`RangePartitioner`'s rule), so `bounds.length + 1` partitions. */
+  private def rangeId(bounds: Array[Key]): Column =
+    udf((host: String, ts: Long) => bounds.search((host.getBytes(UTF_8), ts))(KeyOrder).insertionPoint)
+      .apply(col("_host"), col("warcTs"))
+
+  /** Min/max of the range key over the rows one write task wrote; hosts
+    * cleaned as [[collectFileStats]] cleans them. */
+  private final class KeyRange extends Serializable {
+    private var hostMin, hostMax: Array[Byte] = _
+    private var tsMin = Long.MaxValue
+    private var tsMax = Long.MinValue
+
+    def add(host: String, ts: java.lang.Long): Unit = {
+      val h = host.replace('\t', ' ').replace('\n', ' ').replace('\r', ' ').getBytes(UTF_8)
+      if (hostMin == null || java.util.Arrays.compareUnsigned(h, hostMin) < 0) hostMin = h
+      if (hostMax == null || java.util.Arrays.compareUnsigned(h, hostMax) > 0) hostMax = h
+      if (ts != null) {
+        tsMin = math.min(tsMin, ts)
+        tsMax = math.max(tsMax, ts)
+      }
+    }
+
+    def stats(path: String): FileStats =
+      FileStats(path, tsMin, tsMax, new String(hostMin, UTF_8), new String(hostMax, UTF_8))
+  }
+
+  private val PartFile = """/part-(\d+)-[^/]*$""".r
+
+  /** Write `keyed` (the data rows plus a `_host` key column, which is not
+    * written) to `dataDir` and return the [[FileStats]] of each non-empty
+    * file written, folded by the write tasks themselves: a pass-through
+    * filter folds min/max of `_host` and `warcTs` per task — the two key
+    * columns, never the text — and each task's report is matched to the
+    * `part-NNNNN` file its partition wrote. Exact per file; should a task
+    * write several files (`maxRecordsPerFile`), the dir is scanned by
+    * [[collectFileStats]] instead. */
+  private def writeWithStats(spark: SparkSession, keyed: DataFrame,
+      dataDir: String): Vector[FileStats] = {
+    val reports = new PartitionReports[KeyRange]
+    spark.sparkContext.register(reports)
+    val fold = udf { (host: String, ts: java.lang.Long) =>
+      reports.fold(TaskContext.getPartitionId(), new KeyRange).add(host, ts)
+      true
+    }.asNondeterministic()
+    val out = keyed.filter(fold(col("_host"), col("warcTs"))).drop("_host")
+    out.write.mode("overwrite").parquet(dataDir)
+    val files = spark.read.schema(out.schema).parquet(dataDir).inputFiles.toVector
+      .groupBy(f => PartFile.findFirstMatchIn(f).map(_.group(1).toInt))
+    val folded = reports.value
+    if (!folded.keys.forall(p => files.get(Some(p)).exists(_.size == 1)))
+      collectFileStats(spark, dataDir)
+    else folded.toVector.map { case (p, r) => r.stats(files(Some(p)).head) }.sortBy(_.path)
   }
 
   /** Committed data dirs with NO file-stats coverage (a legacy manifest,
@@ -166,17 +292,19 @@ object SnapshotStore {
           if (paths.isEmpty) spark.read.parquet(s.dataDirs: _*).limit(0)
           else spark.read.parquet(paths: _*)
         }
-      val hostCol = coalesce(parse_url(col("url"), lit("HOST")), lit(""))
       Seq(
         tsMin.map(col("warcTs") >= _), tsMax.map(col("warcTs") <= _),
-        host.map(hostCol === _)
+        host.map(hostOf(col("url")) === _)
       ).flatten.foldLeft(base)(_.filter(_))
     }
 
   /** One resumable run: extract only the buckets not yet committed, write
     * data + lineage, then commit the next snapshot. `maxBuckets` caps how
     * many pending buckets this run takes (the kill-mid-job test knob).
-    * Returns the committed snapshot. */
+    * `clusterPartitions` > 0 caps the number of range-clustered files; 0
+    * takes `spark.sql.shuffle.partitions`, and AQE does not coalesce the
+    * `repartitionById` shuffle, so that count is not shrunk to a target
+    * file size. Returns the committed snapshot. */
   def run(spark: SparkSession, pages: DataFrame, root: String, runId: String,
       nBuckets: Int = 16, maxBuckets: Int = Int.MaxValue,
       clusterWrite: Boolean = true, clusterPartitions: Int = 0): Snapshot = {
@@ -201,42 +329,42 @@ object SnapshotStore {
       pmod(xxhash64(col("url")), lit(nBuckets)).cast("int"))
     val selected = withBucket.filter(col("_bucket").isin(pending: _*)).drop("_bucket")
 
-    val extracted = ExtractJob.extractTexts(spark, selected)
-    val dataDir = s"$root/data/run-$runId"
+    val lineage = new PartitionReports[ExtractJob.LineageFold]
+    spark.sparkContext.register(lineage)
+    val extracted = ExtractJob.foldLineage(ExtractJob.extractTexts(spark, selected), lineage)
+      .withColumn("_host", hostOf(col("url")))
     // CLUSTER the write layout so the manifest's (host, warcTs) min/max
     // stats are TIGHT per file: the resume unit is a url-HASH bucket, so
     // an as-extracted write gives every data file near-domain-wide host
-    // bounds and pruneFiles on a host range selects everything — the
-    // stats were decorative for store-written data (VERDICT r5 #2).
-    // repartitionByRange assigns each file a contiguous host range (the
-    // range sampler splits a skewed mega-host across files whose bounds
-    // stay the tight [h, h]); the within-partition sort additionally
-    // clusters parquet row groups for min/max skipping inside a file.
-    // clusterWrite=false preserves the caller's input layout (e.g. a
-    // crawl table pre-sorted by fetch time for ts-ranged reads);
-    // clusterPartitions=0 lets AQE size the range partitions (≈ target
-    // file size at scale), >0 pins the file count (tests, compaction).
-    val toWrite =
+    // bounds and pruneFiles on a host range selects everything. Range
+    // partitions give each file a contiguous (host, warcTs) range (a
+    // skewed mega-host splits across files whose bounds stay the tight
+    // [h, h]); the within-partition sort additionally clusters parquet
+    // row groups for min/max skipping inside a file. The bounds come from
+    // the page keys, not the parse (repartitionByRange would sample by
+    // running the whole extraction once more). clusterWrite=false keeps
+    // the caller's input layout (e.g. a crawl table pre-sorted by fetch
+    // time for ts-ranged reads). One partition needs no bounds, and no
+    // key pass runs.
+    val keyed =
       if (!clusterWrite) extracted
       else {
-        val hosted = extracted
-          .withColumn("_host", coalesce(parse_url(col("url"), lit("HOST")), lit("")))
-        val ranged =
-          if (clusterPartitions > 0)
-            hosted.repartitionByRange(clusterPartitions, col("_host"), col("warcTs"))
-          else hosted.repartitionByRange(col("_host"), col("warcTs"))
-        ranged.sortWithinPartitions(col("_host"), col("warcTs")).drop("_host")
+        val n =
+          if (clusterPartitions > 0) clusterPartitions
+          else spark.conf.get("spark.sql.shuffle.partitions").toInt
+        val bounds = if (n == 1) Array.empty[Key] else rangeBounds(spark, selected, n)
+        extracted.repartitionById(bounds.length + 1, rangeId(bounds))
+          .sortWithinPartitions(col("_host"), col("warcTs"))
       }
-    toWrite.write.mode("overwrite").parquet(dataDir)
+    val dataDir = s"$root/data/run-$runId"
+    val written = writeWithStats(spark, keyed, dataDir)
 
-    // lineage folded from the just-written data (one read, column-pruned —
-    // never re-extracts) and committed before the manifest flips.
+    // lineage rows come from the extraction tasks' own folds (one row per
+    // extraction partition, manifest-scale) and are committed before the
+    // manifest flips.
     val snapId = prev.id + 1
-    val lineage = ExtractJob.lineage(
-      spark.read.parquet(dataDir).as[ExtractJob.ExtractedText](
-        { import spark.implicits._; implicitly[org.apache.spark.sql.Encoder[ExtractJob.ExtractedText]] }),
-      runId, snapId)
-    lineage.write.mode("overwrite").parquet(s"$root/lineage/run-$runId")
+    ExtractJob.lineageRows(spark, lineage.value, runId, snapId).coalesce(1)
+      .write.mode("overwrite").parquet(s"$root/lineage/run-$runId")
 
     // manifest column stats: new files always; prior snapshots' entries
     // carry over untouched (files are immutable once committed). Any
@@ -245,13 +373,9 @@ object SnapshotStore {
     // here — committing partial coverage would make readCommittedRange
     // prune away the uncovered dirs' rows silently (its full-scan
     // fallback only fires when files is entirely empty).
-    // stats paths are input_file_name() URIs (file:///...), dataDirs are
-    // plain paths — normalize before the containment check or every dir
-    // reads as uncovered and gets re-scanned each run
-    val uncovered = uncoveredDirs(prev)
-    val prevFiles = prev.files ++ uncovered.flatMap(d => collectFileStats(spark, d))
+    val prevFiles = prev.files ++ uncoveredDirs(prev).flatMap(d => collectFileStats(spark, d))
     val snap = Snapshot(snapId, prev.buckets ++ pending, prev.dataDirs :+ dataDir,
-      (prevFiles ++ collectFileStats(spark, dataDir)).distinctBy(_.path))
+      (prevFiles ++ written).distinctBy(_.path))
     commitManifest(root, snap)
     snap
   }
@@ -272,9 +396,9 @@ object SnapshotStore {
     val prev = lastSnapshot(root).getOrElse(return Snapshot(0L, Set.empty, Vector.empty))
     if (prev.dataDirs.length <= 1) return prev
     val dataDir = s"$root/data/compact-$runId"
-    spark.read.parquet(prev.dataDirs: _*).write.mode("overwrite").parquet(dataDir)
-    val snap = Snapshot(prev.id + 1, prev.buckets, Vector(dataDir),
-      collectFileStats(spark, dataDir))
+    val files = writeWithStats(spark,
+      spark.read.parquet(prev.dataDirs: _*).withColumn("_host", hostOf(col("url"))), dataDir)
+    val snap = Snapshot(prev.id + 1, prev.buckets, Vector(dataDir), files)
     commitManifest(root, snap)
     snap
   }

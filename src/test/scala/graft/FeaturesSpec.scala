@@ -98,6 +98,18 @@ class FeaturesSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(r.forall(_.getDouble(3) === 1.0))
   }
 
+  test("cosineTopK: a zero-norm vector has no neighbors and is no neighbor") {
+    import spark.implicits._
+    // doc 3's weights all cancel to 0: its cosine with anything is 0/0
+    val feat = Seq((1L, 0L, 2L), (1L, 1L, 1L), (2L, 0L, 1L), (2L, 1L, 1L),
+      (3L, 0L, 0L), (3L, 1L, 0L)).toDF("doc_id", "dim", "weight")
+    val out = Features.cosineTopK(feat, feat.select("doc_id").distinct(), k = 5).collect()
+    assert(out.map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet ===
+      Set((1L, 2L, 1L), (2L, 1L, 1L)))
+    assert(out.forall(r => !r.isNullAt(3) && !r.getDouble(3).isNaN))
+    assert(out.head.getDouble(3) === 0.9487)
+  }
+
   test("non-power-of-two width rejected") {
     import spark.implicits._
     intercept[IllegalArgumentException] {

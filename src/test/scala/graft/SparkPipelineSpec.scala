@@ -530,6 +530,127 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"mega-host should not force a full scan: ${mega.size}/${s.files.size}")
   }
 
+  /** Lineage rows of `runId` as committed, and as [[ExtractJob.lineage]]
+    * computes them from the run's written data. */
+  private def lineagePair(root: String, runId: String, snapId: Long) = {
+    import spark.implicits._
+    val committed = spark.read.parquet(s"$root/lineage/run-$runId")
+    val rescan = ExtractJob.lineage(
+      spark.read.parquet(s"$root/data/run-$runId").as[ExtractJob.ExtractedText], runId, snapId)
+    // parquet reads back every column as nullable: compare names and types
+    def cols(df: org.apache.spark.sql.DataFrame) = df.schema.map(f => (f.name, f.dataType))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().toVector.sortBy(_.getInt(0))
+    ((cols(committed), rows(committed)), (cols(rescan), rows(rescan)))
+  }
+
+  /** The manifest entries of the files under `dir`. */
+  private def filesUnder(s: SnapshotStore.Snapshot, dir: String) =
+    s.files.filter(_.path.contains(s"/${java.nio.file.Paths.get(dir).getFileName}/"))
+
+  /** Stage names of the jobs `body` submits; a marker job after it flushes
+    * the listener bus, which delivers events in order. */
+  private def jobsOf(body: => Unit): Vector[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import scala.jdk.CollectionConverters._
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "marker"))
+          marker.countDown()
+        else jobs.add(e.stageInfos.map(_.name).mkString(" | "))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription("marker")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      spark.sparkContext.setJobDescription(null)
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally spark.sparkContext.removeSparkListener(listener)
+    jobs.asScala.toVector
+  }
+
+  test("snapshot folds: committed lineage and file stats equal a re-scan of the written data (run and compact)") {
+    val root = java.nio.file.Files.createTempDirectory("graft-snap-fold").toString
+    val pages = PagesTable.pagesDF(spark, 160, partitions = 5)
+    val s1 = SnapshotStore.run(spark, pages, root, runId = "r1", nBuckets = 8, maxBuckets = 3,
+      clusterPartitions = 3)
+    val s2 = SnapshotStore.run(spark, pages, root, runId = "r2", nBuckets = 8)
+    val rootW = java.nio.file.Files.createTempDirectory("graft-snap-fold-w").toString
+    val w = SnapshotStore.run(spark, pages, rootW, runId = "w1", nBuckets = 2, clusterWrite = false)
+    for ((s, root, runId) <- Seq((s1, root, "r1"), (s2, root, "r2"), (w, rootW, "w1"))) {
+      val (committed, rescan) = lineagePair(root, runId, s.id)
+      assert(committed._2.nonEmpty && committed == rescan, s"lineage of $runId")
+      val dir = s"$root/data/run-$runId"
+      val stats = SnapshotStore.collectFileStats(spark, dir)
+      assert(stats.nonEmpty && filesUnder(s, dir) == stats, s"file stats of $runId")
+    }
+    val c = SnapshotStore.compact(spark, root, runId = "c1")
+    val stats = SnapshotStore.collectFileStats(spark, s"$root/data/compact-c1")
+    assert(stats.nonEmpty && c.files == stats)
+  }
+
+  test("clustered run: at most 5 jobs, one of them the key pass; one partition runs no key pass") {
+    val pages = PagesTable.pagesDF(spark, 150, partitions = 3)
+    val keyPass = (site: String) => site.contains("collect at SnapshotStore.scala")
+    var s: SnapshotStore.Snapshot = null
+    val root = java.nio.file.Files.createTempDirectory("graft-snap-jobs").toString
+    val jobs = jobsOf {
+      s = SnapshotStore.run(spark, pages, root, runId = "r1", nBuckets = 4, clusterPartitions = 4)
+    }
+    assert(s.files.size >= 2, "need at least 2 range partitions")
+    assert(jobs.size <= 5 && jobs.count(keyPass) == 1, jobs.mkString("\n"))
+    val root1 = java.nio.file.Files.createTempDirectory("graft-snap-jobs1").toString
+    val jobs1 = jobsOf {
+      s = SnapshotStore.run(spark, pages, root1, runId = "r1", nBuckets = 4, clusterPartitions = 1)
+    }
+    assert(s.files.size == 1 && !jobs1.exists(keyPass), jobs1.mkString("\n"))
+    assert(jobs1.size == jobs.size - 1, s"${jobs1.mkString("\n")}\nvs\n${jobs.mkString("\n")}")
+  }
+
+  test("key-sampled bounds: one host splits by warcTs; null warc_ts; more partitions than keys; empty buckets") {
+    import spark.implicits._
+    // a single host: every file is [h, h], files split by warcTs
+    val oneHost = PagesTable.pagesDF(spark, 120)
+      .withColumn("url", regexp_replace($"url", "^https://[^/]+/", "https://one.example/"))
+    val root = java.nio.file.Files.createTempDirectory("graft-snap-edge").toString
+    val s = SnapshotStore.run(spark, oneHost, root, runId = "r1", nBuckets = 1, clusterPartitions = 4)
+    assert(s.files.size > 1 && s.files == SnapshotStore.collectFileStats(spark, s"$root/data/run-r1"))
+    assert(s.files.forall(f => f.hostMin == "one.example" && f.hostMax == "one.example"))
+    val byTs = s.files.sortBy(_.tsMin)
+    assert(byTs.zip(byTs.tail).forall { case (a, b) => a.tsMax < b.tsMin }, byTs.mkString("\n"))
+    // null warc_ts: the row commits with warcTs 0 and stats stay exact
+    val nulled = PagesTable.pagesDF(spark, 90)
+      .withColumn("warc_ts", when(pmod(xxhash64($"url"), lit(3)) === 0, lit(null)).otherwise($"warc_ts"))
+    val rootN = java.nio.file.Files.createTempDirectory("graft-snap-null").toString
+    val sN = SnapshotStore.run(spark, nulled, rootN, runId = "r1", nBuckets = 1, clusterPartitions = 3)
+    val committedN = SnapshotStore.readCommitted(spark, rootN).get
+    assert(committedN.count() == 90 && committedN.filter($"warcTs" === 0L).count() > 0)
+    assert(sN.files == SnapshotStore.collectFileStats(spark, s"$rootN/data/run-r1"))
+    val (committed, rescan) = lineagePair(rootN, "r1", sN.id)
+    assert(committed == rescan)
+    // more partitions than distinct keys: no empty file, no stats for absent files
+    val few = PagesTable.pagesDF(spark, 6)
+    val rootF = java.nio.file.Files.createTempDirectory("graft-snap-few").toString
+    val sF = SnapshotStore.run(spark, few, rootF, runId = "r1", nBuckets = 1, clusterPartitions = 40)
+    val parts = java.nio.file.Files.list(java.nio.file.Paths.get(s"$rootF/data/run-r1"))
+      .toArray.map(_.toString).filter(_.endsWith(".parquet"))
+    assert(parts.nonEmpty && parts.length <= 6 && sF.files.size == parts.length)
+    assert(parts.forall(p => spark.read.parquet(p).count() > 0))
+    assert(sF.files == SnapshotStore.collectFileStats(spark, s"$rootF/data/run-r1"))
+    // pending buckets that select zero rows: no rows, no file entry, no lineage row
+    val inBucket0 = PagesTable.pagesDF(spark, 40).filter(pmod(xxhash64($"url"), lit(4)) === 0)
+    val rootE = java.nio.file.Files.createTempDirectory("graft-snap-emptybuckets").toString
+    val e1 = SnapshotStore.run(spark, inBucket0, rootE, runId = "r1", nBuckets = 4, maxBuckets = 1,
+      clusterPartitions = 2)
+    val e2 = SnapshotStore.run(spark, inBucket0, rootE, runId = "r2", nBuckets = 4, clusterPartitions = 2)
+    assert(e2.buckets.size == 4 && e2.files == e1.files)
+    assert(spark.read.parquet(s"$rootE/data/run-r2").count() == 0L)
+    assert(spark.read.parquet(s"$rootE/lineage/run-r2").count() == 0L)
+    assert(SnapshotStore.readCommitted(spark, rootE).get.count() == inBucket0.count())
+  }
+
   test("partially-covered manifest: ranged reads stay complete BEFORE any repair; relative roots normalize") {
     import spark.implicits._
     import scala.jdk.CollectionConverters._

@@ -73,6 +73,23 @@ class WarcDsv2Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(urls(spark.table("warc_sidecars")) === want, "readStream.format(\"warc\")")
   }
 
+  test("hidden names are skipped at every level: readPages and format(\"warc\") agree") {
+    // each file holds the same 3 records: a reader of any hidden copy
+    // returns them more than once
+    val d = Files.createTempDirectory("graft-warc-hidden")
+    val bytes = Warc.writeWarcGz((0 until 3).map(rec))
+    Seq("a.warc.gz", "_b.warc.gz", ".c.warc.gz").foreach(n => Files.write(d.resolve(n), bytes))
+    Seq("_tmp", ".staging").foreach { sub =>
+      Files.createDirectories(d.resolve(sub))
+      Files.write(d.resolve(sub).resolve("d.warc.gz"), bytes)
+    }
+    assert(Warc.readPages(spark, d.toString).count() === 3L, "readPages")
+    assert(spark.read.format("warc").load(d.toString)
+      .filter(col("warc_type") === "response").count() === 3L, "format(\"warc\")")
+    assert(Seq("_SUCCESS", ".x.crc", "_b.warc.gz", "d._COPYING_").forall(!Warc.isVisibleName(_)))
+    assert(Seq("a.warc.gz", "_metadata", "_k=v", "b_.warc").forall(Warc.isVisibleName))
+  }
+
   test("column pruning reaches the reader: scan output drops payload") {
     val df = spark.read.format("warc").load(dir.toString)
       .select(col("url"), col("n_bytes"))
