@@ -1,7 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
 
 /** Large-scale deduplication operators over a `documents(doc_id, text)`
   * table — the training-data-pipeline layer (builder brief; no reference
@@ -318,11 +320,19 @@ object Dedup {
     * shuffle P times as its hash array and is tokenized once. */
   def minhashLsh(docs: DataFrame, threshold: Double, numHashes: Int = 64,
       bands: Int = 16, shingleK: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+      idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     // shingle ONCE per doc; everything downstream (band keys + both verify
     // sides) consumes this checkpointed frame — without it each consumer
     // re-runs the shingling over the full corpus
-    val base = CheckpointScratch.ckpt(shingleFrame(docs, shingleK, idCol, textCol))
+    lshPairs(CheckpointScratch.ckpt(shingleFrame(docs, shingleK, idCol, textCol)),
+      threshold, numHashes, bands)
+
+  /** The band-key → candidate → verify core of [[minhashLsh]] over an
+    * (id, shs) shingle frame, shared with [[dedupCorpus]]. `base` is read
+    * three times (band keys, both verify sides), so callers pass a
+    * checkpoint or a frame cheaply derived from one. */
+  private def lshPairs(base: DataFrame, threshold: Double, numHashes: Int,
+      bands: Int): DataFrame = {
     val keyed = bandKeyFrame(base, numHashes, bands)
     val cands = keyed.select(col("band_key"), col("id").as("id_a"))
       .join(keyed.select(col("band_key"), col("id").as("id_b")), Seq("band_key"))
@@ -475,32 +485,119 @@ object Dedup {
   /** Resolve near-duplicate PAIRS into clusters — the step between pair
     * detection and "keep one document per near-dup group": every doc gets
     * the smallest doc id reachable through the pair graph (connected
-    * components via min-label propagation), so dedup = keep rows where
-    * cluster_id == id. Each round is a hash join + min-aggregate — no
-    * driver-side graph, no all-pairs work; rounds are bounded by the
-    * component diameter (near-dup clusters are shallow). Labels converge
-    * monotonically, so the fixpoint is unique and deterministic.
-    * Output: (idCol, cluster_id). */
+    * components), so dedup = keep rows where cluster_id == id. Isolated
+    * docs (at corpus scale, nearly all of them) never enter the graph and
+    * keep cluster_id = own id. The fixpoint is unique, so both finishes
+    * below return the same rows.
+    *
+    * The edges (both directions) are checkpointed once. When their exact
+    * materialized bytes fit the 32 MB broadcast gate, the components
+    * finish on the driver ([[driverClusters]]): one collect job, a
+    * union-find over index arrays, and a local label frame broadcast into
+    * the final join. Near-dup graphs are that small at any realistic
+    * corpus scale (a few dozen edges per 1k docs in the benchmark). Above
+    * the gate, min-label propagation with pointer jumping runs as Spark
+    * joins ([[pointerJumpClusters]]): O(log diameter) rounds, no driver-
+    * side graph. `idCol` keeps its type on both paths (the ids are never
+    * cast). Output: (idCol, cluster_id). */
+  def dedupClusters(docs: DataFrame, pairs: DataFrame,
+      idCol: String = "doc_id", maxIter: Int = 50): DataFrame = {
+    val edges = edgeCheckpoint(pairs)
+    val bytes = CheckpointScratch.materializedBytes(edges)
+    if (bytes >= 0L && bytes <= BroadcastGateBytes) driverClusters(docs, edges, idCol)
+    else pointerJumpClusters(docs, edges, idCol, maxIter)
+  }
+
   /** Rounds the most recent [[dedupClusters]] call took to converge —
-    * test/probe instrumentation (the label-propagation loop is
-    * driver-side eager, so the value is final when the call returns).
-    * The pointer jump makes this O(log diameter): the OpsSpec 10k-node
+    * test/probe instrumentation (both finishes are driver-side eager, so
+    * the value is final when the call returns). 0 on the driver finish;
+    * on the pointer-jump loop it is O(log diameter): the OpsSpec 10k-node
     * chain asserts the bound. */
   val lastClusterRounds = new java.util.concurrent.atomic.AtomicInteger(-1)
 
-  def dedupClusters(docs: DataFrame, pairs: DataFrame,
-      idCol: String = "doc_id", maxIter: Int = 50): DataFrame = {
-    // eager coalesced checkpoint, not persist(): a CacheManager-cached
-    // plan is compiled without AQE output coalescing (canChangeCachedPlan-
-    // OutputPartitioning defaults false), so every loop iteration re-read
-    // the edge set as shuffle-partition-count near-empty tasks (r9
-    // listener: ~900 tasks/query across the cluster family)
-    val edges = CheckpointScratch.ckpt(
+  /** Byte gate for anything the cluster finish holds on the driver or
+    * broadcasts: the edge checkpoint it collects, the label side it
+    * broadcasts into a join. */
+  private val BroadcastGateBytes = 32L << 20
+
+  /** The pair graph as an eager checkpoint of directed (src, dst) edges,
+    * both directions of every pair.
+    * Eager coalesced checkpoint, not persist(): a CacheManager-cached
+    * plan is compiled without AQE output coalescing (canChangeCachedPlan-
+    * OutputPartitioning defaults false), so every loop iteration re-read
+    * the edge set as shuffle-partition-count near-empty tasks (r9
+    * listener: ~900 tasks/query across the cluster family). */
+  private[graft] def edgeCheckpoint(pairs: DataFrame): DataFrame =
+    CheckpointScratch.ckpt(
       pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
         .union(pairs.select(col("id_b").as("src"), col("id_a").as("dst"))))
-    // Only edge ENDPOINTS can ever change label; isolated docs (at corpus
-    // scale, nearly all of them) never enter the iteration and rejoin at
-    // the end with cluster_id = own id.
+
+  /** The driver finish of [[dedupClusters]] over an edge checkpoint that
+    * fits the gate. One job collects each undirected edge once (Spark's
+    * own `src < dst`; self-loops and null endpoints never lower a label).
+    * The distinct endpoints are sorted by Spark's ordering of the id type,
+    * so an endpoint's array index is its rank; union-find with min-index
+    * roots then labels each endpoint with the smallest id of its
+    * component — the same fixpoint as min-label propagation. Driver state
+    * is the collected rows plus two arrays of 2·edges entries. The labels
+    * return as a local frame (no job to broadcast) typed like the edges. */
+  private[graft] def driverClusters(docs: DataFrame, edges: DataFrame,
+      idCol: String): DataFrame = {
+    val dt = edges.schema("src").dataType
+    val rows = edges.filter(col("src") < col("dst")).collect()
+    CheckpointScratch.drop(edges)
+    val ord = org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(dt)
+    val toCatalyst = CatalystTypeConverters.createToCatalystConverter(dt)
+    val ends = new Array[AnyRef](rows.length * 2)
+    var i = 0
+    while (i < rows.length) {
+      ends(2 * i) = toCatalyst(rows(i).get(0)).asInstanceOf[AnyRef]
+      ends(2 * i + 1) = toCatalyst(rows(i).get(1)).asInstanceOf[AnyRef]
+      i += 1
+    }
+    val cmp = ord.asInstanceOf[java.util.Comparator[AnyRef]]
+    val ids = ends.clone()
+    java.util.Arrays.sort(ids, cmp)
+    var n = 0
+    i = 0
+    while (i < ids.length) {
+      if (n == 0 || cmp.compare(ids(n - 1), ids(i)) != 0) { ids(n) = ids(i); n += 1 }
+      i += 1
+    }
+    val parent = Array.tabulate(n)(identity)
+    def find(x0: Int): Int = {
+      var x = x0
+      while (parent(x) != x) { parent(x) = parent(parent(x)); x = parent(x) }
+      x
+    }
+    i = 0
+    while (i < ends.length) {
+      val a = find(java.util.Arrays.binarySearch(ids, 0, n, ends(i), cmp))
+      val b = find(java.util.Arrays.binarySearch(ids, 0, n, ends(i + 1), cmp))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+      i += 2
+    }
+    val toScala = CatalystTypeConverters.createToScalaConverter(dt)
+    val labelRows = new java.util.ArrayList[Row](n)
+    i = 0
+    while (i < n) { labelRows.add(Row(toScala(ids(i)), toScala(ids(find(i))))); i += 1 }
+    val labels = docs.sparkSession.createDataFrame(labelRows,
+      StructType(Seq(StructField("id", dt), StructField("lbl", dt))))
+    lastClusterRounds.set(0)
+    docs.select(col(idCol).as("id")).distinct()
+      .join(broadcast(labels), Seq("id"), "left")
+      .select(col("id").as(idCol), coalesce(col("lbl"), col("id")).as("cluster_id"))
+  }
+
+  /** The Spark finish of [[dedupClusters]] for edge sets above the gate:
+    * min-label propagation over the edge checkpoint. Each round is a hash
+    * join + min-aggregate plus one pointer jump, so rounds are bounded by
+    * O(log diameter); labels converge monotonically, so the fixpoint is
+    * unique and deterministic. */
+  private[graft] def pointerJumpClusters(docs: DataFrame, edges: DataFrame,
+      idCol: String, maxIter: Int): DataFrame = {
+    // Only edge ENDPOINTS can ever change label; isolated docs never enter
+    // the iteration and rejoin at the end with cluster_id = own id.
     // localCheckpoint (eager) after every round: an iterative DataFrame
     // otherwise nests the entire previous round's plan inside the next —
     // analyzer/optimizer time grows superlinearly with rounds and dwarfs
@@ -516,13 +613,29 @@ object Dedup {
     // overhead, and it re-broadcasts twice per round (labels + hop) — a
     // raw 2M-row gate allowed ~100 MB per round of driver pressure.
     val nEndpoints = labels.count()
-    val bcast = nEndpoints * 48L <= (32L << 20)
+    val bcast = nEndpoints * 48L <= BroadcastGateBytes
     def side(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
     def labelSum(df: DataFrame): java.math.BigDecimal = {
       val d = df.agg(sum(col("lbl").cast("decimal(38,0)"))).head().getDecimal(0)
       if (d == null) java.math.BigDecimal.ZERO else d
     }
-    var prevSum = labelSum(labels)
+    // labels decrease monotonically, so for an integral id the (exact,
+    // decimal) label sum is a strict change witness — one aggregate per
+    // round, no diff join. Other id types (STRING) have no such sum and
+    // compare each id's label with the previous round's instead.
+    val integral = edges.schema("src").dataType match {
+      case ByteType | ShortType | IntegerType | LongType => true
+      case _ => false
+    }
+    var prevSum = if (integral) labelSum(labels) else null
+    def unchanged(prev: DataFrame, next: DataFrame): Boolean =
+      if (integral) {
+        val s = labelSum(next)
+        val same = s.compareTo(prevSum) == 0
+        prevSum = s
+        same
+      } else next.join(prev.select(col("id"), col("lbl").as("plbl")), Seq("id"))
+        .filter(col("lbl") =!= col("plbl")).isEmpty
     var iter = 0
     var done = nEndpoints == 0 // no edges at all
     // static plan scope for the pointer-jump loop (see CheckpointScratch
@@ -531,7 +644,7 @@ object Dedup {
     // the layout derives once from its exact bytes and each round runs as
     // one ckpt job + one label-sum job instead of ~5-7 AQE stage jobs.
     val loopBytes = CheckpointScratch.materializedBytes(edges)
-    CheckpointScratch.withStaticLoopPlan(pairs.sparkSession, loopBytes) {
+    CheckpointScratch.withStaticLoopPlan(edges.sparkSession, loopBytes) {
     while (!done && iter < maxIter) {
       // one min-propagation hop along edges...
       // fresh aliases on BOTH columns: an un-aliased `lbl` keeps labels'
@@ -557,13 +670,9 @@ object Dedup {
         .select(col("a.id").as("id"),
           least(col("a.lbl"), coalesce(col("jlbl"), col("a.lbl"))).as("lbl"))
         .transform(CheckpointScratch.ckpt)
-      // labels decrease monotonically, so the (exact, decimal) label sum is
-      // a strict change witness — one aggregate per round, no diff join
-      val s = labelSum(next)
-      done = s.compareTo(prevSum) == 0
-      prevSum = s
+      done = unchanged(labels, next)
       // the superseded round's label blocks are dead the moment `next` is
-      // materialized (labelSum above) — drop them NOW so peak storage
+      // materialized (and compared above) — drop them NOW so peak storage
       // stays O(1) label frames regardless of graph diameter
       CheckpointScratch.drop(labels)
       labels = next
@@ -591,27 +700,33 @@ object Dedup {
     * EVERY doc is auditable (lineage of WHY a doc was dropped); filter on
     * is_representative for the deduplicated corpus.
     *
-    * EVALUATION COUNT: `docs` is evaluated twice — once for the text hash
-    * (the per-doc (id, rep) map is checkpointed) and once for MinHash
-    * (joined to the representative ids). The returned frame refers only to
-    * checkpoints, so reading it never re-runs the upstream text plan. */
+    * EVALUATION COUNT: `docs` is evaluated once. One checkpoint holds
+    * (id, text hash, text length, shingle set) per doc; the exact-
+    * representative window reads only (id, hash, length) from it, so
+    * neither text nor shingles cross its shuffle, and MinHash+LSH runs over
+    * the representatives' rows of the same checkpoint. The trade-off:
+    * exact-duplicate non-representatives are shingled too (4% of docs in
+    * the benchmark corpus), which buys one full upstream evaluation. The
+    * returned frame refers only to checkpoints and a local label frame, so
+    * reading it never re-runs the upstream text plan. */
   def dedupCorpus(docs: DataFrame, threshold: Double = 0.8,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val base = CheckpointScratch.ckpt(docs.select(col(idCol).as("id"),
+      xxhash64(col(textCol)).as("h"), length(col(textCol)).as("l"),
+      shingleSet(col(textCol), 3).as("shs")))
     // per-doc exact-representative mapping (same 16-byte key discipline as
-    // [[exact]]: only (hash, length) crosses the shuffle, never the text)
-    val keyed = docs.select(col(idCol).as("id"),
-      xxhash64(col(textCol)).as("h"), length(col(textCol)).as("l"))
-    val docToRep = CheckpointScratch.ckpt(keyed
-      .withColumn("rep", min(col("id"))
-        .over(org.apache.spark.sql.expressions.Window.partitionBy(col("h"), col("l"))))
-      .select(col("id"), col("rep")))
-    val repIds = docToRep.filter(col("id") === col("rep"))
-      .select(col("id").as(idCol))
-    val pairs = minhashLsh(repIds.join(docs, Seq(idCol)), threshold,
-      idCol = idCol, textCol = textCol)
-    // dedupClusters reads only the distinct ids of its first argument
-    val repClusters = dedupClusters(repIds, pairs, idCol)
+    // [[exact]]: only (hash, length) crosses the shuffle)
+    val docToRep = CheckpointScratch.ckpt(base.select(col("id"),
+      min(col("id")).over(org.apache.spark.sql.expressions.Window
+        .partitionBy(col("h"), col("l"))).as("rep")))
+    val repIds = docToRep.filter(col("id") === col("rep")).select(col("id"))
+    val pairs = lshPairs(base.join(repIds, Seq("id"), "left_semi")
+      .select(col("id"), col("shs")), threshold, numHashes = 64, bands = 16)
+    // dedupClusters reads only the distinct ids of its first argument, and
+    // its eager edge checkpoint is the last read of `base`
+    val repClusters = dedupClusters(repIds.select(col("id").as(idCol)), pairs, idCol)
       .select(col(idCol).as("rep"), col("cluster_id"))
+    CheckpointScratch.drop(base)
     docToRep.join(repClusters, Seq("rep"))
       .select(col("id").as(idCol), col("cluster_id"),
         (col("id") === col("cluster_id")).as("is_representative"))

@@ -168,16 +168,24 @@ class FuzzSpec extends AnyFunSuite {
     val run = "a" * 200000
     val digits = "1" * 200000
     val dots = "1.2.3." * 30000
+    // wall, this thread's CPU and GC time are logged side by side, so a
+    // trip of the wall bound shows whether the scan itself got slower
+    // (CPU ~ wall) or the thread waited (GC, other suites' threads)
+    val mx = java.lang.management.ManagementFactory.getThreadMXBean
+    val gcs = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+    def gcMs = { import scala.jdk.CollectionConverters._; gcs.asScala.map(_.getCollectionTime).sum }
+    def cpuNs = if (mx.isCurrentThreadCpuTimeSupported) mx.getCurrentThreadCpuTime else System.nanoTime()
     for (s <- Seq(run, digits, dots)) {
-      val t0 = System.nanoTime()
+      val (t0, c0, g0) = (System.nanoTime(), cpuNs, gcMs)
       val p1 = java.util.regex.Pattern.compile(graft.ops.Scrub.EmailRe).matcher(s)
       while (p1.find()) ()
       val p2 = java.util.regex.Pattern.compile(graft.ops.Scrub.Ipv4Re).matcher(s)
       while (p2.find()) ()
       val p3 = java.util.regex.Pattern.compile(graft.ops.Scrub.PhoneRe).matcher(s)
       while (p3.find()) ()
-      val ms = (System.nanoTime() - t0) / 1e6
-      assert(ms < 2000.0, f"adversarial scan took $ms%.0f ms")
+      val (wallMs, cpuMs) = ((System.nanoTime() - t0) / 1e6, (cpuNs - c0) / 1e6)
+      info(f"adversarial scan: wall $wallMs%.0f ms, thread cpu $cpuMs%.0f ms, gc ${gcMs - g0} ms")
+      assert(wallMs < 2000.0, f"adversarial scan took $wallMs%.0f ms ($cpuMs%.0f ms thread cpu)")
     }
     // bounded pattern still matches normal emails
     assert(java.util.regex.Pattern.compile(graft.ops.Scrub.EmailRe)

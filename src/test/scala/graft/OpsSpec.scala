@@ -2014,4 +2014,107 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(conf.getConf(org.apache.spark.sql.internal.SQLConf.SHUFFLE_PARTITIONS) == sp0)
     }
   }
+
+  test("dedupClusters: the driver finish equals the pointer-jump loop on seeded random graphs") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(20261019L)
+    // ids spaced and shuffled so rank order and input order differ;
+    // each graph leaves some docs isolated and repeats / reverses /
+    // self-loops a few pairs (none of which may change a label)
+    def graph(kind: String, ids: Vector[Long]): Seq[(Long, Long)] = {
+      val v = rnd.shuffle(ids).take(ids.length * 3 / 4)
+      val es = kind match {
+        case "chain" => v.sliding(2).map(p => (p(0), p(1))).toSeq
+        case "star"  => v.tail.map(x => (v.head, x))
+        case "pairs" => v.grouped(2).collect { case Seq(a, b) => (a, b) }.toSeq
+        case "mixed" => Seq.fill(v.length / 2)((v(rnd.nextInt(v.length)), v(rnd.nextInt(v.length))))
+      }
+      es ++ es.take(3).map(_.swap) ++ es.take(2) ++ v.take(2).map(x => (x, x))
+    }
+    def compare(docs: org.apache.spark.sql.DataFrame, pairs: org.apache.spark.sql.DataFrame,
+        what: String): Unit = {
+      val viaDriver = Dedup.dedupClusters(docs, pairs)
+      assert(Dedup.lastClusterRounds.get() == 0, s"$what: expected the driver finish")
+      val viaLoop = Dedup.pointerJumpClusters(docs, Dedup.edgeCheckpoint(pairs), "doc_id", 50)
+      assert(Dedup.lastClusterRounds.get() > 0, s"$what: expected the loop")
+      assert(viaDriver.schema == viaLoop.schema, s"$what: ${viaDriver.schema} vs ${viaLoop.schema}")
+      val (d, l) = (viaDriver.collect().toSet, viaLoop.collect().toSet)
+      assert(d == l, s"$what: driver-only ${(d -- l).take(5)} loop-only ${(l -- d).take(5)}")
+      assert(d.size == docs.count(), what)
+    }
+    for (kind <- Seq("chain", "star", "pairs", "mixed"); seed <- 0 until 2) {
+      val ids = Vector.fill(60)(rnd.nextInt(100000).toLong).distinct
+      val docs = ids.map(i => (i, s"t$i")).toDF("doc_id", "text")
+      compare(docs, graph(kind, ids).toDF("id_a", "id_b"), s"$kind/$seed")
+    }
+    // STRING ids: their order is not numeric ("d10" < "d9"), and no id is cast
+    val ids = Vector.fill(40)(rnd.nextInt(1000).toLong).distinct
+    val docs = ids.map(i => s"d$i").toDF("doc_id")
+    val pairs = graph("mixed", ids).map { case (a, b) => (s"d$a", s"d$b") }.toDF("id_a", "id_b")
+    compare(docs, pairs, "string")
+    assert(Dedup.dedupClusters(docs, pairs).schema("cluster_id").dataType ==
+      org.apache.spark.sql.types.StringType)
+  }
+
+  test("dedupClusters: the pointer-jump loop converges a 10k-node chain in <= 16 rounds") {
+    import spark.implicits._
+    val n = 10000
+    val docs = spark.range(n).select($"id".as("doc_id")).toDF
+    val pairs = spark.range(n - 1)
+      .select($"id".as("id_a"), ($"id" + 1L).as("id_b")).toDF
+    val cl = Dedup.pointerJumpClusters(docs, Dedup.edgeCheckpoint(pairs), "doc_id", 20)
+      .as[(Long, Long)].collect()
+    assert(cl.length == n && cl.forall(_._2 == 0L), "one component labeled by its min id")
+    val rounds = Dedup.lastClusterRounds.get()
+    assert(rounds > 0 && rounds <= 16, s"10k chain should converge in <= 16 rounds, took $rounds")
+  }
+
+  test("dedupCorpus evaluates its text once per input row") {
+    import spark.implicits._
+    val textEvals = spark.sparkContext.longAccumulator("dedupCorpus text evals")
+    val textOf = udf { (i: Long) =>
+      textEvals.add(1L)
+      (1 to 40).map(j => s"t${i % 5}_$j").mkString(" ")
+    }
+    val docs = spark.range(40).select($"id".as("doc_id"), textOf($"id").as("text"))
+    Dedup.dedupCorpus(docs, threshold = 0.5)
+    // 45 when the exact-representative pass read all 40 rows and MinHash
+    // re-read the 5 representatives' rows
+    assert(textEvals.value == 40L, s"${textEvals.value} text evaluations for 40 rows")
+  }
+
+  test("dedupCorpus + exportAll on a small corpus stay within their job bound") {
+    import spark.implicits._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val text = (i: Int) => (1 to 40).map(j => s"w${i}_$j").mkString(" ")
+    // 0-59 distinct, 60-69 exact copies of 0-9, 70-79 near copies of 10-19
+    val rows = (0 until 60).map(i => (i.toLong, text(i))) ++
+      (60 until 70).map(i => (i.toLong, text(i - 60))) ++
+      (70 until 80).map(i => (i.toLong, text(i - 60).replace(s"w${i - 60}_7 ", "x ")))
+    val docs = rows.toDF("doc_id", "text")
+    val dir = java.nio.file.Files.createTempDirectory("graft-curate-jobs").toString
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val marker = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "marker"))
+          marker.countDown()
+        else jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val m = try {
+      val clusters = Dedup.dedupCorpus(docs, threshold = 0.8)
+      val kept = docs.join(clusters.filter($"is_representative").select("doc_id"), Seq("doc_id"))
+      val m = graft.ops.ShardStore.exportAll(kept, dir, maxPerShard = 16L)
+      // a marker job flushes the listener bus, which delivers events in order
+      spark.sparkContext.setJobDescription("marker")
+      spark.sparkContext.parallelize(Seq(1), 1).count()
+      spark.sparkContext.setJobDescription(null)
+      assert(marker.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      m
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(m.shards.map(_.nDocs).sum == 60L) // exact and near copies dropped
+    // 41 jobs with the two-pass dedupCorpus and the Spark-side component loop
+    assert(jobs.get() <= 25, s"${jobs.get()} jobs")
+  }
 }
