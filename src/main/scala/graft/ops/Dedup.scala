@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType, StructField, StructType}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Large-scale deduplication operators over a `documents(doc_id, text)`
   * table — the training-data-pipeline layer (builder brief; no reference
@@ -308,6 +308,13 @@ object Dedup {
     }
   }
 
+  /** The MinHash+LSH parameters every near-dup path defaults to: word
+    * k-shingles, hashes per signature, and bands (rows per band =
+    * hashes / bands). [[dedupCorpus]] always uses them. */
+  val LshShingleK = 3
+  val LshNumHashes = 64
+  val LshBands = 16
+
   /** MinHash+LSH near-dup pairs: shingle → minhash → band → bucket join →
     * exact-Jaccard verify. Output: (id_a, id_b, jaccard) with id_a < id_b
     * and jaccard ≥ threshold.
@@ -318,8 +325,8 @@ object Dedup {
     * (computed once, eagerly checkpointed) and intersects 8-byte longs,
     * never raw text: a doc in P candidate pairs crosses the verify
     * shuffle P times as its hash array and is tokenized once. */
-  def minhashLsh(docs: DataFrame, threshold: Double, numHashes: Int = 64,
-      bands: Int = 16, shingleK: Int = 3,
+  def minhashLsh(docs: DataFrame, threshold: Double, numHashes: Int = LshNumHashes,
+      bands: Int = LshBands, shingleK: Int = LshShingleK,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame =
     // shingle ONCE per doc; everything downstream (band keys + both verify
     // sides) consumes this checkpointed frame — without it each consumer
@@ -494,11 +501,11 @@ object Dedup {
     * materialized bytes fit the 32 MB broadcast gate, the components
     * finish on the driver ([[driverClusters]]): one collect job, a
     * union-find over index arrays, and a local label frame broadcast into
-    * the final join. Near-dup graphs are that small at any realistic
-    * corpus scale (a few dozen edges per 1k docs in the benchmark). Above
-    * the gate, min-label propagation with pointer jumping runs as Spark
-    * joins ([[pointerJumpClusters]]): O(log diameter) rounds, no driver-
-    * side graph. `idCol` keeps its type on both paths (the ids are never
+    * the final join. The benchmark's graph is far below the gate (a few
+    * dozen edges per 1k docs); graph sizes of larger corpora are
+    * unmeasured. Above the gate, min-label propagation with pointer
+    * jumping runs as Spark joins ([[pointerJumpClusters]]): O(log
+    * diameter) rounds, no driver-side graph. `idCol` keeps its type on both paths (the ids are never
     * cast). Output: (idCol, cluster_id). */
   def dedupClusters(docs: DataFrame, pairs: DataFrame,
       idCol: String = "doc_id", maxIter: Int = 50): DataFrame = {
@@ -602,6 +609,7 @@ object Dedup {
     // otherwise nests the entire previous round's plan inside the next —
     // analyzer/optimizer time grows superlinearly with rounds and dwarfs
     // the actual work. Checkpointing keeps each round's plan flat.
+    val dt = edges.schema("src").dataType
     var labels = edges.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("lbl")).transform(CheckpointScratch.ckpt)
     // checkpointed (RDD-backed) frames carry no stats, so AQE never
@@ -615,34 +623,13 @@ object Dedup {
     val nEndpoints = labels.count()
     val bcast = nEndpoints * 48L <= BroadcastGateBytes
     def side(df: DataFrame): DataFrame = if (bcast) broadcast(df) else df
-    def labelSum(df: DataFrame): java.math.BigDecimal = {
-      val d = df.agg(sum(col("lbl").cast("decimal(38,0)"))).head().getDecimal(0)
-      if (d == null) java.math.BigDecimal.ZERO else d
-    }
-    // labels decrease monotonically, so for an integral id the (exact,
-    // decimal) label sum is a strict change witness — one aggregate per
-    // round, no diff join. Other id types (STRING) have no such sum and
-    // compare each id's label with the previous round's instead.
-    val integral = edges.schema("src").dataType match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _ => false
-    }
-    var prevSum = if (integral) labelSum(labels) else null
-    def unchanged(prev: DataFrame, next: DataFrame): Boolean =
-      if (integral) {
-        val s = labelSum(next)
-        val same = s.compareTo(prevSum) == 0
-        prevSum = s
-        same
-      } else next.join(prev.select(col("id"), col("lbl").as("plbl")), Seq("id"))
-        .filter(col("lbl") =!= col("plbl")).isEmpty
     var iter = 0
     var done = nEndpoints == 0 // no edges at all
     // static plan scope for the pointer-jump loop (see CheckpointScratch
     // scaladoc): the per-round plan is identical and the edge set — the
     // frame every round's shuffles are scaled by — is materialized, so
     // the layout derives once from its exact bytes and each round runs as
-    // one ckpt job + one label-sum job instead of ~5-7 AQE stage jobs.
+    // one ckpt job + one change-check job instead of ~5-7 AQE stage jobs.
     val loopBytes = CheckpointScratch.materializedBytes(edges)
     CheckpointScratch.withStaticLoopPlan(edges.sparkSession, loopBytes) {
     while (!done && iter < maxIter) {
@@ -652,15 +639,17 @@ object Dedup {
       // id in two children — Spark's Union constraint rewrite then fails
       // ("key not found: id#...") when the union is localCheckpointed
       val viaEdges = edges.join(side(labels), edges("src") === labels("id"))
-        .select(col("dst").as("id"), col("lbl").as("lbl"))
+        .select(col("dst").as("id"), col("lbl").as("lbl"), lit(null).cast(dt).as("prev"))
       // hop stays LAZY: its two uses in the pointer jump are identical
       // subtrees, so the next-frame checkpoint computes the union-agg
       // shuffle once and AQE's exchange reuse serves the second side —
       // an eager hop checkpoint here was one extra job per round for a
-      // frame that dies the moment `next` materializes
+      // frame that dies the moment `next` materializes. Each id carries its
+      // previous label through the hop (the edge side contributes null),
+      // so the change check is one filter over `next`, no diff join.
       val hop =
-        labels.unionByName(viaEdges)
-          .groupBy(col("id")).agg(min(col("lbl")).as("lbl"))
+        labels.select(col("id"), col("lbl"), col("lbl").as("prev")).unionByName(viaEdges)
+          .groupBy(col("id")).agg(min(col("lbl")).as("lbl"), max(col("prev")).as("prev"))
       // ...then one pointer jump (lbl := lbl's own lbl): a label is always
       // a reachable endpoint id, so chasing it doubles the effective hop —
       // convergence in O(log component) rounds instead of O(diameter)
@@ -668,9 +657,11 @@ object Dedup {
         .join(side(hop.select(col("id").as("jid"), col("lbl").as("jlbl"))),
           col("a.lbl") === col("jid"), "left")
         .select(col("a.id").as("id"),
-          least(col("a.lbl"), coalesce(col("jlbl"), col("a.lbl"))).as("lbl"))
+          least(col("a.lbl"), coalesce(col("jlbl"), col("a.lbl"))).as("lbl"),
+          col("a.prev").as("prev"))
         .transform(CheckpointScratch.ckpt)
-      done = unchanged(labels, next)
+      // labels only ever decrease, so the fixpoint is a round with no change
+      done = next.filter(col("lbl") =!= col("prev")).isEmpty
       // the superseded round's label blocks are dead the moment `next` is
       // materialized (and compared above) — drop them NOW so peak storage
       // stays O(1) label frames regardless of graph diameter
@@ -711,9 +702,8 @@ object Dedup {
     * reading it never re-runs the upstream text plan. */
   def dedupCorpus(docs: DataFrame, threshold: Double = 0.8,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val base = CheckpointScratch.ckpt(docs.select(col(idCol).as("id"),
-      xxhash64(col(textCol)).as("h"), length(col(textCol)).as("l"),
-      shingleSet(col(textCol), 3).as("shs")))
+    val base = CheckpointScratch.ckpt(shingleFrame(docs, LshShingleK, idCol, textCol,
+      xxhash64(col(textCol)).as("h"), length(col(textCol)).as("l")))
     // per-doc exact-representative mapping (same 16-byte key discipline as
     // [[exact]]: only (hash, length) crosses the shuffle)
     val docToRep = CheckpointScratch.ckpt(base.select(col("id"),
@@ -721,7 +711,7 @@ object Dedup {
         .partitionBy(col("h"), col("l"))).as("rep")))
     val repIds = docToRep.filter(col("id") === col("rep")).select(col("id"))
     val pairs = lshPairs(base.join(repIds, Seq("id"), "left_semi")
-      .select(col("id"), col("shs")), threshold, numHashes = 64, bands = 16)
+      .select(col("id"), col("shs")), threshold, LshNumHashes, LshBands)
     // dedupClusters reads only the distinct ids of its first argument, and
     // its eager edge checkpoint is the last read of `base`
     val repClusters = dedupClusters(repIds.select(col("id").as(idCol)), pairs, idCol)
@@ -893,7 +883,8 @@ object Dedup {
     * Output: the genuinely-new batch rows (idCol, textCol), like
     * [[incrementalNew]]. */
   def incrementalNearDup(seen: DataFrame, batch: DataFrame, threshold: Double,
-      numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
+      numHashes: Int = LshNumHashes, bands: Int = LshBands,
+      shingleK: Int = LshShingleK,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val sBase = CheckpointScratch.ckpt(
       shingleFrame(seen, shingleK, idCol, textCol))
@@ -906,11 +897,13 @@ object Dedup {
   private def shingleSet(text: Column, k: Int): Column =
     udf((t: String) => shingleHashes(if (t == null) "" else t, k)).apply(text)
 
-  /** The per-doc hashed-shingle frame (id, shs) — the ONE signature prep
-    * the near-dup paths and the persisted key store share. */
+  /** The per-doc hashed-shingle frame (id, [keep...], shs) — the ONE
+    * signature prep the near-dup paths and the persisted key store share.
+    * `keep` adds per-doc columns computed in the same pass over `docs`. */
   private[ops] def shingleFrame(docs: DataFrame, shingleK: Int,
-      idCol: String, textCol: String): DataFrame =
-    docs.select(col(idCol).as("id"), shingleSet(col(textCol), shingleK).as("shs"))
+      idCol: String, textCol: String, keep: Column*): DataFrame =
+    docs.select((col(idCol).as("id") +: keep :+
+      shingleSet(col(textCol), shingleK).as("shs")): _*)
 
   /** LSH band keys (id, band_key) off a shingle frame — 16 bytes + id per
     * row × bands; the exploded frame never carries text or shingles. */
@@ -928,7 +921,8 @@ object Dedup {
     * batch-side signatures only; the corpus is never re-shingled). */
   def incrementalNearDupAgainst(seenBase: DataFrame, seenKeyed: DataFrame,
       batch: DataFrame, threshold: Double,
-      numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
+      numHashes: Int = LshNumHashes, bands: Int = LshBands,
+      shingleK: Int = LshShingleK,
       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     val bBase = CheckpointScratch.ckpt(
       shingleFrame(batch, shingleK, idCol, textCol))

@@ -44,7 +44,8 @@ object NearDupStore {
     * manifest — increments are exactly-once from a reader's view. Returns
     * the increment id. */
   def append(root: String, docs: DataFrame,
-      numHashes: Int = 64, bands: Int = 16, shingleK: Int = 3,
+      numHashes: Int = Dedup.LshNumHashes, bands: Int = Dedup.LshBands,
+      shingleK: Int = Dedup.LshShingleK,
       idCol: String = "doc_id", textCol: String = "text"): Long = {
     ManifestLog(root).pinParams("NearDupStore",
       Seq("numHashes" -> numHashes, "bands" -> bands, "shingleK" -> shingleK),
