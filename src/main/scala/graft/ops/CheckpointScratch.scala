@@ -2,7 +2,7 @@ package graft.ops
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.Dataset
 
 /** Registry for per-invocation EAGER localCheckpoints created inside
   * operators (tokenized bases, span-pair frames, iteration labels). The
@@ -36,45 +36,17 @@ object CheckpointScratch {
     * exact block sizes are known, so the coalesce is free (narrow, no
     * data movement) and self-deactivates at scale: a frame bigger than
     * partitions × advisoryPartitionSizeInBytes keeps its partitioning. */
-  def ckpt(df: DataFrame): DataFrame = {
-    // constraint propagation OFF for the checkpoint materialization only:
-    // LogicalRDD.rewriteStatsAndConstraints walks the origin plan's
-    // constraint set, and on self-referential union plans (label
-    // propagation's `labels ∪ (edges ⋈ labels)`) Spark 4.1's Union
-    // constraint rewrite throws `key not found: id#...`. Constraints are
-    // optimizer hints, not semantics — and a scratch frame's consumers
-    // re-derive their own over the LogicalRDD anyway. Restored in
-    // `finally`, so downstream planning is untouched.
-    val conf = df.sparkSession.sessionState.conf
-    val key = org.apache.spark.sql.internal.SQLConf.CONSTRAINT_PROPAGATION_ENABLED
-    val old = conf.getConf(key)
-    if (old) conf.setConf(key, false)
+  def ckpt[T](ds: Dataset[T]): Dataset[T] =
     // register the COALESCED wrapper (the frame callers actually retain):
     // registering the raw checkpoint would leave only a weak ref to an
     // object nothing else holds, so GC could clear it before the next
     // unpersistAll — drop() tree-walks to the LogicalRDD either way
-    try register(smartCoalesce(df.localCheckpoint(true)))
-    finally if (old) conf.setConf(key, true)
-  }
+    register(smartCoalesce(ds.localCheckpoint(true)))
 
   def register[T](ds: Dataset[T]): Dataset[T] = {
     q.add(new java.lang.ref.WeakReference[Dataset[_]](ds))
     ds
   }
-
-  /** Typed variant of [[smartCoalesce]] — same size-derived trim,
-    * preserving the Dataset's element type (the sharedDocs memo path). */
-  def smartCoalesceDs[T](cp: Dataset[T]): Dataset[T] =
-    try cp.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        val n = lr.rdd.getNumPartitions
-        if (n <= 2) cp
-        else {
-          val want = targetPartitions(cp.sparkSession, lr.rdd, n)
-          if (want < n) cp.coalesce(want) else cp
-        }
-      case _ => cp
-    } catch { case NonFatal(_) => cp }
 
   private def targetPartitions(spark: org.apache.spark.sql.SparkSession,
       rdd: org.apache.spark.rdd.RDD[_], n: Int): Int = {
@@ -91,7 +63,17 @@ object CheckpointScratch {
     * ceil(bytes / advisoryPartitionSizeInBytes) (the same knob AQE sizes
     * shuffle reads with). No-op for non-RDD plans, ≤ 2 partitions, or
     * frames already at/below the target. */
-  def smartCoalesce(cp: DataFrame): DataFrame = smartCoalesceDs(cp)
+  private def smartCoalesce[T](cp: Dataset[T]): Dataset[T] =
+    try cp.queryExecution.analyzed match {
+      case lr: org.apache.spark.sql.execution.LogicalRDD =>
+        val n = lr.rdd.getNumPartitions
+        if (n <= 2) cp
+        else {
+          val want = targetPartitions(cp.sparkSession, lr.rdd, n)
+          if (want < n) cp.coalesce(want) else cp
+        }
+      case _ => cp
+    } catch { case NonFatal(_) => cp }
 
   /** Materialized byte size of a checkpoint-backed frame (the LogicalRDD's
     * storage footprint, memory + disk), or -1 when unknown (non-RDD plan,

@@ -136,9 +136,9 @@ class DedupStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val docs = (0 until 50).map(i => (i.toLong, s"doc $i")).toDF("doc_id", "text")
     val dir = Files.createTempDirectory("graft-shard-params").toString
-    graft.ops.Splits.writeTrainingShards(docs, dir, maxPerShard = 10)
+    graft.ops.ShardStore.exportAll(docs, dir, maxPerShard = 10)
     val e = intercept[IllegalArgumentException] {
-      graft.ops.Splits.writeTrainingShards(docs, dir, maxPerShard = 10, salt = "epoch1")
+      graft.ops.ShardStore.exportAll(docs, dir, maxPerShard = 10, salt = "epoch1")
     }
     assert(e.getMessage.contains("does not match"), e.getMessage)
     // changed input rows likewise

@@ -530,7 +530,8 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     val d = (0L until 200L).map(i => (i, s"s${i % 5}", s"text $i")).toDF("doc_id", "source", "text")
     val dir = java.nio.file.Files.createTempDirectory("graft-shards").toString
-    val manifest = graft.ops.Splits.writeTrainingShards(d, dir, maxPerShard = 64L)
+    graft.ops.ShardStore.exportAll(d, dir, maxPerShard = 64L)
+    val manifest = graft.ops.ShardStore.manifestDF(spark, dir).drop("path")
       .as[(Long, Long, Long, Long)].collect().sortBy(_._1)
     // 200 docs / 64 → shards 0..3 with 64/64/64/8 consecutive positions
     assert(manifest.map(x => (x._1, x._2)).toSeq ==
@@ -556,9 +557,11 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     def reference(docs: org.apache.spark.sql.DataFrame, m: Long) =
       graft.ops.Splits.shardManifest(graft.ops.Splits.trainingShards(docs, m))
         .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
-    def exported(docs: org.apache.spark.sql.DataFrame, dir: String, m: Long) =
-      graft.ops.Splits.writeTrainingShards(docs, dir, maxPerShard = m)
+    def exported(docs: org.apache.spark.sql.DataFrame, dir: String, m: Long) = {
+      graft.ops.ShardStore.exportAll(docs, dir, maxPerShard = m)
+      graft.ops.ShardStore.manifestDF(spark, dir).drop("path")
         .as[(Long, Long, Long, Long)].collect().sortBy(_._1).toSeq
+    }
     def corpus(n: Long) =
       (0L until n).map(i => (i, s"text $i")).toDF("doc_id", "text")
     assert(manifest.toSeq == reference(d, 64L))
