@@ -119,18 +119,3 @@ final case class Provenance(
     blockType: String,
     text: String,
     x0: Double, y0: Double, x1: Double, y1: Double)
-
-/** Per-partition lineage row (SURVEY §4.4), written with each snapshot. */
-final case class LineageRow(
-    runId: String,
-    snapshotId: Long,
-    partitionId: Int,
-    docCount: Long,
-    htmlCount: Long,
-    pdfCount: Long,
-    fallbackCount: Long,
-    tableCount: Long,
-    bytesIn: Long,
-    extractMs: Long,
-    warcTsMin: Long,
-    warcTsMax: Long)

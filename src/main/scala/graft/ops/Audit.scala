@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * self-inverse — partition order, task retries that produce identical
   * rows, and merge order all cancel out, and Catalyst partial-aggregates
   * it map-side (a SUM of 64-bit hashes would overflow under ANSI mode —
-  * the [[ShardStore]] `_params` lesson).
+  * the [[ShardStore]] params-pin lesson).
   *
   * The hash is mix64∘fnv1a over a '|'-joined canonical string of the
   * fingerprinted columns, so an independent engine (the DuckDB oracle)

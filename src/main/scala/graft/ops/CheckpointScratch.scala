@@ -48,28 +48,21 @@ object CheckpointScratch {
     ds
   }
 
-  private def targetPartitions(spark: org.apache.spark.sql.SparkSession,
-      rdd: org.apache.spark.rdd.RDD[_], n: Int): Int = {
-    val bytes = spark.sparkContext.getRDDStorageInfo.find(_.id == rdd.id)
-      .map(i => i.memSize + i.diskSize).getOrElse(Long.MaxValue)
-    val advisory = math.max(
-      spark.sessionState.conf.getConf(
-        org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES),
-      1L)
-    math.min(math.max(1L, (bytes + advisory - 1L) / advisory), n.toLong).toInt
-  }
-
   /** Trim a just-materialized localCheckpoint's partition count to
     * ceil(bytes / advisoryPartitionSizeInBytes) (the same knob AQE sizes
-    * shuffle reads with). No-op for non-RDD plans, ≤ 2 partitions, or
-    * frames already at/below the target. */
-  private def smartCoalesce[T](cp: Dataset[T]): Dataset[T] =
+    * shuffle reads with). No-op for non-RDD plans, ≤ 2 partitions, frames
+    * already at/below the target, or an unknown size ([[materializedBytes]]
+    * -1: an uncached RDD). */
+  private[graft] def smartCoalesce[T](cp: Dataset[T]): Dataset[T] =
     try cp.queryExecution.analyzed match {
       case lr: org.apache.spark.sql.execution.LogicalRDD =>
         val n = lr.rdd.getNumPartitions
-        if (n <= 2) cp
+        val bytes = materializedBytes(cp)
+        if (n <= 2 || bytes < 0) cp
         else {
-          val want = targetPartitions(cp.sparkSession, lr.rdd, n)
+          val advisory = math.max(cp.sparkSession.sessionState.conf.getConf(
+            org.apache.spark.sql.internal.SQLConf.ADVISORY_PARTITION_SIZE_IN_BYTES), 1L)
+          val want = math.min(math.max(1L, (bytes + advisory - 1L) / advisory), n.toLong).toInt
           if (want < n) cp.coalesce(want) else cp
         }
       case _ => cp

@@ -59,14 +59,14 @@ object IndexStore {
       "mixed tokenizations make df/tf/positions incomparable")
     log(root).append { dir =>
       Index.postings(docs, idCol, textCol)
-        .write.parquet(dir.resolve("postings").toString)
+        .write.parquet(s"$dir/postings")
       // dl for ALL docs (0 for empty) — corpus N and avgdl come from here
       val dls = Index.termStream(docs, idCol, textCol)
         .groupBy(col("doc_id")).agg(count(lit(1)).as("dl"))
       docs.select(col(idCol).cast("long").as("doc_id"))
         .join(dls, Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("dl"), lit(0L)).as("dl"))
-        .write.parquet(dir.resolve("doclen").toString)
+        .write.parquet(s"$dir/doclen")
     }
   }
 
@@ -101,8 +101,8 @@ object IndexStore {
       // storedPostings/storedDocLens already exclude tombstoned docs, so
       // compaction is also the PHYSICAL removal point for deletes (the
       // takedown contract: tombstone now, scrub bytes at the next compact)
-      storedPostings(spark, root).write.parquet(dir.resolve("postings").toString)
-      storedDocLens(spark, root).write.parquet(dir.resolve("doclen").toString)
+      storedPostings(spark, root).write.parquet(s"$dir/postings")
+      storedDocLens(spark, root).write.parquet(s"$dir/doclen")
     }
 
   /** The committed per-doc lengths union (doc_id, dl) — every indexed

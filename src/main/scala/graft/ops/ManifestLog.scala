@@ -27,9 +27,11 @@ import org.apache.spark.sql.functions.col
   *
   * The log owns the file mechanics; each store owns its manifest line
   * payload. [[ManifestLog.Increments]] adds the `inc-<K>`/`del-<K>` flow
-  * the incremental stores share. Paths are local `java.nio` paths:
-  * ATOMIC_MOVE replaces a file target, and [[publish]] clears a
-  * directory target before its rename. */
+  * the incremental stores share. This file is the only code that touches
+  * the store file system: its API takes and returns `String` paths, the
+  * type Spark readers and writers take. Inside, paths are local
+  * `java.nio` paths: ATOMIC_MOVE replaces a file target, and [[publish]]
+  * clears a directory target before its rename. */
 final case class ManifestLog(root: String, prefix: String = "manifest") {
 
   private val name = s"$prefix-(\\d+)\\.tsv".r
@@ -65,13 +67,16 @@ final case class ManifestLog(root: String, prefix: String = "manifest") {
   /** Publish directory `root/dir`: clear a stale `dir.tmp` and a stale
     * unlisted `dir`, let `write` fill `dir.tmp`, then rename it into
     * place. Callers commit a manifest listing `dir` afterwards. */
-  def publish(dir: String)(write: Path => Unit): Unit = {
+  def publish(dir: String)(write: String => Unit): Unit = {
     val (tmp, dst) = (Paths.get(root, s"$dir.tmp"), Paths.get(root, dir))
-    ManifestLog.deleteRecursively(tmp)
-    ManifestLog.deleteRecursively(dst)
-    write(tmp)
+    ManifestLog.deleteRecursively(tmp.toString)
+    ManifestLog.deleteRecursively(dst.toString)
+    write(tmp.toString)
     Files.move(tmp, dst, StandardCopyOption.ATOMIC_MOVE)
   }
+
+  /** Whether [[publish]] has put `root/dir` in place. */
+  def published(dir: String): Boolean = Files.isDirectory(Paths.get(root, dir))
 
   /** The fail-fast `params.tsv` pin: the first call writes `want`; a
     * later call whose `want` differs from the stored value of any of its
@@ -79,7 +84,7 @@ final case class ManifestLog(root: String, prefix: String = "manifest") {
     * parameters. `store` and `why` go into the refusal. */
   def pinParams(store: String, want: Seq[(String, Any)], why: String): Unit =
     params match {
-      case None => ManifestLog.writeParams(Paths.get(root, "params.tsv"), want)
+      case None => writeParams(want)
       case Some(stored) =>
         def show(kv: Iterable[(String, Any)]) = kv.map { case (k, v) => s"$k=$v" }.mkString(", ")
         require(want.forall { case (k, v) => stored.get(k).contains(v.toString) },
@@ -87,8 +92,21 @@ final case class ManifestLog(root: String, prefix: String = "manifest") {
     }
 
   /** The pinned `params.tsv` pairs, when the file exists. */
-  def params: Option[Map[String, String]] =
-    ManifestLog.readParams(Paths.get(root, "params.tsv"))
+  def params: Option[Map[String, String]] = {
+    val file = Paths.get(root, "params.tsv")
+    if (!Files.isRegularFile(file)) None
+    else Some(Files.readAllLines(file, StandardCharsets.UTF_8).asScala
+      .flatMap(_.split('\t') match {
+        case Array(k, v) => Some(k -> v)
+        case _ => None
+      }).toMap)
+  }
+
+  /** Write `kv` to `params.tsv` as `key\tvalue` lines, atomically and
+    * unchecked ([[pinParams]] is the checked form). */
+  def writeParams(kv: Seq[(String, Any)]): Unit =
+    ManifestLog.writeAtomic(Paths.get(root, "params.tsv"),
+      kv.map { case (k, v) => s"$k\t$v\n" }.mkString)
 }
 
 object ManifestLog {
@@ -101,23 +119,17 @@ object ManifestLog {
     Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
   }
 
-  /** The `key\tvalue` pairs of a params file, when it exists. */
-  def readParams(file: Path): Option[Map[String, String]] =
-    if (!Files.isRegularFile(file)) None
-    else Some(Files.readAllLines(file, StandardCharsets.UTF_8).asScala
-      .flatMap(_.split('\t') match {
-        case Array(k, v) => Some(k -> v)
-        case _ => None
-      }).toMap)
-
-  /** Write `kv` as `key\tvalue` lines, atomically. */
-  def writeParams(file: Path, kv: Seq[(String, Any)]): Unit =
-    writeAtomic(file, kv.map { case (k, v) => s"$k\t$v\n" }.mkString)
-
-  def deleteRecursively(p: Path): Unit =
+  /** Delete `path` and everything under it, when it exists. */
+  def deleteRecursively(path: String): Unit = {
+    val p = Paths.get(path)
     if (Files.exists(p))
       Using.resource(Files.walk(p))(_.iterator().asScala.toVector).reverseIterator
         .foreach(Files.deleteIfExists(_))
+  }
+
+  /** The absolute, normalized form of a local path or `file:` URI. */
+  def absolute(path: String): String =
+    Paths.get(path.stripPrefix("file:")).toAbsolutePath.normalize.toString
 
   /** The increment flow of an incremental store. Layout under `root/`:
     *   inc-<K>/<sub>/ parquet   one committed data increment
@@ -143,14 +155,14 @@ object ManifestLog {
 
     /** Publish `<kind>-<id>` through `write`, then commit manifest `id`. */
     private def commitNext(kind: String, id: Long, incs: Vector[Long],
-        dels: Vector[Long])(write: Path => Unit): Long = {
+        dels: Vector[Long])(write: String => Unit): Long = {
       log.publish(s"$kind-$id")(write)
       log.commit(id, incs.sorted.map(k => s"inc\t$k") ++ dels.sorted.map(k => s"del\t$k"))
       id
     }
 
     /** Commit one data increment that `write` fills. Returns its id. */
-    def append(write: Path => Unit): Long = {
+    def append(write: String => Unit): Long = {
       val (last, incs, dels) = state
       commitNext("inc", last + 1, incs :+ (last + 1), dels)(write)
     }
@@ -161,7 +173,7 @@ object ManifestLog {
       require(incs.nonEmpty, s"$store at $root has no committed increments")
       commitNext("del", last + 1, incs, dels :+ (last + 1)) { dir =>
         ids.select(col(from).cast("long").as(idCol)).distinct()
-          .write.parquet(dir.resolve("ids").toString)
+          .write.parquet(s"$dir/ids")
       }
     }
 
@@ -178,12 +190,12 @@ object ManifestLog {
     /** Rewrite the committed state (which `write` reads through [[read]])
       * as one new increment, flip the manifest to list only it, then
       * delete the old dirs. Returns the new id. */
-    def compact(write: Path => Unit): Long = {
+    def compact(write: String => Unit): Long = {
       val (last, incs, dels) = state
       require(incs.nonEmpty, s"$store at $root has nothing to compact")
       commitNext("inc", last + 1, Vector(last + 1), Vector.empty)(write)
-      incs.foreach(k => deleteRecursively(Paths.get(root, s"inc-$k")))
-      dels.foreach(k => deleteRecursively(Paths.get(root, s"del-$k")))
+      incs.foreach(k => deleteRecursively(s"$root/inc-$k"))
+      dels.foreach(k => deleteRecursively(s"$root/del-$k"))
       last + 1
     }
   }

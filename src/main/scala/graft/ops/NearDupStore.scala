@@ -55,9 +55,9 @@ object NearDupStore {
       // discipline): write sigs from the checkpointed base, keys off it
       val base = CheckpointScratch.ckpt(
         Dedup.shingleFrame(docs, shingleK, idCol, textCol))
-      base.write.parquet(dir.resolve("sigs").toString)
+      base.write.parquet(s"$dir/sigs")
       Dedup.bandKeyFrame(base, numHashes, bands)
-        .write.parquet(dir.resolve("keys").toString)
+        .write.parquet(s"$dir/keys")
     }
   }
 
@@ -79,8 +79,8 @@ object NearDupStore {
     log(root).compact { dir =>
       // seenSigs/seenKeys already exclude tombstoned ids — compaction is
       // the physical removal point for deletes
-      seenSigs(spark, root).write.parquet(dir.resolve("sigs").toString)
-      seenKeys(spark, root).write.parquet(dir.resolve("keys").toString)
+      seenSigs(spark, root).write.parquet(s"$dir/sigs")
+      seenKeys(spark, root).write.parquet(s"$dir/keys")
     }
 
   /** The committed seen-side band keys (id, band_key). */

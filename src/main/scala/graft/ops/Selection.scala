@@ -18,8 +18,8 @@ import org.apache.spark.sql.functions._
   * Both reduce to "global rank / global prefix sum under (key, id)
   * order", which a naive implementation writes as a single-partition
   * window (`row_number() OVER (ORDER BY ...)`) — one task sorting the
-  * whole corpus. The shape here is the [[Splits.epochOrder]] machinery
-  * generalized to arbitrary sort keys: range-partition by the key (the
+  * whole corpus. The shape here, for arbitrary sort keys (and under
+  * [[Splits.epochOrder]] for a salted hash): range-partition by the key (the
   * concatenation of sorted ranges is globally sorted), sort within
   * partitions, then assign contiguous ordinals / running sums with ONE
   * small per-partition statistics job (one long per partition crosses
@@ -59,8 +59,7 @@ object Selection {
   /** Global 0-based rank of every row under (keys, ascending) order with
     * `idCol` as the deterministic tiebreak. Output: (idCol, rank).
     * Positions are independent of the partition count. NOTE: eager (the
-    * ordinal-assignment pass runs a partition-count job at call time,
-    * like [[Splits.epochOrder]]). */
+    * ordinal-assignment pass runs a partition-count job at call time). */
   def rankBy(docs: DataFrame, keys: Seq[Column], ascending: Seq[Boolean],
       idCol: String = "doc_id", numPartitions: Int = 0): DataFrame = {
     val spark = docs.sparkSession

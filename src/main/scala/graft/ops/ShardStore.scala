@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -32,6 +30,7 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   *     exactly-once.
   *
   * Layout under `root/`:
+  *   params.tsv             salt / maxPerShard / idCol / n / idHash
   *   assignment/            parquet (idCol, epoch_pos, shard_id)
   *   data/unit-<lo>-<hi>/   JSONL, partitioned by shard_id
   *   manifest-<K>.tsv       shard rows committed so far
@@ -90,44 +89,36 @@ object ShardStore {
     * fingerprint check ([[exportAll]] calls this once, not per unit). The
     * read-back uses the assignment's known schema, so it runs no job.
     *
-    * `params.tsv` INSIDE the assignment dir pins (salt, maxPerShard,
-    * idCol, input row count, input id-hash): a resume with different docs
-    * or parameters FAILS FAST instead of silently reusing the stale
+    * `params.tsv` pins (salt, maxPerShard, idCol, input row count, input
+    * id-hash) before the assignment is published: a resume with different
+    * docs or parameters FAILS FAST instead of silently reusing the stale
     * committed assignment (new ids would be dropped by the export's inner
-    * join, changed params ignored — ADVICE r7). */
+    * join, changed params ignored — ADVICE r7). A published assignment
+    * with no pin is refused, never re-pinned. */
   def ensureAssignment(docs: DataFrame, root: String, maxPerShard: Long,
       salt: String = "epoch0", idCol: String = "doc_id"): DataFrame = {
-    val spark = docs.sparkSession
-    Files.createDirectories(Paths.get(root))
-    val aDir = Paths.get(root, "assignment")
-    if (!Files.isDirectory(aDir)) {
-      ManifestLog(root).publish("assignment") { tmp =>
-        val ids = CheckpointScratch.ckpt(docs.select(col(idCol)))
-        val (n, idHash) = inputFingerprint(ids, idCol)
-        Splits.trainingShards(ids, maxPerShard, salt, idCol)
-          .write.mode("overwrite").parquet(tmp.toString)
-        CheckpointScratch.drop(ids)
-        ManifestLog.writeParams(tmp.resolve("_params.tsv"), Seq("salt" -> salt,
-          "maxPerShard" -> maxPerShard, "idCol" -> idCol, "n" -> n, "idHash" -> idHash))
+    val log = ManifestLog(root)
+    def pin(fingerprint: (Long, Long)): Unit =
+      log.pinParams("ShardStore", Seq("salt" -> salt, "maxPerShard" -> maxPerShard,
+        "idCol" -> idCol, "n" -> fingerprint._1, "idHash" -> fingerprint._2),
+        "the committed assignment does not match this export; delete the store or " +
+          "use a new root (reusing it would drop new ids / ignore changed params)")
+    if (!log.published("assignment")) {
+      val ids = CheckpointScratch.ckpt(docs.select(col(idCol)))
+      pin(inputFingerprint(ids, idCol))
+      log.publish("assignment") { tmp =>
+        Splits.trainingShards(ids, maxPerShard, salt, idCol).write.parquet(tmp)
       }
+      CheckpointScratch.drop(ids)
     } else {
-      // pre-fingerprint stores (no _params.tsv) stay readable
-      ManifestLog.readParams(aDir.resolve("_params.tsv")).foreach { kv =>
-        val (n, idHash) = inputFingerprint(docs, idCol)
-        val want = Map("salt" -> salt, "maxPerShard" -> maxPerShard.toString,
-          "idCol" -> idCol, "n" -> n.toString, "idHash" -> idHash.toString)
-        val diffs = want.collect {
-          case (k, v) if kv.getOrElse(k, v) != v => s"$k: stored=${kv(k)} now=$v"
-        }
-        require(diffs.isEmpty,
-          s"committed assignment at $root does not match this export " +
-            s"(${diffs.mkString("; ")}) — delete the store or use a new root; " +
-            "silently reusing it would drop new ids / ignore changed params")
-      }
+      require(log.params.isDefined,
+        s"ShardStore at $root has a committed assignment but no pinned params.tsv; " +
+          "refusing to re-pin it — delete the store or use a new root")
+      pin(inputFingerprint(docs, idCol))
     }
     // every column is BIGINT: epochOrder casts the id to long
     val schema = StructType(Seq(idCol, "epoch_pos", "shard_id").map(StructField(_, LongType)))
-    spark.read.schema(schema).parquet(aDir.toString)
+    docs.sparkSession.read.schema(schema).parquet(s"$root/assignment")
   }
 
   /** One resumable export step: take up to `maxShards` pending shards
@@ -160,10 +151,7 @@ object ShardStore {
       maxPerShard: Long, idCol: String, maxShards: Int): (Manifest, Boolean) = {
     require(maxShards >= 1, s"maxShards must be >= 1, got $maxShards")
     val spark = docs.sparkSession
-    // a store written before _params.tsv existed pays one count job
-    val n = ManifestLog.readParams(Paths.get(root, "assignment", "_params.tsv"))
-      .flatMap(_.get("n")).map(_.toLong)
-      .getOrElse(assignment.count())
+    val n = ManifestLog(root).params.get("n").toLong // pinned by ensureAssignment
     val prev = lastManifest(root).getOrElse(Manifest(0L, Vector.empty))
     val done = prev.shards.map(_.shardId).toSet
 

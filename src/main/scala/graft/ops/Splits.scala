@@ -160,31 +160,15 @@ object Splits {
     * per epoch by changing the salt. The standard "shuffle with a seed"
     * of real data loaders, as a relational op.
     *
-    * Shape at 100 TB: NO single-partition global window — range-partition
-    * by the salted hash (concatenation of sorted ranges is globally
-    * sorted), sort within partitions, then zipWithIndex assigns
-    * contiguous ordinals with one small count job (the distributed
-    * dense-rank machinery of minhashSignaturesSql). Positions are
-    * independent of the partition count. Output: (idCol, epoch_pos). */
+    * Shape at 100 TB: NO single-partition global window — the
+    * [[Selection.rankBy]] range sort on (salted hash, id) and
+    * zipWithIndex. Positions are independent of the partition count;
+    * numPartitions = 0 uses the session parallelism — at 100 TB pass an
+    * explicit count sized to the input. Output: (idCol, epoch_pos). */
   def epochOrder(docs: DataFrame, salt: String = "epoch0",
-      idCol: String = "doc_id", numPartitions: Int = 0): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // positions are independent of the partition count (the ranges
-    // concatenate in sorted order regardless); numPartitions = 0 uses the
-    // session parallelism — at 100 TB pass an explicit count sized to the
-    // input (one core-count of partitions would make multi-GB sorts)
-    val parts =
-      if (numPartitions > 0) numPartitions
-      else math.max(spark.sparkContext.defaultParallelism, 1)
-    docs.select(col(idCol).cast("long").as("id"),
-        hashCol(docs, salt, idCol).bitwiseXOR(lit(Long.MinValue)).as("h"))
-      .repartitionByRange(parts, col("h"), col("id"))
-      .sortWithinPartitions(col("h"), col("id"))
-      .as[(Long, Long)].rdd.zipWithIndex()
-      .map { case ((id, _), pos) => (id, pos) }
-      .toDF(idCol, "epoch_pos")
-  }
+      idCol: String = "doc_id", numPartitions: Int = 0): DataFrame =
+    Selection.rankBy(docs, Seq(hashCol(docs, salt, idCol).bitwiseXOR(lit(Long.MinValue))),
+      Seq(true), idCol, numPartitions).withColumnRenamed("rank", "epoch_pos")
 
   /** Epoch-ordered SHARD assignment: cut the deterministic epoch order
     * into consecutive blocks of `maxPerShard` positions — the unit a

@@ -1,7 +1,5 @@
 package graft.ops
 
-import java.nio.file.{Files, Paths}
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DoubleType, IntegerType, StructField, StructType}
@@ -37,7 +35,7 @@ object VectorStore {
 
   private def log(root: String) = ManifestLog.Increments(root, "VectorStore", "vec_id")
 
-  private def hasCentroids(root: String) = Files.exists(Paths.get(root, "centroids"))
+  private def hasCentroids(root: String) = ManifestLog(root).published("centroids")
 
   /** Train centroids on `firstIncrement` (the [[Similarity.trainCentroids]]
     * deterministic quantizer: first-nCells seeds by vec_id, one Lloyd
@@ -49,7 +47,7 @@ object VectorStore {
     require(!hasCentroids(root),
       s"VectorStore at $root already exists — centroids train once; use append")
     // no centroids = nothing committed: (re)write the params of this create
-    ManifestLog.writeParams(Paths.get(root, "params.tsv"),
+    ManifestLog(root).writeParams(
       Seq("dim" -> dim, "nCells" -> nCells, "sampleSize" -> sampleSize))
     val centroids = Similarity.trainCentroids(firstIncrement, dim, nCells, sampleSize)
     val spark = firstIncrement.sparkSession
@@ -59,7 +57,7 @@ object VectorStore {
       StructField("centroid", ArrayType(DoubleType, containsNull = false), nullable = false)))
     ManifestLog(root).publish("centroids") { dir =>
       spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
-        .write.parquet(dir.toString)
+        .write.parquet(dir)
     }
     append(root, firstIncrement)
   }
@@ -79,7 +77,7 @@ object VectorStore {
     val cents = centroids(embeddings.sparkSession, root)
     log(root).append { dir =>
       Similarity.ivfAssign(embeddings, cents)
-        .write.parquet(dir.resolve("vectors").toString)
+        .write.parquet(s"$dir/vectors")
     }
   }
 
@@ -104,7 +102,7 @@ object VectorStore {
     log(root).compact { dir =>
       // storedVectors already excludes tombstoned ids — compaction is the
       // physical removal point for deletes
-      storedVectors(spark, root).write.parquet(dir.resolve("vectors").toString)
+      storedVectors(spark, root).write.parquet(s"$dir/vectors")
     }
 
   /** ANN top-k over the STORED corpus — identical neighbors and rounded

@@ -199,29 +199,6 @@ object ExtractJob {
     spark.createDataFrame(rows.asJava, schema)
   }
 
-  /** One-pass run metrics via `Dataset.observe` (the Observation API):
-    * the extraction WRITE and the run-level counter fold share a SINGLE
-    * pass — at 100 TB, [[lineage]]'s per-partition rows come from a
-    * groupBy over the extracted frame, but the run-level scalars
-    * (doc/fallback counts, bytes in) would otherwise cost either a
-    * second full scan or a cache of the whole corpus; `observe` folds
-    * them as the rows stream through the writer, for free. Returns the
-    * metric map after the write completes (`Observation.get` blocks on
-    * the action). Metric exprs must be aggregates the observation
-    * framework accepts — no distinct, no ordering dependence. */
-  def writeTextsObserved(extracted: Dataset[ExtractedText],
-      outDir: String): Map[String, Any] = {
-    val obs = org.apache.spark.sql.Observation("extract_run")
-    extracted.observe(obs,
-        count(lit(1)).as("doc_count"),
-        sum(when(col("usedFallback"), 1L).otherwise(0L)).as("fallback_count"),
-        sum(when(col("extractor") === "html", 1L).otherwise(0L)).as("html_count"),
-        sum(col("bytesIn")).as("bytes_in"),
-        sum(length(coalesce(col("text"), lit("")))).as("chars_out"))
-      .write.mode("overwrite").parquet(outDir)
-    obs.get
-  }
-
   /** Full extraction with the complete block/table/image trees (for
     * provenance, metrics, and table sinks). Narrow by default, like
     * [[extractTexts]]. */

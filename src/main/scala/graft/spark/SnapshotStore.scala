@@ -1,7 +1,6 @@
 package graft.spark
 
 import java.nio.charset.StandardCharsets.UTF_8
-import java.nio.file.Paths
 
 import scala.collection.mutable.ArrayBuffer
 
@@ -40,8 +39,8 @@ import graft.ops.ManifestLog
   *   - per-file stats are folded inside the write tasks ([[writeWithStats]],
   *     shared with [[compact]]).
   * Both folds publish manifest-scale rows through [[PartitionReports]].
-  * [[collectFileStats]] (a scan of written data) remains only for the
-  * backfill of legacy dirs that carry no stats ([[uncoveredDirs]]).
+  * [[collectFileStats]] (a scan of written data) remains only for a
+  * write task that writes several files.
   */
 object SnapshotStore {
 
@@ -87,15 +86,12 @@ object SnapshotStore {
     Snapshot(id, buckets.result(), dirs.result(), files.result())
   }
 
-  /** Atomic manifest commit: write tmp in the same directory, then rename.
-    * File stats are deduped by path — a repeated backfill of the same dir
-    * (e.g. a formerly-unnormalizable relative root) must not accumulate
-    * duplicate entries that pruneFiles would feed to the reader twice. */
+  /** Atomic manifest commit: write tmp in the same directory, then rename. */
   def commitManifest(root: String, s: Snapshot): Unit =
     log(root).commit(s.id, Vector(s"snapshot\t${s.id}") ++
       s.buckets.toVector.sorted.map(b => s"bucket\t$b") ++
       s.dataDirs.map(d => s"dir\t$d") ++
-      s.files.distinctBy(_.path).map(f =>
+      s.files.map(f =>
         s"file\t${f.path}\t${f.tsMin}\t${f.tsMax}\t${f.hostMin}\t${f.hostMax}"))
 
   /** The url host the write layout and the host stats key on. */
@@ -105,9 +101,9 @@ object SnapshotStore {
     * column-pruned scan of (warcTs, url) grouped by the physical file.
     * The collect is manifest-scale (one row per parquet file), the
     * bounded-collect pattern. Tab/newline are stripped from host bounds so
-    * the TSV manifest stays line-parseable. Used only to backfill dirs
-    * with no stats ([[uncoveredDirs]]); fresh writes fold their stats in
-    * the write tasks ([[writeWithStats]]). */
+    * the TSV manifest stays line-parseable. Used only when a write task
+    * wrote several files; otherwise the write tasks fold their stats
+    * ([[writeWithStats]]). */
   def collectFileStats(spark: SparkSession, dataDir: String): Vector[FileStats] = {
     val clean = (c: Column) => regexp_replace(c, "[\\t\\n\\r]", " ")
     spark.read.parquet(dataDir)
@@ -239,23 +235,20 @@ object SnapshotStore {
     else folded.toVector.map { case (p, r) => r.stats(files(Some(p)).head) }.sortBy(_.path)
   }
 
-  /** Committed data dirs with NO file-stats coverage (a legacy manifest,
-    * or one written by a partially-covering intermediate build). Stats
-    * paths are input_file_name() URIs (file:///...), dataDirs are plain
-    * paths — normalize before the containment check; and the dir prefix
-    * carries a trailing separator, or run-r10's files would mark sibling
-    * run-r1 as covered and its backfill would be skipped (silent row loss
-    * in every later ranged read). */
+  /** Committed data dirs with NO file-stats coverage: a run that wrote no
+    * rows, or a manifest whose file lines are missing. Stats paths are
+    * input_file_name() URIs (file:///...), dataDirs are plain paths —
+    * normalize before the containment check; and the dir prefix carries a
+    * trailing separator, or run-r10's files would mark sibling run-r1 as
+    * covered and a ranged read would skip its rows. */
   def uncoveredDirs(s: Snapshot): Vector[String] = {
     def normFile(p: String) = p.stripPrefix("file:").replaceAll("^/+", "/")
     // dirs may be RELATIVE (a relative store root): resolve to absolute
     // normalized paths — input_file_name() URIs are always absolute, so a
     // relative prefix never matches and every dir would read as uncovered
-    // on every run (duplicate stats entries + redundant re-scans, ADVICE r5)
-    def normDir(d: String) =
-      Paths.get(d.stripPrefix("file:")).toAbsolutePath.normalize.toString
+    // (ADVICE r5)
     s.dataDirs.filterNot { d =>
-      val prefix = normDir(d).stripSuffix("/") + "/"
+      val prefix = ManifestLog.absolute(d).stripSuffix("/") + "/"
       s.files.exists(f => normFile(f.path).startsWith(prefix))
     }
   }
@@ -274,12 +267,10 @@ object SnapshotStore {
   /** Ranged read over the committed state: prune data FILES from the
     * manifest stats, scan only the survivors, then apply the exact
     * predicate (the stats are a superset bound). Falls back to a full
-    * scan + filter when the manifest predates file stats entirely; a
-    * PARTIALLY-covered manifest (some dirs with no stats entries — the
-    * legacy/intermediate state run() repairs on its next commit) scans
-    * the uncovered dirs in full alongside the pruned files: a read-only
-    * consumer must see correct results BEFORE any repair commit happens,
-    * not silently lose the uncovered dirs' rows (ADVICE r5). */
+    * scan + filter when the manifest carries no file stats at all; a
+    * PARTIALLY-covered manifest (some dirs with no stats entries) scans
+    * the uncovered dirs in full alongside the pruned files, so a ranged
+    * read never silently loses the uncovered dirs' rows (ADVICE r5). */
   def readCommittedRange(spark: SparkSession, root: String,
       tsMin: Option[Long] = None, tsMax: Option[Long] = None,
       host: Option[String] = None, asOf: Option[Long] = None): Option[DataFrame] =
@@ -304,26 +295,14 @@ object SnapshotStore {
     * `clusterPartitions` > 0 caps the number of range-clustered files; 0
     * takes `spark.sql.shuffle.partitions`, and AQE does not coalesce the
     * `repartitionById` shuffle, so that count is not shrunk to a target
-    * file size. Returns the committed snapshot. */
+    * file size. Returns the committed snapshot; with nothing pending that
+    * is the previous one, and no Spark job runs. */
   def run(spark: SparkSession, pages: DataFrame, root: String, runId: String,
       nBuckets: Int = 16, maxBuckets: Int = Int.MaxValue,
-      clusterWrite: Boolean = true, clusterPartitions: Int = 0): Snapshot = {
+      clusterPartitions: Int = 0): Snapshot = {
     val prev = lastSnapshot(root).getOrElse(Snapshot(0L, Set.empty, Vector.empty))
     val pending = (0 until nBuckets).filterNot(prev.buckets).take(maxBuckets)
-    if (pending.isEmpty) {
-      // nothing to extract — but a FULLY-committed store can still carry a
-      // partially-covered manifest (legacy/intermediate builds); repair it
-      // here or ranged reads keep pruning the uncovered dirs' rows forever
-      // (the backfill below this guard would never be reached again). A
-      // dir whose run wrote no rows stays uncovered and adds no stats, so
-      // only a backfill that finds stats commits a new snapshot.
-      val backfill = uncoveredDirs(prev).flatMap(d => collectFileStats(spark, d))
-      if (backfill.isEmpty) return prev
-      val repaired = Snapshot(prev.id + 1, prev.buckets, prev.dataDirs,
-        (prev.files ++ backfill).distinctBy(_.path))
-      commitManifest(root, repaired)
-      return repaired
-    }
+    if (pending.isEmpty) return prev
 
     val withBucket = pages.withColumn("_bucket",
       pmod(xxhash64(col("url")), lit(nBuckets)).cast("int"))
@@ -342,20 +321,14 @@ object SnapshotStore {
     // [h, h]); the within-partition sort additionally clusters parquet
     // row groups for min/max skipping inside a file. The bounds come from
     // the page keys, not the parse (repartitionByRange would sample by
-    // running the whole extraction once more). clusterWrite=false keeps
-    // the caller's input layout (e.g. a crawl table pre-sorted by fetch
-    // time for ts-ranged reads). One partition needs no bounds, and no
-    // key pass runs.
-    val keyed =
-      if (!clusterWrite) extracted
-      else {
-        val n =
-          if (clusterPartitions > 0) clusterPartitions
-          else spark.conf.get("spark.sql.shuffle.partitions").toInt
-        val bounds = if (n == 1) Array.empty[Key] else rangeBounds(spark, selected, n)
-        extracted.repartitionById(bounds.length + 1, rangeId(bounds))
-          .sortWithinPartitions(col("_host"), col("warcTs"))
-      }
+    // running the whole extraction once more). One partition needs no
+    // bounds, and no key pass runs.
+    val n =
+      if (clusterPartitions > 0) clusterPartitions
+      else spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val bounds = if (n == 1) Array.empty[Key] else rangeBounds(spark, selected, n)
+    val keyed = extracted.repartitionById(bounds.length + 1, rangeId(bounds))
+      .sortWithinPartitions(col("_host"), col("warcTs"))
     val dataDir = s"$root/data/run-$runId"
     val written = writeWithStats(spark, keyed, dataDir)
 
@@ -366,16 +339,10 @@ object SnapshotStore {
     ExtractJob.lineageRows(spark, lineage.value, runId, snapId).coalesce(1)
       .write.mode("overwrite").parquet(s"$root/lineage/run-$runId")
 
-    // manifest column stats: new files always; prior snapshots' entries
-    // carry over untouched (files are immutable once committed). Any
-    // committed dir with NO stats coverage (a legacy manifest, or one
-    // written by a partially-covering intermediate build) is BACKFILLED
-    // here — committing partial coverage would make readCommittedRange
-    // prune away the uncovered dirs' rows silently (its full-scan
-    // fallback only fires when files is entirely empty).
-    val prevFiles = prev.files ++ uncoveredDirs(prev).flatMap(d => collectFileStats(spark, d))
+    // manifest column stats: prior snapshots' entries carry over
+    // untouched (files are immutable once committed), plus the new files
     val snap = Snapshot(snapId, prev.buckets ++ pending, prev.dataDirs :+ dataDir,
-      (prevFiles ++ written).distinctBy(_.path))
+      prev.files ++ written)
     commitManifest(root, snap)
     snap
   }
@@ -414,6 +381,6 @@ object SnapshotStore {
     def dirs(ids: Vector[Long]) = ids.flatMap(snapshotAt(root, _)).flatMap(_.dataDirs).toSet
     val dead = dirs(expire) -- dirs(keep)
     expire.foreach(log(root).remove)
-    dead.foreach(d => ManifestLog.deleteRecursively(Paths.get(d)))
+    dead.foreach(ManifestLog.deleteRecursively)
   }
 }

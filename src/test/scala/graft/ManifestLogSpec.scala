@@ -1,7 +1,7 @@
 package graft
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -41,8 +41,8 @@ class ManifestLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     xs.toDF("id")
   }
 
-  private def writeIds(xs: Seq[Long])(dir: Path): Unit =
-    ids(xs).write.parquet(dir.resolve("rows").toString)
+  private def writeIds(xs: Seq[Long])(dir: String): Unit =
+    ids(xs).write.parquet(s"$dir/rows")
 
   private def readIds(log: ManifestLog.Increments): Seq[Long] =
     log.read(spark, "rows").collect().map(_.getLong(0)).sorted.toSeq
@@ -69,7 +69,7 @@ class ManifestLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(readIds(log) == (1L to 6L))
     // the same for a tombstone increment
     ManifestLog(root).publish("del-3") { dir =>
-      ids(1L to 6L).write.parquet(dir.resolve("ids").toString)
+      ids(1L to 6L).write.parquet(s"$dir/ids")
     }
     assert(readIds(log) == (1L to 6L))
     import spark.implicits._
@@ -79,7 +79,7 @@ class ManifestLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     ManifestLog(root).publish("inc-4")(writeIds(Seq(99L)))
     assert(readIds(log) == Seq(1L, 2L, 3L, 4L, 6L))
     assert(log.compact(dir =>
-      log.read(spark, "rows").write.parquet(dir.resolve("rows").toString)) == 4L)
+      log.read(spark, "rows").write.parquet(s"$dir/rows")) == 4L)
     assert(readIds(log) == Seq(1L, 2L, 3L, 4L, 6L))
     assert(listing(root) == Set("inc-4") ++ (1 to 4).map(k => s"manifest-$k.tsv"))
     assert(text(root, "manifest-3.tsv") == "inc\t1\ninc\t2\ndel\t3\n")
@@ -191,9 +191,10 @@ class ManifestLogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(masked("manifest-1.tsv") == "manifest\t1\n" + (0 to 2).map(shard).mkString)
     assert(masked("manifest-2.tsv") == "manifest\t2\n" + (0 to 4).map(shard).mkString)
     val idHash = docs(0L until 50L).agg(bit_xor(xxhash64(col("doc_id")))).head().getLong(0)
-    assert(text(root, "assignment/_params.tsv") ==
+    assert(text(root, "params.tsv") ==
       s"salt\tepoch0\nmaxPerShard\t10\nidCol\tdoc_id\nn\t50\nidHash\t$idHash\n")
-    assert(listing(root) == Set("assignment", "data", "manifest-1.tsv", "manifest-2.tsv"))
+    assert(listing(root) ==
+      Set("params.tsv", "assignment", "data", "manifest-1.tsv", "manifest-2.tsv"))
     assert(listing(s"$root/data") == Set("unit-0-2", "unit-3-4"))
   }
 

@@ -578,16 +578,18 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(got == reference(corpus(n), 64L))
       assert(graft.ops.ShardStore.readCommitted(spark, sDir).get.count() == n)
     }
-    // a store committed before _params.tsv existed: n comes from the
-    // assignment itself, and the re-export commits the same manifest
+    // a committed assignment with no pinned params.tsv is refused, never
+    // re-pinned: a re-pin would accept any input and drop its new ids
     val oldDir = java.nio.file.Files.createTempDirectory("graft-shards-old").toString
     exported(corpus(128L), oldDir, 64L)
     import scala.jdk.CollectionConverters._
     java.nio.file.Files.list(java.nio.file.Paths.get(oldDir)).iterator().asScala
       .filter(_.getFileName.toString.startsWith("manifest-"))
       .foreach(java.nio.file.Files.delete(_))
-    java.nio.file.Files.delete(java.nio.file.Paths.get(oldDir, "assignment", "_params.tsv"))
-    assert(exported(corpus(128L), oldDir, 64L) == reference(corpus(128L), 64L))
+    java.nio.file.Files.delete(java.nio.file.Paths.get(oldDir, "params.tsv"))
+    val unpinned = intercept[IllegalArgumentException](exported(corpus(128L), oldDir, 64L))
+    assert(unpinned.getMessage.contains("no pinned params.tsv"), unpinned.getMessage)
+    assert(graft.ops.ShardStore.lastManifest(oldDir).isEmpty)
   }
 
   test("curation operators evaluate their input once: exportAll twice per row, dedupCorpus output never") {
@@ -2016,6 +2018,23 @@ class OpsSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(conf.getConf(org.apache.spark.sql.internal.SQLConf.ADAPTIVE_EXECUTION_ENABLED) == aqe0)
       assert(conf.getConf(org.apache.spark.sql.internal.SQLConf.SHUFFLE_PARTITIONS) == sp0)
     }
+  }
+
+  test("smartCoalesce: an unknown size keeps the partitioning; a known KB size coalesces") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    import graft.ops.CheckpointScratch
+    val schema = StructType(Seq(StructField("id", LongType)))
+    // uncached: no storage info, so materializedBytes is -1
+    val rows = spark.sparkContext.parallelize((0L until 64L).map(Row(_)), 8)
+    val uncached = spark.createDataFrame(rows, schema)
+    assert(CheckpointScratch.materializedBytes(uncached) == -1L)
+    assert(CheckpointScratch.smartCoalesce(uncached).rdd.getNumPartitions == 8)
+    // an eager checkpoint of the same rows is a few KB: one partition
+    val cp = CheckpointScratch.ckpt(uncached)
+    assert(CheckpointScratch.materializedBytes(cp) > 0L)
+    assert(cp.rdd.getNumPartitions == 1)
+    CheckpointScratch.drop(cp)
   }
 
   test("dedupClusters: the driver finish equals the pointer-jump loop on seeded random graphs") {

@@ -65,23 +65,6 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     shuffled.foreach { case (url, text) => assert(text == mapSide(url), url) }
   }
 
-  test("writeTextsObserved: one-pass observe metrics equal recomputed aggregates") {
-    import spark.implicits._
-    val out = java.nio.file.Files.createTempDirectory("graft-obs").toString + "/texts"
-    val extracted = ExtractJob.extractTexts(spark, PagesTable.pagesDF(spark, 60))
-    val m = ExtractJob.writeTextsObserved(extracted, out)
-    val ref = extracted.agg(
-      org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)),
-      org.apache.spark.sql.functions.sum(org.apache.spark.sql.functions.when(
-        $"usedFallback", 1L).otherwise(0L)),
-      org.apache.spark.sql.functions.sum($"bytesIn")).head()
-    assert(m("doc_count") == ref.getLong(0))
-    assert(m("fallback_count") == ref.getLong(1))
-    assert(m("bytes_in") == ref.getLong(2))
-    // and the write itself is complete: parquet rows = frame rows
-    assert(spark.read.parquet(out).count() == ref.getLong(0))
-  }
-
   test("provenance carries section labels forward (W1)") {
     import spark.implicits._
     val pages = PagesTable.pagesDF(spark, 60)
@@ -361,8 +344,13 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s1 = SnapshotStore.run(spark, empty, root, runId = "r1", nBuckets = 4)
     assert(s1.id == 1 && s1.buckets.size == 4 && s1.files.isEmpty)
     assert(SnapshotStore.readCommitted(spark, root).get.count() == 0L)
-    // the run wrote no rows, so its dir has no stats to backfill
-    assert(SnapshotStore.run(spark, empty, root, runId = "r2", nBuckets = 4).id == s1.id)
+    // nothing pending: the run returns the committed snapshot and submits
+    // no Spark job, though the run dir it holds has no file stats
+    assert(SnapshotStore.uncoveredDirs(s1) == s1.dataDirs)
+    val jobs = jobsOf {
+      assert(SnapshotStore.run(spark, empty, root, runId = "r2", nBuckets = 4).id == s1.id)
+    }
+    assert(jobs.isEmpty, jobs.mkString("\n"))
     assert(SnapshotStore.run(spark, empty, root, runId = "r3", nBuckets = 4).id == s1.id)
     assert(SnapshotStore.lastSnapshot(root).map(_.id) == Some(s1.id))
   }
@@ -408,13 +396,12 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     import spark.implicits._
     import org.apache.spark.sql.functions.input_file_name
     val root = java.nio.file.Files.createTempDirectory("graft-snap-stats").toString
-    // ts-clustered input (a crawl table sorted by fetch time): range-
-    // partition by warc_ts so each data file holds a narrow ts window;
-    // clusterWrite=false preserves this layout through the store write
+    // one host: the (host, warcTs) range write splits its files by
+    // warcTs, so each data file holds a narrow ts window
     val pages = PagesTable.pagesDF(spark, 200)
-      .repartitionByRange(4, $"warc_ts")
+      .withColumn("url", regexp_replace($"url", "^https://[^/]+/", "https://one.example/"))
     val s = SnapshotStore.run(spark, pages, root, runId = "r1", nBuckets = 1,
-      clusterWrite = false)
+      clusterPartitions = 4)
     assert(s.files.nonEmpty, "manifest must carry per-file stats")
     // every committed parquet file has a stats entry with a sane range
     s.files.foreach(f => assert(f.tsMin <= f.tsMax && f.hostMin <= f.hostMax))
@@ -451,20 +438,20 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fallback.select($"url").as[String].collect().toSet == expect)
   }
 
-  test("manifest coverage: sibling dir prefixes never mask a missing backfill; partial coverage repaired on next run") {
+  test("manifest coverage: sibling dir prefixes never mask an uncovered dir; nothing is repaired, ranged reads stay complete") {
     import graft.spark.SnapshotStore.{FileStats, Snapshot}
     // run-r10's files must NOT cover run-r1 (bare startsWith would match)
     val s = Snapshot(1L, Set(0), Vector("/t/data/run-r1", "/t/data/run-r10"),
       Vector(FileStats("file:///t/data/run-r10/part-0.parquet", 1L, 2L, "a", "b")))
     assert(SnapshotStore.uncoveredDirs(s) == Vector("/t/data/run-r1"))
-    // covered via URI-form paths; legacy (no stats at all) → all uncovered
+    // covered via URI-form paths; no stats at all → all uncovered
     val covered = s.copy(files = s.files :+
       FileStats("file:///t/data/run-r1/part-0.parquet", 1L, 2L, "a", "b"))
     assert(SnapshotStore.uncoveredDirs(covered).isEmpty)
     assert(SnapshotStore.uncoveredDirs(s.copy(files = Vector.empty)) == s.dataDirs)
-    // end-to-end: a PARTIAL manifest (stats stripped for run 1's dir) is
-    // repaired by the next run() — afterwards a ranged read over the old
-    // dir's rows is complete again
+    // end-to-end: a PARTIAL manifest (stats stripped for run 1's dir)
+    // stays partial — a run commits only what it wrote — and a ranged
+    // read still returns every row by scanning the uncovered dir in full
     import scala.jdk.CollectionConverters._
     val root = java.nio.file.Files.createTempDirectory("graft-snap-cover").toString
     val pages = PagesTable.pagesDF(spark, 60)
@@ -474,26 +461,20 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filterNot(_.startsWith("file\t")).mkString("\n")
     java.nio.file.Files.write(manifest, partial.getBytes)
     val s2 = SnapshotStore.run(spark, pages, root, runId = "r2", nBuckets = 4)
-    assert(SnapshotStore.uncoveredDirs(s2).isEmpty, "backfill must cover the stripped dir")
+    assert(SnapshotStore.uncoveredDirs(s2) == Vector(s"$root/data/run-r1"))
+    assert(s2.files.nonEmpty && s2.files.forall(_.path.contains("/data/run-r2/")))
     val all = SnapshotStore.readCommitted(spark, root).get.count()
-    val ranged = SnapshotStore.readCommittedRange(spark, root,
+    assert(all == 60L)
+    def ranged() = SnapshotStore.readCommittedRange(spark, root,
       tsMin = Some(Long.MinValue), tsMax = Some(Long.MaxValue)).get.count()
-    assert(ranged == all, s"ranged read lost rows: $ranged != $all")
-    // FULLY-committed store: strip stats again — a no-pending run() must
-    // still repair the manifest (it used to early-return before the
-    // backfill, leaving ranged reads lossy forever)
-    val manifest2 = java.nio.file.Paths.get(root).resolve(s"snapshot-${s2.id}.tsv")
-    val partial2 = java.nio.file.Files.readAllLines(manifest2).asScala
-      .filterNot(_.startsWith("file\t")).mkString("\n")
-    java.nio.file.Files.write(manifest2, partial2.getBytes)
-    val s3 = SnapshotStore.run(spark, pages, root, runId = "r3", nBuckets = 4)
-    assert(s3.id == s2.id + 1 && SnapshotStore.uncoveredDirs(s3).isEmpty,
-      "no-pending run must commit a repaired manifest")
-    val ranged2 = SnapshotStore.readCommittedRange(spark, root,
-      tsMin = Some(Long.MinValue), tsMax = Some(Long.MaxValue)).get.count()
-    assert(ranged2 == all, s"repaired ranged read lost rows: $ranged2 != $all")
-    // idempotent: a further run with full coverage commits nothing new
-    assert(SnapshotStore.run(spark, pages, root, runId = "r4", nBuckets = 4).id == s3.id)
+    assert(ranged() == all, s"ranged read lost rows: ${ranged()} != $all")
+    // a no-pending run commits nothing and submits no Spark job
+    val jobs = jobsOf {
+      assert(SnapshotStore.run(spark, pages, root, runId = "r3", nBuckets = 4) == s2)
+    }
+    assert(jobs.isEmpty, jobs.mkString("\n"))
+    assert(SnapshotStore.lastSnapshot(root) == Some(s2))
+    assert(ranged() == all)
   }
 
   test("clustered write layout: host-ranged read on STORE-written data opens a strict subset of files") {
@@ -577,9 +558,7 @@ class SparkPipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s1 = SnapshotStore.run(spark, pages, root, runId = "r1", nBuckets = 8, maxBuckets = 3,
       clusterPartitions = 3)
     val s2 = SnapshotStore.run(spark, pages, root, runId = "r2", nBuckets = 8)
-    val rootW = java.nio.file.Files.createTempDirectory("graft-snap-fold-w").toString
-    val w = SnapshotStore.run(spark, pages, rootW, runId = "w1", nBuckets = 2, clusterWrite = false)
-    for ((s, root, runId) <- Seq((s1, root, "r1"), (s2, root, "r2"), (w, rootW, "w1"))) {
+    for ((s, runId) <- Seq((s1, "r1"), (s2, "r2"))) {
       val (committed, rescan) = lineagePair(root, runId, s.id)
       assert(committed._2.nonEmpty && committed == rescan, s"lineage of $runId")
       val dir = s"$root/data/run-$runId"
