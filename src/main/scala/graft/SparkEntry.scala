@@ -961,8 +961,7 @@ object SparkEntry {
   /** Multimodal: EVERY asset family is a real byte stream decoded by a
     * real JDK codec — PNG rasters (pixel-grid checksum), RIFF/WAVE audio
     * (streamed PCM checksum), MJPEG-in-AVI video (per-frame JPEG decode,
-    * checksum chained across frames). The GRFT fake format survives only
-    * as decodeStub's fallback for genuinely unshipped codecs. */
+    * checksum chained across frames). */
   private def xMultimodal(s: SparkSession, dir: String): DataFrame = {
     // decodeBatches inherits the input partitioning, and the fixture is
     // ONE parquet file — without a repartition the whole decode (now real

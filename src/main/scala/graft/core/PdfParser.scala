@@ -42,9 +42,7 @@ object PdfParser {
   final case class PlacedImage(x0: Double, y0: Double, x1: Double, y1: Double,
       width: Int, height: Int, colorSpace: String, bytes: Array[Byte])
   final case class PdfPage(num: Int, width: Double, height: Double,
-      runs: Vector[TextRun], images: Vector[PlacedImage]) {
-    def imageCount: Int = images.length
-  }
+      runs: Vector[TextRun], images: Vector[PlacedImage])
 
   /** Style flags from the PostScript font name — the reconstruction of the
     * reference's decode_font_flags surface (text_extractor_all.py:55-62;

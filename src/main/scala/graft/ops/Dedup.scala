@@ -459,36 +459,6 @@ object Dedup {
       .select(col("id_a"), col("id_b"), col("hamming").cast("long").as("hamming"))
   }
 
-  /** N-gram (word k-shingle) Jaccard near-dup pairs with candidates
-    * bounded by a blocking column (e.g. source bucket) — the composable
-    * exact variant. O(bucket²) candidates: use ONLY when the blocking
-    * column bounds bucket sizes; [[jaccardPrefixPairs]] is the scale path.
-    *
-    * Verify uses the minhashLsh discipline (VERDICT r5 #6 — this was the
-    * last text-carrying pair verify): shingle-hash each doc ONCE into a
-    * checkpointed distinct `Array[Long]`, self-join (blk, id) only, and
-    * rejoin the hash arrays per candidate side in [[verifyPairs]]. The
-    * win over the old form is WHAT crosses the shuffle
-    * and the removal of the per-pair UDF re-shingling — NOT the fan-out:
-    * a doc in P candidate pairs still ships its shingle-hash array P
-    * times (~8 B/shingle, roughly text-sized at k = 3), where it used to
-    * ship raw text P times and re-shingle per pair. The adaptive probe
-    * ([[jaccardAdaptivePairs]]) bounds P before this path is entered.
-    * Results are identical to the scalar [[jaccard]] (same shingleHashes
-    * sets). */
-  def ngramJaccardPairs(docs: DataFrame, blockCol: String, threshold: Double, k: Int = 3,
-      idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val base = docs.select(col(blockCol).as("blk"), col(idCol).as("id"),
-        shingleSet(col(textCol), k).as("shs"))
-      .transform(CheckpointScratch.ckpt)
-    val slim = base.select(col("blk"), col("id"))
-    val cands = slim.select(col("blk"), col("id").as("id_a"))
-      .join(slim.select(col("blk"), col("id").as("id_b")), Seq("blk"))
-      .filter(col("id_a") < col("id_b"))
-      .select(col("id_a"), col("id_b"))
-    verifyPairs(cands, base, base, "shs", threshold)
-  }
-
   /** Resolve near-duplicate PAIRS into clusters — the step between pair
     * detection and "keep one document per near-dup group": every doc gets
     * the smallest doc id reachable through the pair graph (connected
@@ -804,11 +774,6 @@ object Dedup {
       expectedItems: Long = 0L, bitsPerItem: Int = 10): DataFrame = {
     val spark = seen.sparkSession
     graft.functions.functions.register(spark)
-    // under foreachBatch the batch frame belongs to the stream's CLONED
-    // session, whose function registry was snapshotted at stream start —
-    // register there too or graft_might_contain fails to resolve
-    if (batch.sparkSession ne spark)
-      graft.functions.functions.register(batch.sparkSession)
     // seen-side cost: up to three COLUMN-PRUNED scans (count — skipped when
     // expectedItems is given — bloom build, anti-join verify); the batch
     // side is tagged ONCE and checkpointed so derived upstream plans never

@@ -45,11 +45,6 @@ object Features {
       .agg(sum(col("sg")).as("weight"))
   }
 
-  /** Drop exact-cancellation rows (weight 0) — optional, callers that
-    * feed a dot product can keep them harmlessly. */
-  def nonZero(features: DataFrame): DataFrame =
-    features.filter(col("weight") =!= 0L)
-
   /** Brute-force cosine top-k over hashed-feature vectors — TEXT
     * similarity search with no embedding model: documents become
     * D-dimensional signed-TF vectors ([[hashFeatures]]) and similarity

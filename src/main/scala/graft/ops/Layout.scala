@@ -1,11 +1,11 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** Multi-dimensional DATA LAYOUT — Z-order (Morton) clustering, the
+/** Multi-dimensional DATA LAYOUT — the Z-order (Morton) key of the
   * Iceberg `rewrite_data_files(strategy => 'sort', sort_order =>
-  * zorder(...))` feature re-expressed as a Spark write layout.
+  * zorder(...))` feature, as a Spark column.
   *
   * Why it matters at 100 TB: a crawl table is range-read along MORE
   * THAN ONE axis (by host for re-crawl/dedup joins, by warc_ts for
@@ -16,12 +16,7 @@ import org.apache.spark.sql.functions._
   * (x, y) space, so per-file min/max stats (parquet footers, the
   * SnapshotStore manifest, an Iceberg manifest) prune range reads on
   * EITHER dimension to ~√F of F files. The interleave is the native
-  * codegen'd [[graft.functions.ZValue]].
-  *
-  * The clustering itself is declarative: repartitionByRange on the
-  * z-value (sampled range exchange — skew in (x, y) density becomes
-  * uneven rectangle sizes, never a hot partition) + an in-partition
-  * sort, so the write needs no custom committer. */
+  * codegen'd [[graft.functions.ZValue]]. */
 object Layout {
 
   /** The z-value column for two non-negative dimension keys, low `bits`
@@ -33,17 +28,5 @@ object Layout {
       .foreach(graft.functions.functions.register)
     graft.functions.functions.graft_zvalue(
       x.cast("long"), y.cast("long"), lit(bits))
-  }
-
-  /** Cluster `df` for writing: range-partition + sort by the z-value of
-    * (xC, yC). Every output partition (→ data file) then holds a
-    * contiguous z-range = an O(1)-aspect rectangle family in (x, y). */
-  def zCluster(df: DataFrame, xC: Column, yC: Column, bits: Int,
-      numPartitions: Int): DataFrame = {
-    require(numPartitions >= 1, s"numPartitions must be >= 1, got $numPartitions")
-    val withZ = df.withColumn("__zv", zValue(xC, yC, bits))
-    withZ.repartitionByRange(numPartitions, col("__zv"))
-      .sortWithinPartitions(col("__zv"))
-      .drop("__zv")
   }
 }

@@ -4,11 +4,9 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Multimodal-column plumbing: image/audio/video as opaque `binary`
-  * columns with typed metadata, batch-shaped decode / feature-extract /
-  * frame-sample transforms.
+  * columns with typed metadata, a row-wise decode and a resize plan.
   *
-  * The Spark-side plumbing (schema, partitioning, batch shape — the
-  * mapInPandas analogue done with typed mapPartitions) is REAL and tested.
+  * The Spark-side plumbing (schema, a typed narrow map) is REAL and tested.
   * The codec is REAL wherever the JDK ships one, offline-safe:
   *  - raster images (PNG/BMP/GIF via `javax.imageio`): [[decodeImage]]
   *    fully decodes the pixel grid and checksums it, so the metadata
@@ -19,10 +17,8 @@ import org.apache.spark.sql.functions._
   *  - video (MJPEG-in-AVI via a RIFF chunk walk + per-frame ImageIO JPEG
   *    decode): [[decodeVideo]] decodes EVERY frame's pixel grid and
   *    chains one checksum across them.
-  * [[decodeStub]]'s deterministic GRFT fake format remains only as the
-  * fallback for payloads outside every JDK-decodable container class
-  * (e.g. codecs this container genuinely does not ship, like H.264);
-  * swap that one function for a real binding and nothing else changes.
+  * A payload outside every JDK-decodable container class (e.g. H.264)
+  * comes back as format "unknown", `valid = false`.
   */
 object Multimodal {
 
@@ -42,18 +38,6 @@ object Multimodal {
       valid: Boolean)
 
   final case class AssetRow(assetId: Long, payload: Array[Byte])
-
-  /** Fake asset header: "GRFT" + format byte + w:int + h:int + frames:int,
-    * then payload. FixtureGen for assets. */
-  def fakeAsset(id: Long, format: String, w: Int, h: Int, frames: Int): Array[Byte] = {
-    val bb = java.nio.ByteBuffer.allocate(17 + w * h / 64)
-    bb.put("GRFT".getBytes)
-    bb.put((format match { case "img" => 1; case "aud" => 2; case _ => 3 }).toByte)
-    bb.putInt(w); bb.putInt(h); bb.putInt(frames)
-    var i = 0
-    while (bb.hasRemaining) { bb.put((Dedup.mix64(id ^ i.toLong) & 0xFF).toByte); i += 1 }
-    bb.array()
-  }
 
   /** Real raster decode via JDK ImageIO (PNG/BMP/GIF). Returns None when
     * the payload's magic is not a supported raster format. The checksum is
@@ -99,8 +83,8 @@ object Multimodal {
       } finally iis.close()
     } catch {
       // a payload that SNIFFED as raster but throws mid-decode is corrupt
-      // raster, not "unknown": falling through to decodeStub here reported
-      // fmt "unknown" while the no-reader/bad-dims paths reported the
+      // raster, not "unknown": falling through to the unknown result here
+      // reported fmt "unknown" while the no-reader/bad-dims paths reported the
       // sniffed fmt with valid=false — same failure class, two shapes
       case _: Exception => invalid
     }
@@ -423,58 +407,22 @@ object Multimodal {
   }
 
   /** Codec dispatch: real raster decode, then real WAV decode, then real
-    * MJPEG/AVI decode; the GRFT fake-format fallback only remains for
-    * payloads outside every JDK-decodable container class. */
+    * MJPEG/AVI decode; any other payload is format "unknown", invalid. */
   def decode(assetId: Long, payload: Array[Byte]): AssetMeta =
     decodeImage(assetId, payload)
       .orElse(decodeAudio(assetId, payload))
       .orElse(decodeVideo(assetId, payload))
-      .getOrElse(decodeStub(assetId, payload))
+      .getOrElse(AssetMeta(assetId, "unknown", 0, 0, 0,
+        if (payload == null) 0L else payload.length.toLong, 0L, valid = false))
 
-  /** Deterministic stub decode of the GRFT fake header format — the
-    * declared audio/video stand-in (no A/V codec libs in this container). */
-  def decodeStub(assetId: Long, payload: Array[Byte]): AssetMeta = {
-    if (payload == null || payload.length < 17 ||
-        payload(0) != 'G' || payload(1) != 'R' || payload(2) != 'F' || payload(3) != 'T')
-      return AssetMeta(assetId, "unknown", 0, 0, 0,
-        if (payload == null) 0L else payload.length.toLong, 0L, valid = false)
-    val bb = java.nio.ByteBuffer.wrap(payload)
-    bb.position(4)
-    val fmt = bb.get() match { case 1 => "img"; case 2 => "aud"; case _ => "vid" }
-    val w = bb.getInt; val h = bb.getInt; val fr = bb.getInt
-    var ck = 0xcbf29ce484222325L
-    var i = 17
-    while (i < payload.length) { ck = (ck ^ payload(i)) * 0x100000001b3L; i += 1 }
-    AssetMeta(assetId, fmt, w, h, fr, payload.length.toLong, ck, valid = true)
-  }
-
-  /** Batch-shaped decode: mapPartitions in fixed-size batches (the
-    * vectorized-UDF shape — a real codec amortizes init per batch, exactly
-    * like mapInPandas). Narrow: no shuffle. */
-  def decodeBatches(spark: SparkSession, assets: DataFrame, batchSize: Int = 64): Dataset[AssetMeta] = {
+  /** Row-wise decode of an (assetId, payload) frame. Narrow: no shuffle. */
+  def decodeBatches(spark: SparkSession, assets: DataFrame): Dataset[AssetMeta] = {
     import spark.implicits._
     assets.select(col("assetId"), col("payload")).as[AssetRow]
-      .mapPartitions { it =>
-        it.grouped(batchSize).flatMap { batch =>
-          // per-batch codec init would go here
-          batch.iterator.map(r => decode(r.assetId, r.payload))
-        }
-      }
+      .map(r => decode(r.assetId, r.payload))
   }
 
-  /** Frame sampling for video-like assets: every nth frame index, emitted
-    * as (assetId, frameIdx) rows — the downstream shape for per-frame
-    * feature extraction. */
-  def sampleFrames(meta: DataFrame, everyNth: Int): DataFrame =
-    // nFrames >= 1: a VALID zero-frame video (headers-only AVI) must emit
-    // nothing — greatest(nFrames-1, 0) alone would fabricate a phantom
-    // frame 0 for an asset that has no frames (review r6)
-    meta.filter(col("format").isin("vid", "avi") && col("valid") && col("nFrames") >= 1)
-      .withColumn("frameIdx",
-        explode(sequence(lit(0), greatest(col("nFrames") - 1, lit(0)), lit(everyNth))))
-      .select(col("assetId").as("asset_id"), col("frameIdx").cast("long").as("frame_idx"))
-
-  /** Resize plan (no pixels in the stub): target dims preserving aspect. */
+  /** Resize plan: target dims preserving aspect (no pixels are resampled). */
   def resizePlan(meta: DataFrame, maxSide: Int): DataFrame =
     meta.filter(col("valid"))
       .withColumn("scale",

@@ -214,12 +214,4 @@ object ShardStore {
       units.map(u => spark.read.json(u))
         .reduce(_.unionByName(_, allowMissingColumns = true))
     }
-
-  /** The committed manifest as a DataFrame (the loader's index). */
-  def manifestDF(spark: SparkSession, root: String): DataFrame = {
-    import spark.implicits._
-    lastManifest(root).getOrElse(Manifest(0L, Vector.empty))
-      .shards.map(s => (s.shardId, s.nDocs, s.posMin, s.posMax, s.path))
-      .toDF("shard_id", "n_docs", "pos_min", "pos_max", "path")
-  }
 }

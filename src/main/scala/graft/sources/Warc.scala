@@ -443,7 +443,7 @@ object Warc {
   // ---------------------------------------------------------------------
 
   /** The file rule every WARC reader applies to every listed file
-    * ([[readPages]], `format("warc")` and its stream): only these
+    * ([[readPages]] and `format("warc")`): only these
     * suffixes are read, so sidecars (`_SUCCESS`, `.crc`, a `.bak` copy)
     * never become input and never ingest a url twice. */
   private val Suffixes = Seq(".warc", ".warc.gz", ".wet.gz")

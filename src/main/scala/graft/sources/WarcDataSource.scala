@@ -69,9 +69,8 @@ object WarcDataSource {
     * under `path` (a file, a directory, or a comma-less glob), sorted —
     * driver-side metadata only, content untouched. Below the roots, hidden
     * names are skipped at every level ([[Warc.isVisibleName]]), as the
-    * `binaryFile` listing of `readPages` skips them. The batch scan and
-    * the stream's offsets both read it, so a sidecar is never a
-    * partition. */
+    * `binaryFile` listing of `readPages` skips them. The scan plans its
+    * partitions from it, so a sidecar is never a partition. */
   private[sources] def listFiles(path: String): Seq[String] = {
     val p = new Path(path)
     val fs = p.getFileSystem(SparkSession.active.sparkContext.hadoopConfiguration)
@@ -99,7 +98,7 @@ private[sources] class WarcTable(properties: Map[String, String])
   override def name(): String = s"warc:$path"
   override def schema(): StructType = WarcDataSource.Schema
   override def capabilities(): util.Set[TableCapability] =
-    util.EnumSet.of(TableCapability.BATCH_READ, TableCapability.MICRO_BATCH_READ)
+    util.EnumSet.of(TableCapability.BATCH_READ)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     new WarcScanBuilder(path)
@@ -145,13 +144,6 @@ private[sources] class WarcScan(path: String, required: StructType)
   override def planInputPartitions(): Array[InputPartition] =
     WarcDataSource.listFiles(path).map(f => WarcFilePartition(f): InputPartition)
       .toArray
-
-  /** Streaming read path (`spark.readStream.format("warc")`): the
-    * growing-directory micro-batch source — column pruning applies to
-    * the stream exactly as to the batch scan. */
-  override def toMicroBatchStream(checkpointLocation: String)
-      : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-    new WarcMicroBatchStream(path, required.fieldNames)
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val conf = new SerializableConfiguration(

@@ -320,7 +320,7 @@ class CoreExtractionSpec extends AnyFunSuite {
       Vector("BT /F1 12 Tf 50 600 Td (text next to an image) Tj ET"),
       compress = false, imagePages = Set(0))
     val pages = PdfParser.parse(withImg)
-    assert(pages.head.imageCount == 1)
+    assert(pages.head.images.length == 1)
     val r = PdfLayout.layout(pages)
     assert(r.images.length == 1 && r.images.head.page == 1)
     val im = r.images.head

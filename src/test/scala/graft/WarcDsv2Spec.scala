@@ -53,8 +53,7 @@ class WarcDsv2Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(v2.size == 12 && v2 === key(inMemory))
   }
 
-  test("sidecars are never input: readPages, format and readStream read a.warc.gz once") {
-    import org.apache.spark.sql.streaming.Trigger
+  test("sidecars are never input: readPages and format read a.warc.gz once") {
     // every sidecar holds a full copy of the WARC bytes, so reading any of
     // them would return each url twice
     val d = Files.createTempDirectory("graft-warc-sidecars")
@@ -66,11 +65,6 @@ class WarcDsv2Spec extends AnyFunSuite with BeforeAndAfterAll {
       df.select("url").collect().map(_.getString(0)).toSeq.sorted
     assert(urls(Warc.readPages(spark, d.toString)) === want, "readPages")
     assert(urls(spark.read.format("warc").load(d.toString)) === want, "format(\"warc\")")
-    val q = spark.readStream.format("warc").load(d.toString).select("url")
-      .writeStream.format("memory").queryName("warc_sidecars")
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    assert(urls(spark.table("warc_sidecars")) === want, "readStream.format(\"warc\")")
   }
 
   test("hidden names are skipped at every level: readPages and format(\"warc\") agree") {
@@ -131,51 +125,9 @@ class WarcDsv2Spec extends AnyFunSuite with BeforeAndAfterAll {
     assert(c === 12L)
   }
 
-  test("readStream.format(\"warc\"): new files per batch, exactly once, checkpoint resume") {
-    import org.apache.spark.sql.streaming.Trigger
-    val d = Files.createTempDirectory("graft-warc-stream")
-    val base = Files.createTempDirectory("graft-warc-stream-out")
-    val ckpt = s"$base/ckpt"; val out = s"$base/out"
-    Files.write(d.resolve("a.warc.gz"), Warc.writeWarcGz((0 until 4).map(rec)))
-    def run(): Unit = {
-      val q = spark.readStream.format("warc").load(d.toString)
-        .select(col("url"), col("rec_idx"))
-        .writeStream.format("parquet")
-        .option("path", out).option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    run()
-    assert(spark.read.parquet(out).count() === 4L)
-    // second file lands; a fresh run from the SAME checkpoint appends
-    // ONLY the new file's records (file-granular exactly-once resume)
-    Files.write(d.resolve("b.warc.gz"), Warc.writeWarcGz((4 until 9).map(rec)))
-    run()
-    val got = spark.read.parquet(out).collect().map(_.getString(0))
-    assert(got.length === 9 && got.toSet ===
-      (0 until 9).map(i => s"https://h${i % 3}.example.com/p$i").toSet,
-      got.mkString(","))
-    // third batch: THIS restart deserializes a committed MULTI-file offset
-    // (a + b) from the line-based OffsetSeqLog — the newline-joined offset
-    // serialization corrupted exactly this step (ADVICE r8 high): the
-    // checkpoint line count no longer matched the source count on resume
-    Files.write(d.resolve("c.warc.gz"), Warc.writeWarcGz((9 until 11).map(rec)))
-    run()
-    val got3 = spark.read.parquet(out).collect().map(_.getString(0))
-    assert(got3.length === 11 && got3.toSet ===
-      (0 until 11).map(i => s"https://h${i % 3}.example.com/p$i").toSet,
-      got3.mkString(","))
-  }
-
-  test("WarcFilesOffset json is single-line and round-trips multi-file sets") {
-    // paths may hold a quote, a backslash or a newline: each stays escaped
-    val off = graft.sources.WarcFilesOffset(Set("/x/a.warc.gz", "/x/b\"quoted\".warc.gz",
-      "/y/c.wet.gz", "/x/back\\slash.warc.gz", "/x/new\nline.warc.gz", "/x/all\"\\\n.wet.gz"))
-    val j = off.json()
-    assert(!j.contains("\n"), s"offset json must be one line: $j")
-    assert(graft.sources.WarcFilesOffset.fromJson(j) === off)
-    val none = graft.sources.WarcFilesOffset(Set.empty)
-    assert(graft.sources.WarcFilesOffset.fromJson(none.json()) === none)
-    assert(graft.sources.WarcFilesOffset.fromJson("") === none)
+  test("readStream.format(\"warc\") is refused: the source reads batches only") {
+    val e = intercept[UnsupportedOperationException](
+      spark.readStream.format("warc").load(dir.toString))
+    assert(e.getMessage.contains("does not support streamed reading"), e.getMessage)
   }
 }
